@@ -17,6 +17,29 @@ Spark has no native ANN; the engine provides:
   the index written out partitioned by ``cluster_id``, probing prunes
   at the parquet-partition level.
 
+Quantized probe family — one kernel, three persisted index kinds.
+``sq8_topk``, ``pq_topk`` and ``ivfpq_topk`` are one call each into
+``_probe_codes``: collect the query block once (NULL / zero-norm rows
+and an empty-built index give the contract schema with no rows), scan
+the codes table (``_codes_df``: build + appends + streamed epochs) with
+``mapInPandas`` through ``_PartitionTopK``, keep the global top
+``k*refine`` per query, then ``_exact_rerank`` against the
+full-precision vectors when given (``quantized_topk``, the expression
+arm, ends in the same re-rank). A kind is a ``_Codec`` of four parts:
+
+* artifact load — ``_sq8_load`` (per-dim stats), ``_pq_load``
+  (codebooks), ``_ivfpq_load`` (coarse book, codebooks, OPQ rotation);
+* query transform — ``_sq8_prepare`` (linear-form weights),
+  ``_pq_prepare`` / ``_ivfpq_prepare`` (unit queries -> ADC lookup
+  tables; ivfpq also routes to its ``nprobe`` clusters);
+* partition prune — ``_ivfpq_prune`` (``cluster_id`` partition filter;
+  the flat kinds scan everything);
+* per-batch score matrix — ``_sq8_scores``, ``_pq_scores``,
+  ``_ivfpq_scores`` (batch x query; non-finite = not a candidate).
+
+Serving code picks a kind through ``_serving_kind`` (probe + append);
+``build_ann_index`` is the build-side twin.
+
 Live pgvector stays external per the scope decision, but the serving
 path itself is in-engine: ``plans/rag.py retrieve_tiered`` /
 ``retrieve_tiered_batch`` route through the persisted SQ8 / IVFPQ
@@ -30,6 +53,7 @@ from __future__ import annotations
 
 import math
 import random
+from typing import Callable, NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -1085,13 +1109,13 @@ def quantized_topk(
     stats = quantization_stats(vectors, vec_col)
     codes = quantize_int8(vectors, stats, vec_col, id_col)
     recon = dequantize(F.col("codes"), F.col("__mn"), F.col("__mx"))
-    qv = _as_double(query_vec_col)
     scored = (
         codes.crossJoin(F.broadcast(stats))
         .crossJoin(
             F.broadcast(
                 queries.select(
-                    F.col(query_id_col).alias("query_id"), qv.alias("__q")
+                    F.col(query_id_col).alias("query_id"),
+                    _as_double(query_vec_col).alias("__q"),
                 )
             )
         )
@@ -1105,47 +1129,79 @@ def quantized_topk(
         # non-finite scores) agree on degenerate inputs
         .where(F.col("__approx").isNotNull())
     )
+    return _exact_rerank(
+        _top_per_query(scored, "__approx", id_col, k * refine),
+        vectors, queries, k, "approx_score",
+        vec_col, id_col, query_vec_col, query_id_col, round_to,
+    )
+
+
+def _top_per_query(
+    df: DataFrame, score_col: str, id_col: str, n: int
+) -> DataFrame:
+    """The top ``n`` rows per ``query_id`` by (score DESC, id ASC) — a
+    total order, so the cut is deterministic under score ties."""
     w = Window.partitionBy("query_id").orderBy(
-        F.desc("__approx"), F.col(id_col)
-    )
-    cands = (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k * refine)
-        .drop("__rn")
-    )
-    # broadcast the k*refine-row candidate set so the full-precision
-    # table streams map-side through the re-rank (see sq8_topk)
-    exact = F.broadcast(cands).join(
-        vectors.select(F.col(id_col), _as_double(vec_col).alias("__v")),
-        id_col,
-    ).join(
-        F.broadcast(
-            queries.select(
-                F.col(query_id_col).alias("query_id"), qv.alias("__q2")
-            )
-        ),
-        "query_id",
-    )
-    # rank and emit from ONE __score_raw column (the d-length HOF fold
-    # is expensive — don't evaluate it twice per candidate row)
-    score = F.col("__score_raw")
-    approx = F.col("__approx")
-    if round_to is not None:
-        score = F.round(score, round_to)
-        approx = F.round(approx, round_to)
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.desc(F.col("__score_raw")), F.col(id_col)
+        F.desc(score_col), F.asc(id_col)
     )
     return (
-        exact.withColumn("__score_raw", cosine(F.col("__v"), F.col("__q2")))
-        .withColumn("__rk", F.row_number().over(w2))
-        .where(F.col("__rk") <= k)
-        .select(
-            "query_id",
+        df.withColumn("__rn", F.row_number().over(w))
+        .where(F.col("__rn") <= n)
+        .drop("__rn")
+    )
+
+
+def _rounded(col: str, round_to: int | None) -> Column:
+    return F.col(col) if round_to is None else F.round(F.col(col), round_to)
+
+
+def _exact_rerank(
+    cands: DataFrame,
+    vectors: DataFrame,
+    queries: DataFrame,
+    k: int,
+    approx_col: str,
+    vec_col: str,
+    id_col: str,
+    query_vec_col: str,
+    query_id_col: str,
+    round_to: int | None,
+) -> DataFrame:
+    """The exact re-rank every quantized probe ends with: join the
+    candidate set (query_id, id, ``__approx``) back to the
+    full-precision ``vectors`` and the query block, re-score with true
+    cosine, keep the top ``k`` per query. Returns (query_id, id,
+    ``approx_col``, score).
+
+    The candidate set is BROADCAST: without the hint Catalyst
+    sort-merge-joins, shuffling the entire float table to meet a few
+    hundred candidate rows (measured 30.9 s vs 13 s at 10M vectors).
+    The float scan itself is the irreducible re-rank cost; with the
+    vectors laid out sorted/bucketed by id it prunes further at the
+    row-group level. Rank and emit read ONE ``__raw`` column — the
+    d-length HOF fold is expensive, never evaluated twice per row."""
+    exact = (
+        F.broadcast(cands)
+        .join(
+            vectors.select(F.col(id_col), _as_double(vec_col).alias("__v")),
             id_col,
-            approx.alias("approx_score"),
-            score.alias("score"),
         )
+        .join(
+            F.broadcast(
+                queries.select(
+                    F.col(query_id_col).alias("query_id"),
+                    _as_double(query_vec_col).alias("__q"),
+                )
+            ),
+            "query_id",
+        )
+        .withColumn("__raw", cosine(F.col("__v"), F.col("__q")))
+    )
+    return _top_per_query(exact, "__raw", id_col, k).select(
+        "query_id",
+        id_col,
+        _rounded("__approx", round_to).alias(approx_col),
+        _rounded("__raw", round_to).alias("score"),
     )
 
 
@@ -1458,6 +1514,24 @@ def build_ann_index(
         raise ValueError(f"unknown index kind: {kind!r}")
 
 
+def _serving_kind(kind: str):
+    """The ONE kind dispatch for serving a persisted ANN index (the
+    build side is :func:`build_ann_index`): ``(probe, append)``.
+    ``probe`` is the shared kernel bound to the kind's codec — call it
+    as ``probe(spark, path, queries, k, refine, vectors, ..., scope=,
+    nprobe=)``; ``nprobe`` only routes ivfpq. ``append`` is the kind's
+    ``append_*_index``."""
+    import functools
+
+    if kind == "sq8":
+        codec, append = _SQ8, append_sq8_index
+    elif kind == "ivfpq":
+        codec, append = _IVFPQ, append_ivfpq_index
+    else:
+        raise ValueError(f"unknown index kind: {kind!r}")
+    return functools.partial(_probe_codes, codec), append
+
+
 def index_drift_stats(
     vectors: DataFrame,
     index_path: str,
@@ -1763,163 +1837,6 @@ def append_sq8_index(
     ).parquet(f"{path}/codes")
 
 
-def sq8_topk(
-    spark: SparkSession,
-    path: str,
-    queries: DataFrame,
-    k: int,
-    refine: int = 4,
-    vectors: DataFrame | None = None,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    query_vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    round_to: int | None = 4,
-) -> DataFrame:
-    """Scan the persisted SQ8 index for top-``k*refine`` candidates per
-    query, then (when ``vectors`` is given) re-rank them exactly against
-    the full-precision table. Returns (query_id, vec_id, approx_score[,
-    score]).
-
-    The candidate kernel exploits that the asymmetric dot product is
-    LINEAR in the codes: dot(recon, q) = q·mn + (q*scale)·c, so each
-    Arrow batch is ONE uint8-matrix matmul against the transformed
-    query weights plus a constant — no per-pair dequantization. The
-    codes table (1 byte/dim + one stored norm) is the only corpus-scale
-    read; queries/codebook broadcast; each batch emits only its local
-    top candidates, so the global window shuffles O(k·refine·queries·
-    batches) rows (the cosine_topk_blas two-level shape). Re-rank joins
-    the tiny candidate id set back to ``vectors``."""
-    import numpy as np
-
-    srow = spark.read.parquet(f"{path}/stats").collect()[0]
-    mn = np.array(srow["__mn"], dtype=np.float64)
-    mx = np.array(srow["__mx"], dtype=np.float64)
-    scale = (mx - mn) / 255.0
-    q_collected = queries.select(
-        F.col(query_id_col), _as_double(query_vec_col)
-    ).collect()
-    _warn_large_query_collect(len(q_collected), "sq8_topk")
-    q_rows = [r for r in q_collected if r[1] is not None]
-    if mn.size == 0 or not q_rows:
-        # empty index (built over an empty corpus) or no usable query
-        # vectors: an empty result with the contract schema, not a
-        # shape error in the kernel (round-6 empty-input sweep)
-        from pyspark.sql.types import DoubleType, StructField, StructType
-
-        codes_schema = _codes_df(spark, path).schema
-        fields = [
-            StructField("query_id", queries.schema[query_id_col].dataType),
-            codes_schema[id_col],
-            StructField("approx_score", DoubleType()),
-        ]
-        if vectors is not None:
-            fields.append(StructField("score", DoubleType()))
-        return spark.createDataFrame([], StructType(fields))
-    qids = np.array([r[0] for r in q_rows])
-    Q = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
-    W = Q * scale                      # q x d
-    const = Q @ mn                     # q
-    qnorm = np.sqrt((Q * Q).sum(axis=1))
-    n_cand = k * refine
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    codes_df = _codes_df(spark, path)
-    # id types follow the data (string keys work exactly like longs —
-    # the expression-arm twin is id-type-agnostic)
-    out_schema = StructType(
-        [
-            StructField("query_id", queries.schema[query_id_col].dataType),
-            StructField(id_col, codes_df.schema[id_col].dataType),
-            StructField("__approx", DoubleType()),
-        ]
-    )
-
-    def score(batches):
-        # running top-n_cand per query across the partition's batches,
-        # ONE emitted frame per partition — see _PartitionTopK for why
-        # per-batch emission melts down at large query counts
-        acc = _PartitionTopK(n_cand)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            C = np.frombuffer(
-                b"".join(pdf["code_bytes"]), dtype=np.uint8
-            ).reshape(len(pdf), -1).astype(np.float64)
-            ids = pdf[id_col].to_numpy()
-            nh = pdf["norm_hat"].to_numpy()
-            dots = C @ W.T + const            # b x q
-            denom = nh[:, None] * qnorm[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                S = np.where(denom > 0, dots / denom, -np.inf)
-            for j in range(len(qids)):
-                col = S[:, j]
-                # zero-norm rows scored -inf above: EXCLUDE them, the
-                # expression arm drops its NULL-cosine twin rows too
-                valid = np.isfinite(col)
-                if not valid.any():
-                    continue
-                acc.add(j, ids[valid], col[valid])
-        yield from acc.emit(qids, id_col, "__approx")
-
-    local = codes_df.mapInPandas(score, schema=out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("__approx"), F.asc(id_col)
-    )
-    cands = (
-        local.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= n_cand)
-        .drop("__rn")
-    )
-    approx = F.col("__approx")
-    if round_to is not None:
-        approx = F.round(approx, round_to)
-    if vectors is None:
-        return cands.select(
-            "query_id", id_col, approx.alias("approx_score")
-        )
-    # BROADCAST the tiny candidate set: without the hint Catalyst
-    # sort-merge-joins, shuffling the entire float table to meet 800
-    # candidate rows (measured 30.9 s vs 13 s at 10M vectors). The
-    # float scan itself is the irreducible re-rank cost; with the
-    # vectors laid out sorted/bucketed by id it prunes further at the
-    # row-group level.
-    exact_join = F.broadcast(cands).join(
-        vectors.select(F.col(id_col), _as_double(vec_col).alias("__v")),
-        id_col,
-    ).join(
-        F.broadcast(
-            queries.select(
-                F.col(query_id_col).alias("query_id"),
-                _as_double(query_vec_col).alias("__q"),
-            )
-        ),
-        "query_id",
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.desc("__raw"), F.asc(id_col)
-    )
-    score_col = F.col("__raw")
-    if round_to is not None:
-        score_col = F.round(score_col, round_to)
-    return (
-        exact_join.withColumn("__raw", cosine(F.col("__v"), F.col("__q")))
-        .withColumn("__rk", F.row_number().over(w2))
-        .where(F.col("__rk") <= k)
-        .select(
-            "query_id",
-            id_col,
-            approx.alias("approx_score"),
-            score_col.alias("score"),
-        )
-    )
-
-
 def _topk_by_score_then_id(ids, scores, kk: int):
     """Indices of the top-``kk`` rows by (score DESC, id ASC) — exact
     and mostly vectorized: an O(n) partition finds the kk-th largest
@@ -1941,15 +1858,16 @@ def _topk_by_score_then_id(ids, scores, kk: int):
 
 class _PartitionTopK:
     """Running per-query top-``kk`` across a partition's Arrow batches
-    for the ANN scan kernels: each batch folds its local candidates
-    into the running pool and the kernel emits ONE frame per
-    PARTITION. Per-BATCH emission (the original two-level shape) puts
-    O(batches x queries x kk) rows through the global window — at
-    10^3 queries over 10M vectors that was ~3x10^8 sort rows and a
-    Java-heap OOM in the window's UnsafeExternalSorter (round-10
-    1k-query spot catch); per-partition emission caps the shuffle at
-    O(partitions x queries x kk) independent of batch count. State is
-    bounded: <= 2 x kk rows per query during a merge."""
+    for the probe kernel (:func:`_probe_codes`): each batch folds its
+    local candidates into the running pool and the kernel emits ONE
+    frame per PARTITION. Per-BATCH emission (the original two-level
+    shape) puts O(batches x queries x kk) rows through the global
+    window — at 10^3 queries over 10M vectors that was ~3x10^8 sort
+    rows and a Java-heap OOM in the window's UnsafeExternalSorter
+    (round-10 1k-query spot catch); per-partition emission caps the
+    shuffle at O(partitions x queries x kk) independent of batch
+    count. State is bounded: <= 2 x kk rows per query during a
+    merge."""
 
     def __init__(self, kk: int):
         self.kk = kk
@@ -1981,6 +1899,202 @@ class _PartitionTopK:
             out[id_col].extend(ids)
             out[score_col].extend(self._scores[q_idx])
         yield pd.DataFrame(out)
+
+
+class _Codec(NamedTuple):
+    """What one persisted index kind plugs into :func:`_probe_codes`:
+    everything else about a probe is shared."""
+
+    name: str  # the public probe (named in the query-collect warning)
+    approx_col: str  # the approximate-score output column
+    load: Callable  # (spark, path) -> frozen artifacts; None = empty-built
+    prepare: Callable  # (artifacts, Q, nprobe) -> the scan's query payload
+    scores: Callable  # (payload, pdf) -> batch x query; non-finite = skip
+    prune: Callable | None = None  # (codes_df, payload) -> pruned codes_df
+
+
+def _probe_codes(
+    codec: _Codec,
+    spark: SparkSession,
+    path: str,
+    queries: DataFrame,
+    k: int,
+    refine: int,
+    vectors: DataFrame | None = None,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+    query_vec_col: str = "embedding",
+    query_id_col: str = "query_id",
+    round_to: int | None = 4,
+    scope=None,
+    nprobe: int | None = None,
+) -> DataFrame:
+    """The one quantized probe kernel (module docstring: "Quantized
+    probe family"). Collects the query block once (NULL and zero-norm
+    rows produce no output), scans ``_codes_df(path)`` — pruned by the
+    codec when it routes — with ``mapInPandas`` through
+    :class:`_PartitionTopK`, keeps the global top ``k*refine`` per
+    query, and re-ranks exactly when ``vectors`` is given. Returns
+    (query_id, id, ``codec.approx_col``[, score]); an empty-built index
+    or an all-degenerate query block returns that schema with no rows.
+
+    The query payload is a ``scope``-tracked broadcast when a
+    dedup.CacheScope is given; otherwise it rides in the scan closure,
+    which Spark ships with the task binary and drops with the stage —
+    an untracked broadcast per probe would outlive it."""
+    import numpy as np
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    arts = codec.load(spark, path)
+    codes_df = _codes_df(spark, path)
+    q_collected = queries.select(
+        F.col(query_id_col), _as_double(query_vec_col)
+    ).collect()
+    _warn_large_query_collect(len(q_collected), codec.name)
+    q_rows = [
+        r for r in q_collected if r[1] is not None and any(x != 0 for x in r[1])
+    ]
+    # id types follow the data: string keys work exactly like longs
+    qid_field = StructField("query_id", queries.schema[query_id_col].dataType)
+    id_field = codes_df.schema[id_col]
+    if arts is None or not q_rows:
+        fields = [
+            qid_field, id_field, StructField(codec.approx_col, DoubleType())
+        ]
+        if vectors is not None:
+            fields.append(StructField("score", DoubleType()))
+        return spark.createDataFrame([], StructType(fields))
+    qids = np.array([r[0] for r in q_rows])
+    Q = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
+    payload = codec.prepare(arts, Q, nprobe)
+    bc = None
+    if scope is not None:
+        bc = spark.sparkContext.broadcast(payload)
+        scope.add_broadcast(bc)
+    inline = payload if bc is None else None  # what the closure ships
+    if codec.prune is not None:
+        codes_df = codec.prune(codes_df, payload)
+    n_cand = k * refine
+
+    def scan(batches):
+        p = inline if bc is None else bc.value
+        acc = _PartitionTopK(n_cand)
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            ids = pdf[id_col].to_numpy()
+            S = codec.scores(p, pdf)
+            for j in range(S.shape[1]):
+                col = S[:, j]
+                # non-finite = not a candidate (zero-norm codes, a
+                # cluster the query does not probe)
+                valid = np.isfinite(col)
+                if valid.any():
+                    acc.add(j, ids[valid], col[valid])
+        yield from acc.emit(qids, id_col, "__approx")
+
+    out_schema = StructType(
+        [qid_field, id_field, StructField("__approx", DoubleType())]
+    )
+    cands = _top_per_query(
+        codes_df.mapInPandas(scan, schema=out_schema), "__approx", id_col, n_cand
+    )
+    if vectors is None:
+        return cands.select(
+            "query_id", id_col,
+            _rounded("__approx", round_to).alias(codec.approx_col),
+        )
+    return _exact_rerank(
+        cands, vectors, queries, k, codec.approx_col,
+        vec_col, id_col, query_vec_col, query_id_col, round_to,
+    )
+
+
+def _unit_rows(Q):
+    import numpy as np
+
+    return Q / np.sqrt((Q * Q).sum(axis=1))[:, None]
+
+
+def _adc_luts(books, Q):
+    """(queries x m x n_codes) ADC lookup tables, ``LUT[i][j][c] =
+    Q_i[subspace j] · centroid_jc`` — built once per query, so every
+    code's approximate dot is m gathers summed."""
+    import numpy as np
+
+    sub = books[0].shape[1]
+    return np.stack(
+        [
+            np.stack(
+                [B @ q[j * sub : (j + 1) * sub] for j, B in enumerate(books)]
+            )
+            for q in Q
+        ]
+    )
+
+
+def _sq8_load(spark: SparkSession, path: str):
+    import numpy as np
+
+    srow = spark.read.parquet(f"{path}/stats").collect()[0]
+    mn = np.array(srow["__mn"], dtype=np.float64)
+    mx = np.array(srow["__mx"], dtype=np.float64)
+    return (mn, mx) if mn.size else None
+
+
+def _sq8_prepare(arts, Q, nprobe):
+    import numpy as np
+
+    # the asymmetric dot is LINEAR in the codes: dot(recon, q) = q·mn +
+    # (q*scale)·c — so a batch scores as ONE uint8-matrix matmul
+    # against these weights plus a constant, no per-pair dequantization
+    mn, mx = arts
+    return Q * ((mx - mn) / 255.0), Q @ mn, np.sqrt((Q * Q).sum(axis=1))
+
+
+def _sq8_scores(payload, pdf):
+    import numpy as np
+
+    W, const, qnorm = payload
+    C = np.frombuffer(
+        b"".join(pdf["code_bytes"]), dtype=np.uint8
+    ).reshape(len(pdf), -1).astype(np.float64)
+    dots = C @ W.T + const
+    denom = pdf["norm_hat"].to_numpy()[:, None] * qnorm[None, :]
+    # zero-norm codes score -inf: EXCLUDED, as the expression arm
+    # (quantized_topk) drops its NULL-cosine rows
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(denom > 0, dots / denom, -np.inf)
+
+
+_SQ8 = _Codec("sq8_topk", "approx_score", _sq8_load, _sq8_prepare, _sq8_scores)
+
+
+def sq8_topk(
+    spark: SparkSession,
+    path: str,
+    queries: DataFrame,
+    k: int,
+    refine: int = 4,
+    vectors: DataFrame | None = None,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+    query_vec_col: str = "embedding",
+    query_id_col: str = "query_id",
+    round_to: int | None = 4,
+) -> DataFrame:
+    """Scan the persisted SQ8 index for top-``k*refine`` candidates per
+    query, then (when ``vectors`` is given) re-rank them exactly against
+    the full-precision table. Returns (query_id, vec_id, approx_score[,
+    score]).
+
+    Each Arrow batch of the codes table (1 byte/dim + one stored norm,
+    the only corpus-scale read) scores as one uint8-matrix matmul — see
+    :func:`_sq8_prepare`."""
+    return _probe_codes(
+        _SQ8, spark, path, queries, k, refine, vectors, vec_col, id_col,
+        query_vec_col, query_id_col, round_to,
+    )
 
 
 # ----------------------------- product quantization (IVF-PQ, X43)
@@ -2214,6 +2328,33 @@ def load_pq_codebooks(spark: SparkSession, path: str) -> list:
     return [[b[c] for c in sorted(b)] for b in books]
 
 
+def _pq_load(spark: SparkSession, path: str):
+    import numpy as np
+
+    books = load_pq_codebooks(spark, path)
+    return [np.array(b, dtype=np.float64) for b in books] or None
+
+
+def _pq_prepare(books, Q, nprobe):
+    # unit queries: PQ preserves dot products, not norms
+    return _adc_luts(books, _unit_rows(Q))
+
+
+def _pq_scores(luts, pdf):
+    import numpy as np
+
+    m = luts.shape[1]
+    C = np.frombuffer(b"".join(pdf["pq_bytes"]), dtype=np.uint8).reshape(
+        len(pdf), m
+    )
+    cols = np.arange(m)
+    # per query: sum over subspaces of LUT[j, code_j]
+    return np.stack([lut[cols[None, :], C].sum(axis=1) for lut in luts], axis=1)
+
+
+_PQ = _Codec("pq_topk", "approx_dot", _pq_load, _pq_prepare, _pq_scores)
+
+
 def pq_topk(
     spark: SparkSession,
     path: str,
@@ -2236,121 +2377,10 @@ def pq_topk(
     at d=64/m=8), so at 100 TB the candidate scan reads ~3 TB instead.
     Approximate scores rank by DOT (PQ preserves dot products, not
     norms); the exact re-rank against the full-precision table
-    re-scores the tiny candidate set with true cosine. Same two-level
-    top-k shape as cosine_topk_blas / sq8_topk."""
-    import numpy as np
-
-    codebooks = load_pq_codebooks(spark, path)
-    codes_df = _codes_df(spark, path)
-    q_collected = queries.select(
-        F.col(query_id_col), _as_double(query_vec_col)
-    ).collect()
-    _warn_large_query_collect(len(q_collected), "pq_topk")
-    q_rows = [
-        r for r in q_collected if r[1] is not None and any(x != 0 for x in r[1])
-    ]
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    if not codebooks or not q_rows:
-        fields = [
-            StructField("query_id", queries.schema[query_id_col].dataType),
-            codes_df.schema[id_col],
-            StructField("approx_dot", DoubleType()),
-        ]
-        if vectors is not None:
-            fields.append(StructField("score", DoubleType()))
-        return spark.createDataFrame([], StructType(fields))
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
-    qids = np.array([r[0] for r in q_rows])
-    Q = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
-    Q = Q / np.sqrt((Q * Q).sum(axis=1))[:, None]
-    # LUTs: (n_queries, m, n_codes)
-    luts = np.stack(
-        [
-            np.stack(
-                [
-                    np.array(codebooks[j], dtype=np.float64)
-                    @ q[j * sub : (j + 1) * sub]
-                    for j in range(m)
-                ]
-            )
-            for q in Q
-        ]
-    )
-    n_cand = k * refine
-    bc = spark.sparkContext.broadcast((qids, luts))
-    if scope is not None:
-        scope.add_broadcast(bc)
-    out_schema = StructType(
-        [
-            StructField("query_id", queries.schema[query_id_col].dataType),
-            codes_df.schema[id_col],
-            StructField("__adot", DoubleType()),
-        ]
-    )
-
-    def score(batches):
-        import pandas as pd
-
-        qids_b, luts_b = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            C = np.frombuffer(
-                b"".join(pdf["pq_bytes"]), dtype=np.uint8
-            ).reshape(len(pdf), m)
-            ids = pdf[id_col].to_numpy()
-            kk = min(n_cand, len(ids))
-            out = {"query_id": [], id_col: [], "__adot": []}
-            cols = np.arange(m)
-            for qi in range(len(qids_b)):
-                # gather: sum over subspaces of LUT[j, code_j]
-                dots = luts_b[qi][cols[None, :], C].sum(axis=1)
-                order = np.lexsort((ids, -dots))[:kk]
-                out["query_id"].extend([qids_b[qi]] * len(order))
-                out[id_col].extend(ids[order])
-                out["__adot"].extend(dots[order])
-            yield pd.DataFrame(out)
-
-    local = codes_df.mapInPandas(score, schema=out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("__adot"), F.asc(id_col))
-    cands = (
-        local.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= n_cand)
-        .drop("__rn")
-    )
-    adot = F.col("__adot")
-    if round_to is not None:
-        adot = F.round(adot, round_to)
-    if vectors is None:
-        return cands.select("query_id", id_col, adot.alias("approx_dot"))
-    exact_join = F.broadcast(cands).join(
-        vectors.select(F.col(id_col), _as_double(vec_col).alias("__v")),
-        id_col,
-    ).join(
-        F.broadcast(
-            queries.select(
-                F.col(query_id_col).alias("query_id"),
-                _as_double(query_vec_col).alias("__q"),
-            )
-        ),
-        "query_id",
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("__raw"), F.asc(id_col))
-    score_col = F.col("__raw")
-    if round_to is not None:
-        score_col = F.round(score_col, round_to)
-    return (
-        exact_join.withColumn("__raw", cosine(F.col("__v"), F.col("__q")))
-        .withColumn("__rk", F.row_number().over(w2))
-        .where(F.col("__rk") <= k)
-        .select(
-            "query_id",
-            id_col,
-            adot.alias("approx_dot"),
-            score_col.alias("score"),
-        )
+    re-scores the tiny candidate set with true cosine."""
+    return _probe_codes(
+        _PQ, spark, path, queries, k, refine, vectors, vec_col, id_col,
+        query_vec_col, query_id_col, round_to, scope=scope,
     )
 
 
@@ -2721,6 +2751,67 @@ def load_ivfpq_meta(
     return centroids, load_pq_codebooks(spark, path)
 
 
+def _ivfpq_load(spark: SparkSession, path: str):
+    import numpy as np
+
+    centroids, codebooks = load_ivfpq_meta(spark, path)
+    if not centroids or not codebooks:
+        return None
+    rot = load_ivfpq_rotation(spark, path)
+    return (
+        np.array(centroids, dtype=np.float64),
+        [np.array(b, dtype=np.float64) for b in codebooks],
+        None if rot is None else np.array(rot, dtype=np.float64),
+    )
+
+
+def _ivfpq_prepare(arts, Q, nprobe):
+    import numpy as np
+
+    C, books, rot = arts
+    Q = _unit_rows(Q)
+    qc = Q @ C.T  # q x k_clusters: the per-cluster constant terms
+    # stable argsort matches the assignment argmax's low-id tie-break
+    probes = np.argsort(-qc, axis=1, kind="stable")[:, : min(nprobe, len(C))]
+    # OPQ (X54): codes hold ŷ ≈ r @ O, so dot(q, r̂) = dot(q O, ŷ) —
+    # rotate the LUT's query side; routing (qc) stays unrotated since
+    # the rotation applies to residuals only
+    Qr = Q if rot is None else Q @ rot
+    return _adc_luts(books, Qr), qc, [np.unique(row) for row in probes]
+
+
+def _ivfpq_prune(codes_df: DataFrame, payload) -> DataFrame:
+    # cluster_id is a PARTITION column: this filter prunes to the
+    # probed clusters' files before a byte is read
+    probed = sorted({int(c) for row in payload[2] for c in row})
+    return codes_df.where(F.col("cluster_id").isin(probed))
+
+
+def _ivfpq_scores(payload, pdf):
+    import numpy as np
+
+    luts, qc, probe_sets = payload
+    m = luts.shape[1]
+    C = np.frombuffer(b"".join(pdf["pq_bytes"]), dtype=np.uint8).reshape(
+        len(pdf), m
+    )
+    cl = pdf["cluster_id"].to_numpy()
+    cols = np.arange(m)
+    S = np.full((len(pdf), len(luts)), -np.inf)
+    for qi, lut in enumerate(luts):
+        # colocated layout => a batch is usually ONE cluster; the mask
+        # is exact either way (unprobed clusters stay -inf)
+        sel = np.nonzero(np.isin(cl, probe_sets[qi]))[0]
+        S[sel, qi] = qc[qi, cl[sel]] + lut[cols[None, :], C[sel]].sum(axis=1)
+    return S
+
+
+_IVFPQ = _Codec(
+    "ivfpq_topk", "approx_dot", _ivfpq_load, _ivfpq_prepare, _ivfpq_scores,
+    _ivfpq_prune,
+)
+
+
 def ivfpq_topk(
     spark: SparkSession,
     path: str,
@@ -2746,141 +2837,12 @@ def ivfpq_topk(
 
     Scale shape — this is the 10^10-vector serving plan: the cluster
     filter prunes at the parquet PARTITION level (only ~nprobe/k_c of
-    the files are opened), the pruned scan reads m bytes/vector, each
-    Arrow batch emits only local top candidates (the two-level top-k
-    shape), and the re-rank joins a broadcast candidate set against
-    the float table. Neither a flat SQ8 scan (linear in corpus bytes)
-    nor IVF-with-float-codes (25x the bandwidth at d=64/m=8) survives
-    at that scale; IVFPQ reads ~(nprobe/k_c) x (m/4d) of the float
+    the files are opened) and the pruned scan reads m bytes/vector.
+    Neither a flat SQ8 scan (linear in corpus bytes) nor
+    IVF-with-float-codes (25x the bandwidth at d=64/m=8) survives at
+    that scale; IVFPQ reads ~(nprobe/k_c) x (m/4d) of the float
     bytes."""
-    import numpy as np
-
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    centroids, codebooks = load_ivfpq_meta(spark, path)
-    codes_df = _codes_df(spark, path)
-    q_collected = queries.select(
-        F.col(query_id_col), l2_normalize(_as_double(query_vec_col))
-    ).collect()
-    _warn_large_query_collect(len(q_collected), "ivfpq_topk")
-    q_rows = [r for r in q_collected if r[1] is not None]
-    if not centroids or not codebooks or not q_rows:
-        fields = [
-            StructField("query_id", queries.schema[query_id_col].dataType),
-            codes_df.schema[id_col],
-            StructField("approx_dot", DoubleType()),
-        ]
-        if vectors is not None:
-            fields.append(StructField("score", DoubleType()))
-        return spark.createDataFrame([], StructType(fields))
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
-    C = np.array(centroids, dtype=np.float64)
-    qids = np.array([r[0] for r in q_rows])
-    Q = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
-    np_ = min(nprobe, len(centroids))
-    qc = Q @ C.T  # q x k_clusters: the per-cluster constant terms
-    # stable argsort matches the assignment argmax's low-id tie-break
-    probes = np.argsort(-qc, axis=1, kind="stable")[:, :np_]  # q x nprobe
-    probed_union = sorted({int(c) for row in probes for c in row})
-    # OPQ (X54): codes hold ŷ ≈ r @ O, so dot(q, r̂) = dot(q O, ŷ) —
-    # rotate the LUT's query side; routing (qc) stays unrotated since
-    # the rotation applies to residuals only
-    rot = load_ivfpq_rotation(spark, path)
-    Qr = Q if rot is None else Q @ np.array(rot, dtype=np.float64)
-    luts = np.stack(
-        [
-            np.stack(
-                [
-                    np.array(codebooks[j], dtype=np.float64)
-                    @ q[j * sub : (j + 1) * sub]
-                    for j in range(m)
-                ]
-            )
-            for q in Qr
-        ]
-    )  # q x m x n_codes
-    n_cand = k * refine
-    bc = spark.sparkContext.broadcast((qids, luts, qc, probes))
-    if scope is not None:
-        scope.add_broadcast(bc)
-    out_schema = StructType(
-        [
-            StructField("query_id", queries.schema[query_id_col].dataType),
-            codes_df.schema[id_col],
-            StructField("__adot", DoubleType()),
-        ]
-    )
-    # cluster_id is a PARTITION column: this filter prunes to the
-    # probed clusters' files before a byte is read
-    pruned = codes_df.where(F.col("cluster_id").isin(probed_union))
-
-    def score(batches):
-        qids_b, luts_b, qc_b, probes_b = bc.value
-        probe_sets = [np.array(sorted(set(map(int, row)))) for row in probes_b]
-        cols = np.arange(m)
-        # per-partition running top-k (see _PartitionTopK): the pruned
-        # scan is smaller than the sq8 flat scan, but a 10^3-query
-        # offline eval still multiplies per-batch emission into the
-        # same window-sort blowup
-        acc = _PartitionTopK(n_cand)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            Cc = np.frombuffer(
-                b"".join(pdf["pq_bytes"]), dtype=np.uint8
-            ).reshape(len(pdf), m)
-            ids = pdf[id_col].to_numpy()
-            cl = pdf["cluster_id"].to_numpy()
-            for qi in range(len(qids_b)):
-                # colocated layout => a batch is usually ONE cluster;
-                # the mask is exact either way
-                sel = np.nonzero(np.isin(cl, probe_sets[qi]))[0]
-                if not len(sel):
-                    continue
-                dots = (
-                    qc_b[qi, cl[sel]]
-                    + luts_b[qi][cols[None, :], Cc[sel]].sum(axis=1)
-                )
-                acc.add(qi, ids[sel], dots)
-        yield from acc.emit(qids_b, id_col, "__adot")
-
-    local = pruned.mapInPandas(score, schema=out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("__adot"), F.asc(id_col))
-    cands = (
-        local.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= n_cand)
-        .drop("__rn")
-    )
-    adot = F.col("__adot")
-    if round_to is not None:
-        adot = F.round(adot, round_to)
-    if vectors is None:
-        return cands.select("query_id", id_col, adot.alias("approx_dot"))
-    exact_join = F.broadcast(cands).join(
-        vectors.select(F.col(id_col), _as_double(vec_col).alias("__v")),
-        id_col,
-    ).join(
-        F.broadcast(
-            queries.select(
-                F.col(query_id_col).alias("query_id"),
-                _as_double(query_vec_col).alias("__q"),
-            )
-        ),
-        "query_id",
-    )
-    w3 = Window.partitionBy("query_id").orderBy(F.desc("__raw"), F.asc(id_col))
-    score_col = F.col("__raw")
-    if round_to is not None:
-        score_col = F.round(score_col, round_to)
-    return (
-        exact_join.withColumn("__raw", cosine(F.col("__v"), F.col("__q")))
-        .withColumn("__rk", F.row_number().over(w3))
-        .where(F.col("__rk") <= k)
-        .select(
-            "query_id",
-            id_col,
-            adot.alias("approx_dot"),
-            score_col.alias("score"),
-        )
+    return _probe_codes(
+        _IVFPQ, spark, path, queries, k, refine, vectors, vec_col, id_col,
+        query_vec_col, query_id_col, round_to, scope=scope, nprobe=nprobe,
     )

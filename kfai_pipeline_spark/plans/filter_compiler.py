@@ -97,6 +97,14 @@ def compile_filter(filter_dict: dict[str, Any] | None) -> Column:
     return reduce(lambda a, b: a & b, conds)
 
 
+def _contains_pattern(s: str) -> str:
+    """The LIKE pattern matching values that contain ``s`` literally:
+    ``%`` and ``_`` backslash-escaped, wrapped in ``%...%`` (ref
+    filtering.py:112-115)."""
+    escaped = re.sub(r"([%_])", r"\\\1", s)
+    return f"%{escaped}%"
+
+
 def build_filter(
     shows: list[str] | None = None,
     hosts: list[str] | None = None,
@@ -127,8 +135,7 @@ def build_filter(
     if shows:
         conditions.append({"show_name": {"$in": list(shows)}})
     for host in hosts or []:
-        escaped = re.sub(r"([%_])", r"\\\1", host)
-        conditions.append({"hosts": {"$like": f"%{escaped}%"}})
+        conditions.append({"hosts": {"$like": _contains_pattern(host)}})
     if conditions:
         return {"$and": conditions}
     return None

@@ -31,8 +31,16 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from kfai_pipeline_spark.operators.similarity import cosine, _as_double
-from kfai_pipeline_spark.plans.filter_compiler import build_filter, compile_filter
+from kfai_pipeline_spark.operators.similarity import (
+    _as_double,
+    _serving_kind,
+    cosine,
+)
+from kfai_pipeline_spark.plans.filter_compiler import (
+    _contains_pattern,
+    build_filter,
+    compile_filter,
+)
 
 CONTEXT_COUNT = 120  # ref loaders/utils/config.py:16
 TIMESTAMP_BUFFER = 10  # ref loaders/utils/config.py:17
@@ -112,19 +120,27 @@ class Citation:
 
 
 def metadata_predicate(parsed: ParsedQuery, current_year: int = 2026) -> Column:
-    """Stages 2-3a: parsed terms -> one boolean Column. Hosts are matched
-    with array_contains-friendly LIKE over the CSV form only when the
-    docs table keeps CSV hosts; with ARRAY hosts we use exists()."""
-    fdict = build_filter(
-        shows=parsed.shows,
-        hosts=canonicalize_hosts(parsed.hosts),
-        exact_year=parsed.exact_year,
-        year_range=parsed.year_range,
-        before_year=parsed.before_year,
-        after_year=parsed.after_year,
-        current_year=current_year,
+    """Stages 2-3a: parsed terms -> one boolean Column. A host term
+    matches per host: ``exists(hosts, h -> h LIKE pat)``. The hosts
+    list is read through ``split(concat_ws(',', hosts), ',')``, which
+    is the element list for the store's ARRAY<STRING> column and the
+    split CSV for a CSV-string column — a bare LIKE is a type error on
+    the array."""
+    pred = compile_filter(
+        build_filter(
+            shows=parsed.shows,
+            exact_year=parsed.exact_year,
+            year_range=parsed.year_range,
+            before_year=parsed.before_year,
+            after_year=parsed.after_year,
+            current_year=current_year,
+        )
     )
-    return compile_filter(fdict)
+    host_list = F.split(F.concat_ws(",", F.col("hosts")), ",")
+    for host in canonicalize_hosts(parsed.hosts):
+        pat = _contains_pattern(host)
+        pred = pred & F.exists(host_list, lambda h: h.like(pat))
+    return pred
 
 
 def topic_predicate(topics: list[str]) -> Column:
@@ -252,18 +268,8 @@ def append_retrieval_index(
     rebuild cadence is the README decision table's freshness column).
     Parity rows q128/q129: build(A)+append(B) serves row-identically
     to brute over A∪B in the exhaustive-probe regime."""
-    if kind == "sq8":
-        from kfai_pipeline_spark.operators.similarity import append_sq8_index
-
-        append_sq8_index(docs, path, vec_col=vec_col, id_col=id_col)
-    elif kind == "ivfpq":
-        from kfai_pipeline_spark.operators.similarity import (
-            append_ivfpq_index,
-        )
-
-        append_ivfpq_index(docs, path, vec_col=vec_col, id_col=id_col)
-    else:
-        raise ValueError(f"unknown index kind: {kind!r}")
+    _, append = _serving_kind(kind)
+    append(docs, path, vec_col=vec_col, id_col=id_col)
 
 
 def retrieve_tiered(
@@ -332,16 +338,13 @@ def retrieve_tiered(
     size x predicate selectivity x index freshness -> tier, with the
     measured curves each cell rests on.
 
-    ``scope`` (a dedup.CacheScope) tracks the ivfpq probe's per-round
-    query broadcast for deterministic release — a long-lived serving
-    loop without one accretes an executor broadcast per probe round
-    (the CacheScope class doc's leak class; sq8 probes broadcast via
-    closure and need no tracking).
+    ``scope`` (a dedup.CacheScope) takes each probe round's query
+    block as a broadcast for deterministic release; without one the
+    block rides in the scan closure (similarity._probe_codes).
     """
     if tier not in ("auto", "brute", "ann"):
         raise ValueError(f"unknown retrieval tier: {tier!r}")
-    if index_kind not in ("sq8", "ivfpq"):
-        raise ValueError(f"unknown index kind: {index_kind!r}")
+    probe, _ = _serving_kind(index_kind)
     if tier == "auto":
         # parquet row-count is metadata-only (footer counts); at serving
         # time the corpus size is known at index-build and callers pass
@@ -379,7 +382,6 @@ def retrieve_tiered(
     from pyspark.sql.types import StructField, StructType
 
     from kfai_pipeline_spark.operators.index_lifecycle import resolve_index_path
-    from kfai_pipeline_spark.operators.similarity import ivfpq_topk, sq8_topk
 
     spark = docs.sparkSession
     # a lifecycle serving ROOT resolves to its committed serving
@@ -397,19 +399,15 @@ def retrieve_tiered(
         # by construction — driver-safe): the stats read, the
         # certificate count, and the final consumer would otherwise
         # each re-run the corpus-scale codes scan (no shared subplans)
-        if index_kind == "ivfpq":
-            probe = ivfpq_topk(
-                spark, index_path, qdf, k=k_probe, nprobe=nprobe,
-                refine=refine, vectors=vectors, vec_col=vec_col,
-                id_col=id_col, round_to=round_to, scope=scope,
+        cand_rows = (
+            probe(
+                spark, index_path, qdf, k_probe, refine, vectors,
+                vec_col=vec_col, id_col=id_col, round_to=round_to,
+                scope=scope, nprobe=nprobe,
             )
-        else:
-            probe = sq8_topk(
-                spark, index_path, qdf, k=k_probe, refine=refine,
-                vectors=vectors, vec_col=vec_col, id_col=id_col,
-                round_to=round_to,
-            )
-        cand_rows = probe.select(id_col, "score").collect()
+            .select(id_col, "score")
+            .collect()
+        )
         id_type = docs.schema[id_col].dataType
         cands = spark.createDataFrame(
             [(r[0],) for r in cand_rows],
@@ -553,8 +551,8 @@ def retrieve_tiered_batch(
 
     Scale shape (the q76/q120 per-batch local top-k pattern): each
     top-up round runs ONE probe over the codes table serving ALL
-    still-pending queries (sq8_topk / ivfpq_topk are natively
-    multi-query — the query block broadcasts into the scan kernel);
+    still-pending queries (the probe kernel is natively multi-query —
+    the query block ships into the scan);
     the candidate frame (<= pending x k_probe rows, id+score only) is
     localCheckpoint-materialized so the certificate stats, the round's
     hits, and the final consumer reuse one scan (Spark shares no
@@ -586,8 +584,9 @@ def retrieve_tiered_batch(
     empty frame, batched.
 
     ``scope`` (a dedup.CacheScope) tracks the per-round checkpointed
-    candidate frames for deterministic release; without it they are
-    freed when the returned frame is garbage-collected.
+    candidate frames and query-block broadcasts for deterministic
+    release; without it the frames are freed when the returned frame
+    is garbage-collected and the query blocks ride in the scan closure.
 
     TWIN-SYNC contract: this function re-expresses retrieve_tiered's
     certificate/top-up rules (NULL-ignoring cutoff min, all-NULL pool
@@ -598,13 +597,11 @@ def retrieve_tiered_batch(
     """
     if index_path is None:
         raise ValueError("retrieve_tiered_batch needs index_path")
-    if index_kind not in ("sq8", "ivfpq"):
-        raise ValueError(f"unknown index kind: {index_kind!r}")
+    probe, _ = _serving_kind(index_kind)
     if id_col not in docs.columns:
         raise ValueError(f"batched tier needs the index id column {id_col!r}")
 
     from kfai_pipeline_spark.operators.index_lifecycle import resolve_index_path
-    from kfai_pipeline_spark.operators.similarity import ivfpq_topk, sq8_topk
 
     spark = docs.sparkSession
     index_path = resolve_index_path(spark, index_path)
@@ -617,10 +614,10 @@ def retrieve_tiered_batch(
         # distinct().collect(). The limit is exact: distinct() emits
         # NULL as one row, and the chunk condition is
         # (#non-null ids + has_null) > max_pending.
-        probe = (
+        head = (
             queries.select(qid).distinct().limit(max_pending + 1).collect()
         )
-        if len(probe) > max_pending:
+        if len(head) > max_pending:
             # O(#queries) driver traffic — the same order as one
             # round's status frame; only the DISTINCT id list travels
             id_rows = queries.select(qid).distinct().collect()
@@ -691,21 +688,12 @@ def retrieve_tiered_batch(
         pred = shared_pred
 
     def probe_once(pending: DataFrame, k_probe: int) -> DataFrame:
-        if index_kind == "ivfpq":
-            out = ivfpq_topk(
-                spark, index_path, pending, k=k_probe, nprobe=nprobe,
-                refine=refine, vectors=docs.select(id_col, vec_col),
-                vec_col=vec_col, id_col=id_col,
-                query_vec_col=query_vec_col, query_id_col=qid,
-                round_to=round_to, scope=scope,
-            )
-        else:
-            out = sq8_topk(
-                spark, index_path, pending, k=k_probe, refine=refine,
-                vectors=docs.select(id_col, vec_col), vec_col=vec_col,
-                id_col=id_col, query_vec_col=query_vec_col,
-                query_id_col=qid, round_to=round_to,
-            )
+        out = probe(
+            spark, index_path, pending, k_probe, refine,
+            docs.select(id_col, vec_col), vec_col=vec_col, id_col=id_col,
+            query_vec_col=query_vec_col, query_id_col=qid,
+            round_to=round_to, scope=scope, nprobe=nprobe,
+        )
         # one materialization serves the status aggregate, the round's
         # hits, AND the final consumer — otherwise each re-runs the
         # corpus codes scan. eager + lineage-truncating; O(q x k_probe)

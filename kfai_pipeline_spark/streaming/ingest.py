@@ -28,13 +28,12 @@ def read_video_records_stream(
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """File-source stream of video-record JSON (S4 streaming twin).
+    Reads line-delimited JSON, one record per line — what the batch
+    sink (``write_partitioned_json``) writes; a multi-line reader
+    would take only the first record of each file.
     ``maxFilesPerTrigger`` is the reference's rate limiting (I4) in
     stream form."""
-    reader = (
-        spark.readStream.schema(schema)
-        .option("recursiveFileLookup", "true")
-        .option("multiLine", "true")
-    )
+    reader = spark.readStream.schema(schema).option("recursiveFileLookup", "true")
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.json(path)

@@ -62,7 +62,22 @@ def test_q05_is_anti_join_not_not_in(spark):
     # r15: the anti join consumes DISTINCT right-side keys, so a
     # HashAggregate pair (map-side partial dedup, guide §2.3) must sit
     # below the join — the raw shape shuffled/sorted every orders row.
-    assert "HashAggregate" in p, "distinct pre-aggregate missing below anti join"
+    # Anchor on tree position as test_q81 does: formatted-plan ids
+    # increase leaf -> root, so an aggregate feeding the join has a
+    # LOWER id than the join.
+    import re
+
+    anti_ids = [
+        int(m) for m in re.findall(r"^.*\bLeftAnti\b.*\((\d+)\)\s*$", p, re.M)
+    ]
+    agg_ids = [
+        int(m) for m in re.findall(r"HashAggregate\s+\((\d+)\)\s*$", p, re.M)
+    ]
+    assert anti_ids and agg_ids, p
+    assert min(agg_ids) < min(anti_ids), (
+        "distinct pre-aggregate missing below anti join "
+        f"(agg ids {agg_ids} vs anti join ids {anti_ids})"
+    )
 
 
 def test_q06_is_semi_join(spark):

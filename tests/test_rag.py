@@ -167,6 +167,37 @@ def test_metadata_predicate_canonicalizes_parsed_hosts(spark):
     assert [r["video_id"] for r in got] == ["v3"]
 
 
+def test_host_alias_filters_array_hosts(chunk_docs):
+    # the store keeps hosts as ARRAY<STRING>: a parsed alias must keep
+    # exactly the chunks with the canonical host among their hosts, on
+    # the brute path and on the tiered brute arm (a bare LIKE over the
+    # array is a Spark type error)
+    from kfai_pipeline_spark.plans.rag import retrieve_tiered
+
+    docs = chunk_docs.withColumn(
+        "hosts",
+        F.transform(
+            "hosts", lambda h: F.when(h == "Host C", "Greg Miller").otherwise(h)
+        ),
+    )
+    qv = hash_embed(["spark data"])[0]
+
+    def keys(df):
+        return {(r["video_id"], r["start_time"]) for r in df.collect()}
+
+    want = keys(
+        retrieve(docs, qv, ParsedQuery(), k=10_000).where(
+            F.array_contains("hosts", "Greg Miller")
+        )
+    )
+    assert want
+    parsed = ParsedQuery(hosts=["Greg"])
+    assert keys(retrieve(docs, qv, parsed, k=10_000)) == want
+    assert keys(
+        retrieve_tiered(docs, qv, parsed, k=10_000, tier="brute")
+    ) == want
+
+
 def test_retrieve_multi_topic_union(chunk_docs):
     parsed = ParsedQuery(topics=["Episode 3", "Episode 4"])
     got = retrieve_multi_topic(chunk_docs, "what happened?", parsed, hash_embed, k=10_000)

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from conftest import SF_ORACLE
@@ -414,23 +415,6 @@ def test_pq_full_refine_equals_exact(spark, tmp_path):
     assert got == exact
 
 
-def test_pq_empty_corpus_returns_contract_schema(spark, tmp_path):
-    from kfai_pipeline_spark.operators import similarity as S
-
-    empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
-    q = spark.createDataFrame(
-        [(0, [1.0] * 8)], "query_id long, embedding array<double>"
-    )
-    books = S.train_pq_codebooks(empty, m=2)
-    assert books == []
-    idx = str(tmp_path / "pq")
-    S.write_pq_index(empty, idx, [[[0.0] * 4] * 4, [[0.0] * 4] * 4])
-    S.save_pq_index(spark, idx, [])
-    out = S.pq_topk(spark, idx, q, k=5, vectors=empty)
-    assert out.collect() == []
-    assert out.columns == ["query_id", "vec_id", "approx_dot", "score"]
-
-
 def test_blas_and_pq_tolerate_degenerate_queries(spark, tmp_path):
     """Review pass: a NULL/zero-norm QUERY row must be skipped, not
     crash the driver collect (blas) — and an all-degenerate corpus
@@ -454,6 +438,7 @@ def test_blas_and_pq_tolerate_degenerate_queries(spark, tmp_path):
         "vec_id long, embedding array<double>",
     )
     assert S.train_pq_codebooks(zeros, m=2) == []
+    assert S.train_pq_codebooks(zeros.where("vec_id < 0"), m=2) == []
 
 
 # ------------------------------ IVF x PQ composition (X44, q113)
@@ -567,21 +552,17 @@ def test_ivfpq_training_layout_invariant_and_residual(spark):
 
 
 def test_ivfpq_empty_and_degenerate_contracts(spark, tmp_path):
-    """Empty corpus trains an empty model, writes a schema-bearing
-    empty index, and probes to an empty contract-schema result;
-    NULL / zero-norm corpus and query rows are excluded."""
+    """Empty corpus trains an empty model and writes a schema-bearing
+    empty index; NULL / zero-norm corpus rows are excluded at encode.
+    The probe side of both contracts is test_probe_contracts."""
     empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
-    q = spark.createDataFrame(
-        [(0, [1.0] * 8), (1, None), (2, [0.0] * 8)],
-        "query_id long, embedding array<double>",
-    )
     cents, books = S.train_ivfpq(empty, n_clusters=4, m=2)
     assert cents == [] and books == []
     idx = str(tmp_path / "ivfpq_empty")
     S.write_ivfpq_index(empty, idx, cents, books)
-    out = S.ivfpq_topk(spark, idx, q, k=5, vectors=empty)
-    assert out.collect() == []
-    assert out.columns == ["query_id", "vec_id", "approx_dot", "score"]
+    codes = spark.read.parquet(f"{idx}/codes")
+    assert codes.columns == ["vec_id", "pq_bytes", "cluster_id"]
+    assert codes.collect() == []
     # degenerate corpus rows dropped at encode time
     rows = [(i, [float((i + j) % 5 + 1) for j in range(8)]) for i in range(20)]
     rows += [(90, None), (91, [0.0] * 8)]
@@ -591,10 +572,55 @@ def test_ivfpq_empty_and_degenerate_contracts(spark, tmp_path):
     S.write_ivfpq_index(corpus, idx2, cents, books)
     stored = {r.vec_id for r in spark.read.parquet(f"{idx2}/codes").collect()}
     assert 90 not in stored and 91 not in stored and len(stored) == 20
-    got = S.ivfpq_topk(spark, idx2, q, k=25, nprobe=2, refine=20,
-                       vectors=corpus).collect()
-    assert {r.query_id for r in got} == {0}
-    assert all(r.vec_id < 90 for r in got)
+
+
+def _build_index(spark, kind, vectors, path):
+    if kind == "sq8":
+        S.write_sq8_index(vectors, path)
+    elif kind == "pq":
+        books = S.train_pq_codebooks(vectors, m=4, n_codes=8)
+        S.write_pq_index(vectors, path, books)
+        S.save_pq_index(spark, path, books)
+    else:
+        cents, books = S.train_ivfpq(vectors, n_clusters=2, m=4, n_codes=8)
+        S.write_ivfpq_index(vectors, path, cents, books)
+
+
+@pytest.mark.parametrize("kind", ["sq8", "pq", "ivfpq"])
+def test_probe_contracts(spark, tmp_path, kind):
+    """The probe contract every persisted index kind shares: an
+    empty-built index probes to no rows with the contract columns;
+    NULL and zero-norm query rows produce no rows; without ``vectors``
+    the probe returns only (query_id, id, approx)."""
+    probe = {"sq8": S.sq8_topk, "pq": S.pq_topk, "ivfpq": S.ivfpq_topk}[kind]
+    approx = "approx_score" if kind == "sq8" else "approx_dot"
+    schema = "vec_id long, embedding array<double>"
+    empty = spark.createDataFrame([], schema)
+    corpus = spark.createDataFrame(
+        [(i, [float((i + j) % 5 + 1) for j in range(8)]) for i in range(20)],
+        schema,
+    )
+    q = spark.createDataFrame(
+        [(0, [1.0] * 8), (1, None), (2, [0.0] * 8)],
+        "query_id long, embedding array<double>",
+    )
+
+    _build_index(spark, kind, empty, str(tmp_path / "empty"))
+    out = probe(spark, str(tmp_path / "empty"), q, k=5, vectors=empty)
+    assert out.collect() == []
+    assert out.columns == ["query_id", "vec_id", approx, "score"]
+
+    idx = str(tmp_path / "idx")
+    _build_index(spark, kind, corpus, idx)
+    degenerate = q.where("query_id > 0")
+    assert probe(spark, idx, degenerate, k=5, vectors=corpus).collect() == []
+    got = probe(spark, idx, q, k=5, refine=20, vectors=corpus).collect()
+    assert len(got) == 5 and {r.query_id for r in got} == {0}
+
+    bare = probe(spark, idx, q, k=5, refine=20)
+    assert bare.columns == ["query_id", "vec_id", approx]
+    rows = bare.collect()
+    assert len(rows) == 20 and {r.query_id for r in rows} == {0}
 
 
 def test_ann_query_collect_size_guard(spark, monkeypatch):
