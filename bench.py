@@ -325,6 +325,9 @@ def main() -> None:
             # exact, sf0.1 plans untouched — every join there
             # broadcasts; the engine default leaves this to AQE).
             "spark.sql.join.preferSortMergeJoin": "false",
+            # no console progress bars: they fill stderr (about 48 KB
+            # a run) and the record is the one JSON line on stdout
+            "spark.ui.showConsoleProgress": "false",
         },
     )
     register_views(spark, sf_dir)

@@ -1934,7 +1934,9 @@ def _probe_codes(
     rows produce no output), scans ``_codes_df(path)`` — pruned by the
     codec when it routes — with ``mapInPandas`` through
     :class:`_PartitionTopK`, keeps the global top ``k*refine`` per
-    query, and re-ranks exactly when ``vectors`` is given. Returns
+    query, and re-ranks exactly when ``vectors`` is given. The scan and
+    the re-rank both read that one collected block (the re-rank as a
+    local frame), so the caller's ``queries`` plan runs once. Returns
     (query_id, id, ``codec.approx_col``[, score]); an empty-built index
     or an all-degenerate query block returns that schema with no rows.
 
@@ -1943,7 +1945,9 @@ def _probe_codes(
     which Spark ships with the task binary and drops with the stage —
     an untracked broadcast per probe would outlive it."""
     import numpy as np
-    from pyspark.sql.types import DoubleType, StructField, StructType
+    from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
+
+    from kfai_pipeline_spark.session import local_frame
 
     arts = codec.load(spark, path)
     codes_df = _codes_df(spark, path)
@@ -1963,7 +1967,7 @@ def _probe_codes(
         ]
         if vectors is not None:
             fields.append(StructField("score", DoubleType()))
-        return spark.createDataFrame([], StructType(fields))
+        return local_frame(spark, [], StructType(fields))
     qids = np.array([r[0] for r in q_rows])
     Q = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
     payload = codec.prepare(arts, Q, nprobe)
@@ -2004,9 +2008,14 @@ def _probe_codes(
             "query_id", id_col,
             _rounded("__approx", round_to).alias(codec.approx_col),
         )
+    # re-rank against the block collected above, not the caller's plan
+    q_block = local_frame(
+        spark, q_collected,
+        StructType([qid_field, StructField("__q", ArrayType(DoubleType()))]),
+    )
     return _exact_rerank(
-        cands, vectors, queries, k, codec.approx_col,
-        vec_col, id_col, query_vec_col, query_id_col, round_to,
+        cands, vectors, q_block, k, codec.approx_col,
+        vec_col, id_col, "__q", "query_id", round_to,
     )
 
 

@@ -29,6 +29,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 from pyspark.sql.window import Window
 
 from kfai_pipeline_spark.operators.similarity import (
@@ -41,6 +42,7 @@ from kfai_pipeline_spark.plans.filter_compiler import (
     build_filter,
     compile_filter,
 )
+from kfai_pipeline_spark.session import local_frame
 
 CONTEXT_COUNT = 120  # ref loaders/utils/config.py:16
 TIMESTAMP_BUFFER = 10  # ref loaders/utils/config.py:17
@@ -379,8 +381,6 @@ def retrieve_tiered(
     if id_col not in docs.columns:
         raise ValueError(f"ANN tier needs the index id column {id_col!r} in docs")
 
-    from pyspark.sql.types import StructField, StructType
-
     from kfai_pipeline_spark.operators.index_lifecycle import resolve_index_path
 
     spark = docs.sparkSession
@@ -388,7 +388,8 @@ def retrieve_tiered(
     # version; a plain index dir passes through (one FS pointer read,
     # the same cost class as the probe's stats-row collect)
     index_path = resolve_index_path(spark, index_path)
-    qdf = spark.createDataFrame(
+    qdf = local_frame(
+        spark,
         [(0, list(map(float, query_vec)))],
         "query_id int, embedding array<double>",
     )
@@ -409,7 +410,8 @@ def retrieve_tiered(
             .collect()
         )
         id_type = docs.schema[id_col].dataType
-        cands = spark.createDataFrame(
+        cands = local_frame(
+            spark,
             [(r[0],) for r in cand_rows],
             StructType([StructField(id_col, id_type)]),
         )
@@ -557,8 +559,12 @@ def retrieve_tiered_batch(
     localCheckpoint-materialized so the certificate stats, the round's
     hits, and the final consumer reuse one scan (Spark shares no
     subplans); the doc join-back broadcasts the DISTINCT candidate id
-    set (never a corpus shuffle); and the only driver traffic is the
-    O(#queries)-row per-round status frame deciding who tops up.
+    set (never a corpus shuffle); and the driver traffic is the query
+    block, collected once per pass, plus the O(#queries)-row per-round
+    status frame deciding who tops up. The block is held as a local
+    frame that serves every round, so the caller's ``queries`` plan
+    runs once per pass (plus one distinct-id collect when the block
+    has more than ``max_pending`` rows).
     Queries satisfying the certificate (or exhausting the index) leave
     the pending set; the rest re-probe at ``k_probe * topup_factor`` —
     per-query probe depth, not a uniform worst case.
@@ -575,7 +581,7 @@ def retrieve_tiered_batch(
     shuffled and the codes scan stays one-per-round; only the tiny
     candidate frame evaluates the CASE. A query id in ``queries`` with
     no mapping entry raises (never silently retrieves nothing); the
-    check is one scan of the small queries frame.
+    check reads the held query block.
 
     Same certificate scope as retrieve_tiered: exact only relative to
     each query's probe pool; size ``refine`` (and ``nprobe``) to cover
@@ -606,21 +612,27 @@ def retrieve_tiered_batch(
     spark = docs.sparkSession
     index_path = resolve_index_path(spark, index_path)
     qid = query_id_col
-    if max_pending is not None and max_pending > 0:
-        # Cheap probe first (round-13 advice): the common interactive
-        # batch is far below max_pending — a LIMIT-ed distinct scan
-        # decides whether chunking will happen at all, so the small
-        # case pays one early-terminating job instead of a full
-        # distinct().collect(). The limit is exact: distinct() emits
-        # NULL as one row, and the chunk condition is
-        # (#non-null ids + has_null) > max_pending.
-        head = (
-            queries.select(qid).distinct().limit(max_pending + 1).collect()
-        )
-        if len(head) > max_pending:
-            # O(#queries) driver traffic — the same order as one
-            # round's status frame; only the DISTINCT id list travels
-            id_rows = queries.select(qid).distinct().collect()
+    block = queries.select(
+        F.col(qid), F.col(query_vec_col).alias(query_vec_col)
+    )
+    # The query block is collected once per pass and held: the rounds,
+    # the pending set, the unknown-id check and the final union all
+    # read it as a local frame, so the caller's plan never runs again.
+    # Only a block whose DISTINCT ids overflow max_pending chunks.
+    chunking = max_pending is not None and max_pending > 0
+    held = (
+        block.limit(max_pending + 1).collect() if chunking else block.collect()
+    )
+    if chunking and len(held) > max_pending:
+        # Exact chunk decision: distinct() emits NULL as one row, and
+        # the chunk condition is (#non-null ids + has_null) > max_pending
+        # (duplicate ids can put more rows than that in one pass).
+        # O(#queries) driver traffic — the same order as one round's
+        # status frame; only the DISTINCT id list travels
+        id_rows = queries.select(qid).distinct().collect()
+        if len(id_rows) <= max_pending:
+            held = block.collect()
+        else:
             has_null = any(r[0] is None for r in id_rows)
             # type-stable sort key: mixed-type query ids (e.g. int and
             # str) must not TypeError the chunker — order only needs
@@ -660,16 +672,15 @@ def retrieve_tiered_batch(
             # each chunk pass ends ordered; re-assert the contract's
             # global order over the union
             return out.orderBy(qid, "published_at", "video_id", "start_time")
+    pending = local_frame(spark, held, block.schema)
     if isinstance(parsed, dict):
         pred, known_ids = _per_query_predicate(parsed, qid)
         # NULL ids must fail too: ~isin(...) evaluates to NULL for a
-        # NULL id, which where() drops — the row would dodge this scan
+        # NULL id, which where() drops — the row would dodge this check
         # AND the CASE (NULL condition -> otherwise(False)), silently
         # scoring zero recall for that question (round-10 review catch)
         unknown = (
-            queries.where(
-                F.col(qid).isNull() | ~F.col(qid).isin(known_ids)
-            )
+            pending.where(F.col(qid).isNull() | ~F.col(qid).isin(known_ids))
             .limit(1)
             .collect()
         )
@@ -726,9 +737,6 @@ def retrieve_tiered_batch(
             out = out.where(pred)
         return out.where(F.col("score").isNotNull())
 
-    pending = queries.select(
-        F.col(qid), F.col(query_vec_col).alias(query_vec_col)
-    )
     k_probe = k
     finished: list[DataFrame] = []
     while True:
@@ -905,8 +913,9 @@ def retrieve_multi_topic(
                 (i, [float(x) for x in v])
                 for i, v in enumerate(embedder(branch_queries))
             ]
-            qdf = docs.sparkSession.createDataFrame(
-                branch_rows, "query_id int, embedding array<double>"
+            qdf = local_frame(
+                docs.sparkSession, branch_rows,
+                "query_id int, embedding array<double>",
             )
             unioned = retrieve_tiered_batch(
                 docs,
@@ -1060,8 +1069,8 @@ def cite(
     from kfai_pipeline_spark.functions.datetime_fns import format_citation_time
     from kfai_pipeline_spark.functions.text import watch_url
 
-    spark = docs.sparkSession
-    cited = spark.createDataFrame(
+    cited = local_frame(
+        docs.sparkSession,
         [(c.video_id, int(c.start_time)) for c in citations],
         "cite_vid string, cite_ts int",
     )
@@ -1124,6 +1133,10 @@ def answer_query(
     posture where the reference's stage-4 ANN (pgvector) sits. Topic
     predicates apply post-probe inside the tiered arm, not as
     per-topic fan-out.
+
+    The context runs once: its collected rows (≤ k) feed the
+    synthesizer, and ``sources`` cites a local frame of those same
+    rows, so every cited row is one the synthesizer saw.
     """
     if retrieval not in ("multi_topic", "rrf", "tiered"):
         raise ValueError(f"unknown retrieval strategy: {retrieval!r}")
@@ -1160,7 +1173,15 @@ def answer_query(
             context = retrieve_multi_topic(docs, question, parsed, embedder, k=k)
     else:
         context = retrieve_multi_topic(docs, question, parsed, embedder, k=k)
-    context_rows = [r.asDict() for r in context.collect()]  # ≤ k rows, driver-safe
-    answer_text, citations = synthesizer(question, context_rows)
-    sources = cite(context, citations)
-    return answer_text, sources
+    held = context.collect()  # ≤ k rows, driver-safe
+    answer_text, citations = synthesizer(question, [r.asDict() for r in held])
+    # cite over the rows the synthesizer saw, not a re-run of
+    # ``context``: a re-run costs the whole retrieval again and may
+    # resolve score ties at the k boundary differently
+    cols = ["video_id", "title", "published_at", "start_time"]
+    seen = local_frame(
+        docs.sparkSession,
+        [tuple(r[c] for c in cols) for r in held],
+        StructType([context.schema[c] for c in cols]),
+    )
+    return answer_text, cite(seen, citations)

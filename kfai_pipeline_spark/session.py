@@ -6,6 +6,10 @@ timezone — the reference also forces UTC, see
 for scale (AQE on, skew-join handling, Arrow for the Pandas-UDF
 boundary). On a real cluster only ``master`` and the memory knobs
 change; the SQL conf here is the 100 TB posture.
+
+Rows the driver already holds (a query block, a candidate id list,
+collected context rows) become frames through :func:`local_frame`, so
+using them starts no Python-worker job.
 """
 
 from __future__ import annotations
@@ -13,7 +17,8 @@ from __future__ import annotations
 import os
 from pathlib import Path
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
@@ -88,3 +93,36 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: list, schema: StructType | str
+) -> DataFrame:
+    """A DataFrame over ``rows`` (tuples or Rows, positional to
+    ``schema``) that Spark plans as a ``LocalRelation``.
+
+    ``spark.createDataFrame(<python list>)`` is a parallelized Python
+    RDD, so every action over it starts Python workers on every core
+    (hundreds of ms each time for a 1-row frame). An Arrow table is
+    shipped to the JVM once and scanned there: collecting or
+    broadcasting the frame runs no job. Values convert through each
+    type's ``toInternal`` first, the same conversion the list path
+    applies, so timestamps keep their instant whatever the host's
+    time zone."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = []
+    for i, (field, arrow_field) in enumerate(zip(schema.fields, arrow_schema)):
+        dt = field.dataType
+        values = [r[i] for r in rows]
+        if dt.needConversion():
+            values = [None if v is None else dt.toInternal(v) for v in values]
+        columns.append(pa.array(values, type=arrow_field.type))
+    return spark.createDataFrame(
+        pa.Table.from_arrays(columns, schema=arrow_schema), schema
+    )

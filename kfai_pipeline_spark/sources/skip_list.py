@@ -14,6 +14,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kfai_pipeline_spark.session import local_frame
+
 
 def load_skip_set(spark: SparkSession, path: str) -> DataFrame:
     """Skip file -> 1-column DataFrame (empty when absent, like the
@@ -22,7 +24,7 @@ def load_skip_set(spark: SparkSession, path: str) -> DataFrame:
     if os.path.exists(path):
         with open(path, encoding="utf-8") as f:
             ids = json.load(f)
-    return spark.createDataFrame([(v,) for v in ids], "video_id string")
+    return local_frame(spark, [(v,) for v in ids], "video_id string")
 
 
 _SKIP_SET_WARN_ABOVE = 1_000_000

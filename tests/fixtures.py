@@ -61,3 +61,10 @@ def make_video_records(n: int = 30, seed: int = 7) -> list[dict]:
             rec["published_at"] = 0
         records.append(rec)
     return records
+
+
+def plan_leaf_kinds(df) -> list[str]:
+    """Class names of ``df``'s optimized logical plan leaves
+    (``LocalRelation``, ``LogicalRelation`` for a file scan, ...)."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    return [leaves.apply(i).getClass().getSimpleName() for i in range(leaves.size())]

@@ -486,6 +486,37 @@ def test_answer_query_tiered_lifecycle(tiered_docs):
         )
 
 
+@pytest.mark.parametrize("retrieval", ["multi_topic", "tiered"])
+def test_answer_query_sources_cite_the_synthesized_rows(
+    spark, tiered_docs, tmp_path_factory, retrieval
+):
+    """``sources`` is built from the context rows the synthesizer saw,
+    not from a second run of the retrieval plan: its plan scans no file.
+    A re-run of the brute arm's ``orderBy(score).limit(k)`` plus the
+    dedup window could break score ties at the k boundary differently
+    and silently drop a cited row."""
+    from tests.fixtures import plan_leaf_kinds
+
+    docs, idx = tiered_docs
+    path = str(tmp_path_factory.mktemp("sources") / "docs")
+    docs.write.parquet(path)
+    stored = spark.read.parquet(path)
+    seen: list[dict] = []
+
+    def synthesizer(q, context_rows):
+        seen.extend(context_rows)
+        return "a", [Citation(r["video_id"], r["start_time"]) for r in context_rows]
+
+    _, sources = answer_query(
+        stored, "topic 3 theme 2", lambda q: ParsedQuery(), hash_embed, synthesizer,
+        k=10, retrieval=retrieval, index_path=idx, tier="ann",
+    )
+    assert set(plan_leaf_kinds(sources)) == {"LocalRelation"}
+    got = {(r["video_id"], t) for r in sources.collect() for t in r["timestamps"]}
+    assert got == {(r["video_id"], int(r["start_time"])) for r in seen}
+    assert len(seen) == 10
+
+
 def test_retrieve_tiered_ivfpq_kind_matches_brute_exhaustive(
     spark, tiered_docs, tmp_path_factory
 ):
@@ -918,4 +949,22 @@ def test_retrieve_tiered_batch_chunked_parity(spark, tiered_docs):
         retrieve_tiered_batch(
             docs, queries2, {i: per_query[i] for i in range(5)},
             max_pending=2, **kw
+        )
+
+    # duplicate ids: more rows than max_pending but no more DISTINCT
+    # ids, so the pass holds the whole block instead of chunking
+    dup_rows = [(i % 3, qvecs[i % 3]) for i in range(6)]
+    queries3 = spark.createDataFrame(
+        dup_rows, "query_id int, embedding array<double>"
+    )
+    one3 = retrieve_tiered_batch(docs, queries3, parsed, max_pending=None, **kw)
+    held3 = retrieve_tiered_batch(docs, queries3, parsed, max_pending=3, **kw)
+    a3 = sorted(tuple(r) for r in one3.select(*cols).collect())
+    b3 = sorted(tuple(r) for r in held3.select(*cols).collect())
+    assert a3 == b3 and len(a3) > 0
+    # the unknown-id check reads the held block on this path too
+    with pytest.raises(ValueError, match="no ParsedQuery"):
+        retrieve_tiered_batch(
+            docs, queries3, {i: per_query[i] for i in range(2)},
+            max_pending=3, **kw
         )

@@ -591,7 +591,8 @@ def test_probe_contracts(spark, tmp_path, kind):
     """The probe contract every persisted index kind shares: an
     empty-built index probes to no rows with the contract columns;
     NULL and zero-norm query rows produce no rows; without ``vectors``
-    the probe returns only (query_id, id, approx)."""
+    the probe returns only (query_id, id, approx); with them, the
+    caller's query plan still runs only once."""
     probe = {"sq8": S.sq8_topk, "pq": S.pq_topk, "ivfpq": S.ivfpq_topk}[kind]
     approx = "approx_score" if kind == "sq8" else "approx_dot"
     schema = "vec_id long, embedding array<double>"
@@ -621,6 +622,20 @@ def test_probe_contracts(spark, tmp_path, kind):
     assert bare.columns == ["query_id", "vec_id", approx]
     rows = bare.collect()
     assert len(rows) == 20 and {r.query_id for r in rows} == {0}
+
+    # the caller's query plan runs once: the exact re-rank reads the
+    # block the probe collected, not a second run of ``queries``
+    runs = spark.sparkContext.accumulator(0)
+
+    @F.udf("array<double>")
+    def counted(v):
+        runs.add(1)
+        return v
+
+    counted_q = q.withColumn("embedding", counted("embedding"))
+    got = probe(spark, idx, counted_q, k=5, refine=20, vectors=corpus).collect()
+    assert len(got) == 5
+    assert runs.value == q.count()
 
 
 def test_ann_query_collect_size_guard(spark, monkeypatch):
