@@ -476,10 +476,10 @@ def index_maintain(
     through the root via ``query(use_index=True)`` or any retrieval
     entry point (``resolve_index_path`` accepts it).
 
-    ``kind`` applies to the FIRST build only: an existing root's
-    manifest records its kind, and maintenance follows the manifest —
-    so the CLI chain (which cannot pass kwargs) reruns correctly over
-    a root initialized with either kind."""
+    ``kind`` applies to the FIRST build only: every later operation
+    reads the kind from the index (similarity.index_kind) — so the CLI
+    chain (which cannot pass kwargs) reruns correctly over a root
+    initialized with either kind."""
     from kfai_pipeline_spark.operators.dedup import CacheScope
     from kfai_pipeline_spark.operators.index_lifecycle import (
         init_serving_index,
@@ -488,13 +488,13 @@ def index_maintain(
         read_index_manifest,
         rebuild_if_drifted,
         rebuild_serving_index,
-        serving_index_kind,
         serving_index_path,
         serving_version,
         write_serving_epoch,
     )
     from kfai_pipeline_spark.operators.similarity import (
         _codes_df,
+        index_kind,
         list_epoch_dirs,
     )
 
@@ -513,7 +513,6 @@ def index_maintain(
             n_clusters=n_clusters, m=m,
         )
         return {"action": "init", "chunks_indexed": store.count()}
-    kind = serving_index_kind(spark, root) or kind
     vpath = serving_index_path(spark, root)
     seen = _codes_df(spark, vpath).select("__chunk_id")
     if seen.isEmpty():
@@ -525,7 +524,7 @@ def index_maintain(
             return {"action": "none", "chunks_indexed": 0}
         manifest = read_index_manifest(spark, vpath) or {}
         rebuild_serving_index(
-            store, root, kind=kind, id_col="__chunk_id",
+            store, root, kind=index_kind(spark, vpath), id_col="__chunk_id",
             n_clusters=int(manifest.get("n_clusters", n_clusters)),
             m=int(manifest.get("m", m)),
             opq_iters=int(manifest.get("opq_iters", 0) or 0),
@@ -545,7 +544,6 @@ def index_maintain(
             lambda: store,
             delta.select("__chunk_id", "embedding"),
             root,
-            kind=kind,
             id_col="__chunk_id",
             max_frac_out_of_range=max_frac_out_of_range,
             min_p10_cos=min_p10_cos,
@@ -580,8 +578,7 @@ def index_maintain(
     pruned = list_epoch_tombstones(spark, root)
     next_id = max([*live, *claimed, *pruned, *manifest["folded"], -1]) + 1
     write_serving_epoch(
-        delta, root, next_id, kind=kind, id_col="__chunk_id",
-        writer="app-stage10",
+        delta, root, next_id, id_col="__chunk_id", writer="app-stage10"
     )
     return {"action": "epoch", "chunks_indexed": n, "stats": res["stats"]}
 

@@ -89,10 +89,13 @@ from pyspark.sql import DataFrame, SparkSession
 from kfai_pipeline_spark.operators.partitioning import _list_data_files
 from kfai_pipeline_spark.operators.similarity import (
     _EPOCH_ARTIFACTS,
+    _codec,
     _compact_codes_write,
     _copy_index_artifacts,
     _fs_write_text,
+    _kind_at,
     build_ann_index,
+    index_drift_stats,
     list_epoch_dirs,
     read_index_manifest,
     write_index_manifest,
@@ -308,8 +311,8 @@ def serving_index_path(spark: SparkSession, root: str) -> str:
     v = serving_version(spark, root)
     if v < 0:
         raise FileNotFoundError(
-            f"no committed serving version under {root!r} — create one "
-            "with init_serving_index / rebuild_serving_index"
+            f"no ANN index at {root!r}: no committed serving version — "
+            "create one with init_serving_index / rebuild_serving_index"
         )
     return f"{root}/v_{v}"
 
@@ -334,14 +337,11 @@ def _ivfpq_baseline_or_raise(spark: SparkSession, vpath: str) -> float:
 
 
 def serving_index_kind(spark: SparkSession, root: str) -> str | None:
-    """The serving version's stored index kind (manifest ``kind``), or
-    None when the root holds no committed version or a pre-field
-    manifest — callers fall back to their own default then."""
+    """The serving version's index kind (similarity.index_kind), or
+    None when the root holds no committed version yet — callers that
+    may run before the first build fall back to their own default."""
     v = serving_version(spark, root)
-    if v < 0:
-        return None
-    manifest = read_index_manifest(spark, f"{root}/v_{v}")
-    return None if manifest is None else manifest.get("kind")
+    return None if v < 0 else _kind_at(spark, f"{root}/v_{v}")
 
 
 def resolve_index_path(spark: SparkSession, path: str) -> str:
@@ -447,10 +447,7 @@ def _rebuild_into_claimed(
     :func:`rebuild_serving_index`, run under an acquired version-dir
     claim (the wrapper releases it on any raise)."""
     from kfai_pipeline_spark.operators.dedup import CacheScope
-    from kfai_pipeline_spark.operators.similarity import (
-        index_drift_stats,
-        load_ivfpq_meta,
-    )
+    from kfai_pipeline_spark.operators.similarity import load_ivfpq_meta
 
     spark = docs.sparkSession
     build_ann_index(
@@ -477,8 +474,7 @@ def _rebuild_into_claimed(
         scope = CacheScope()
         try:
             brow = index_drift_stats(
-                sample, dest, kind="ivfpq", vec_col=vec_col, id_col=id_col,
-                scope=scope,
+                sample, dest, vec_col=vec_col, id_col=id_col, scope=scope,
             ).collect()[0]
             if brow["n_rows"] == 0 and routing_sample_mod > 1:
                 # an over-thinned sample (mod > corpus/~10) selects no
@@ -489,8 +485,7 @@ def _rebuild_into_claimed(
                 # sample back to 1.0). Fall back to the full corpus:
                 # correctness over the thinning optimization.
                 brow = index_drift_stats(
-                    docs, dest, kind="ivfpq", vec_col=vec_col,
-                    id_col=id_col, scope=scope,
+                    docs, dest, vec_col=vec_col, id_col=id_col, scope=scope,
                 ).collect()[0]
         finally:
             scope.release()
@@ -822,21 +817,20 @@ def write_serving_epoch(
     batch_df: DataFrame,
     root: str,
     batch_id: int,
-    kind: str = "sq8",
     vec_col: str = "embedding",
     id_col: str = "doc_id",
     writer: str = "adhoc",
 ) -> None:
     """Encode one ingest batch against the SERVING version's frozen
-    artifacts and commit it as shared epoch ``batch_<batch_id>``,
-    stamped with that version's ``artifacts_id`` (the stamp is what
-    keeps a pre-rebuild epoch from being served against post-rebuild
-    artifacts). Overwrite-idempotent PER WRITER: the epoch id is fenced
-    to ``writer`` by an exclusive-created claim sidecar
-    (:func:`_claim_epoch_id`), so a replay by the SAME writer rewrites
-    itself while a different writer whose id sequence collided refuses
-    loudly instead of silently un-serving this batch (round-11 verdict
-    carry). Stage 10 writes as ``app-stage10``; the streaming
+    artifacts (the kind is the version's own) and commit it as shared
+    epoch ``batch_<batch_id>``, stamped with that version's
+    ``artifacts_id`` (the stamp is what keeps a pre-rebuild epoch from
+    being served against post-rebuild artifacts). Overwrite-idempotent
+    PER WRITER: the epoch id is fenced to ``writer`` by an
+    exclusive-created claim sidecar (:func:`_claim_epoch_id`), so a
+    replay by the SAME writer rewrites itself while a different writer
+    whose id sequence collided refuses loudly instead of silently
+    un-serving this batch (round-11 verdict carry). Stage 10 writes as ``app-stage10``; the streaming
     maintainer writes as ``stream:<checkpoint dir>``; direct callers
     share the ``adhoc`` identity (the pre-round-12 semantics). The
     stamp lands AFTER the parquet ``_SUCCESS``; a reader in between
@@ -855,7 +849,7 @@ def write_serving_epoch(
 
     _claim_epoch_id(spark, root, batch_id, writer)
     dest = f"{root}/codes_batches/batch_{batch_id}"
-    encode_epoch(batch_df, vpath, dest, kind=kind, vec_col=vec_col, id_col=id_col)
+    encode_epoch(batch_df, vpath, dest, vec_col=vec_col, id_col=id_col)
     _fs_write_text(
         spark, f"{dest}/{_EPOCH_ARTIFACTS}", str(manifest["artifacts_id"])
     )
@@ -865,7 +859,6 @@ def maintain_serving_index_stream(
     stream_df: DataFrame,
     root: str,
     checkpoint_dir: str,
-    kind: str | None = None,
     vec_col: str = "embedding",
     id_col: str = "doc_id",
     corpus_fn=None,
@@ -935,34 +928,17 @@ def maintain_serving_index_stream(
     through stage 10 alone, or start the stream against a root it
     owns — claims persist, so the colliding id can never be retaken.
 
-    ``kind`` follows the root's MANIFEST (round-10 advice, mirroring
-    app stage 10): the default ``None`` resolves the committed serving
-    version's stored kind at start (falling back to ``"sq8"`` on an
-    uninitialized root), and an EXPLICIT kind that contradicts the
-    manifest raises here — at start, loudly — instead of passing the
-    sq8 config check and then crashing in-fold on the first batch
-    reading the other kind's artifacts dir (an error that looks like
-    index corruption)."""
+    The index kind is the serving version's own (similarity.
+    index_kind), read at start — a root holding no index raises here,
+    not in the first fold — and again by every fold, so it follows
+    rebuilds."""
     spark = stream_df.sparkSession
-    stored = serving_index_kind(spark, root)
-    if kind is None:
-        kind = stored or "sq8"
-    elif stored is not None and stored != kind:
-        raise ValueError(
-            f"index root {root!r} serves a committed {stored!r} index "
-            f"but the maintainer was started with kind={kind!r} — "
-            "maintenance follows the manifest; drop the kind argument "
-            "or pass the matching kind"
-        )
-    if kind not in ("sq8", "ivfpq"):
-        raise ValueError(f"unknown index kind: {kind!r}")
+    vpath = resolve_index_path(spark, root)
+    kind = _kind_at(spark, vpath)
     if corpus_fn is not None and kind == "ivfpq" and min_p10_cos is None:
-        v = serving_version(spark, root)
         # the SAME lookup the in-fold policy performs — raises here, at
-        # start, when the root is uninitialized or pre-baseline
-        _ivfpq_baseline_or_raise(
-            spark, f"{root}/v_{v}" if v >= 0 else root
-        )
+        # start, when the root is pre-baseline
+        _ivfpq_baseline_or_raise(spark, vpath)
 
     from kfai_pipeline_spark.streaming.sinks import write_stream_foreach_batch
 
@@ -978,7 +954,7 @@ def maintain_serving_index_stream(
             drift_scope = CacheScope()
             try:
                 res = rebuild_if_drifted(
-                    corpus_fn, batch_df, root, kind=kind,
+                    corpus_fn, batch_df, root,
                     max_frac_out_of_range=max_frac_out_of_range,
                     min_p10_cos=min_p10_cos, ivfpq_margin=ivfpq_margin,
                     vec_col=vec_col, id_col=id_col,
@@ -991,8 +967,7 @@ def maintain_serving_index_stream(
             if res["rebuilt"]:
                 return
         write_serving_epoch(
-            batch_df, root, batch_id, kind=kind, vec_col=vec_col,
-            id_col=id_col,
+            batch_df, root, batch_id, vec_col=vec_col, id_col=id_col,
             # writer identity = the checkpoint (stable across restarts
             # of THIS stream, distinct from stage 10 and from any other
             # stream): replays of our own batch ids pass the epoch-id
@@ -1007,7 +982,6 @@ def maintain_serving_index_stream(
 def compact_serving_index(
     spark: SparkSession,
     root: str,
-    kind: str = "sq8",
     target_bytes: int = 128 * 1024 * 1024,
     force_reclaim: bool = False,
     _after_pin=None,
@@ -1028,14 +1002,11 @@ def compact_serving_index(
 
     Returns {version, files_before, files_after, n_rows,
     folded_epochs}."""
-    if kind not in ("sq8", "ivfpq"):
-        raise ValueError(f"unknown index kind: {kind!r}")
     from kfai_pipeline_spark.operators.dedup import list_success_dirs
 
     cur = serving_version(spark, root)
-    if cur < 0:
-        raise FileNotFoundError(f"nothing to compact under {root!r}")
-    src = f"{root}/v_{cur}"
+    src = f"{root}/v_{cur}" if cur >= 0 else root
+    codec = _codec(_kind_at(spark, src))  # raises on a root with no index
     manifest = read_index_manifest(spark, src)
     if manifest is None:
         raise ValueError(
@@ -1072,9 +1043,9 @@ def compact_serving_index(
     _acquire_version_dir(spark, root, dest, cur, force_reclaim)
     try:
         files_before = _compact_codes_write(
-            spark, codes, files, dest, kind, target_bytes
+            spark, codes, files, dest, codec, target_bytes
         )
-        _copy_index_artifacts(spark, src, dest, kind)
+        _copy_index_artifacts(spark, src, dest)
         # folded is bounded to epochs that still EXIST: membership only
         # matters for dirs a probe could list, so ids of GC'd epochs
         # drop out here — without this the list grows monotonically
@@ -1119,7 +1090,6 @@ def rebuild_if_drifted(
     docs,  # DataFrame, or a zero-arg callable invoked only on breach
     incoming: DataFrame,
     root: str,
-    kind: str = "sq8",
     max_frac_out_of_range: float = 0.05,
     min_p10_cos: float | None = None,
     ivfpq_margin: float = 0.05,
@@ -1138,7 +1108,8 @@ def rebuild_if_drifted(
     :func:`rebuild_serving_index`) into a fresh version and flip the
     pointer; otherwise change nothing.
 
-    Breach policy: sq8 — ``frac_out_of_range > max_frac_out_of_range``
+    Breach policy, by the serving version's kind: sq8 —
+    ``frac_out_of_range > max_frac_out_of_range``
     (saturating rows degrade approximate scores); ivfpq —
     ``p10_best_cos < min_p10_cos``. When ``min_p10_cos`` is None the
     ivfpq threshold defaults to the serving manifest's
@@ -1158,18 +1129,16 @@ def rebuild_if_drifted(
     maintainer passes its ``corpus_fn`` through unevaluated).
 
     Returns {rebuilt, stats, serving}."""
-    from kfai_pipeline_spark.operators.similarity import index_drift_stats
-
     spark = incoming.sparkSession
     vpath = serving_index_path(spark, root)
+    kind = _kind_at(spark, vpath)
     if kind == "ivfpq" and min_p10_cos is None:
         min_p10_cos = (
             _ivfpq_baseline_or_raise(spark, vpath) - ivfpq_margin
         )
     stats = (
         index_drift_stats(
-            incoming, vpath, kind=kind, vec_col=vec_col, id_col=id_col,
-            scope=scope,
+            incoming, vpath, vec_col=vec_col, id_col=id_col, scope=scope
         )
         .collect()[0]
         .asDict()

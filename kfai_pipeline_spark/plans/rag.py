@@ -34,7 +34,9 @@ from pyspark.sql.window import Window
 
 from kfai_pipeline_spark.operators.similarity import (
     _as_double,
-    _serving_kind,
+    _serving_probe,
+    append_ann_index,
+    build_ann_index,
     cosine,
 )
 from kfai_pipeline_spark.plans.filter_compiler import (
@@ -247,8 +249,6 @@ def build_retrieval_index(
     rotation into the index — probes/appends/epochs read it from the
     artifacts; results are identical in the exhaustive-probe regime
     and the operating curve improves on clustered corpora."""
-    from kfai_pipeline_spark.operators.similarity import build_ann_index
-
     build_ann_index(
         docs, path, kind=kind, vec_col=vec_col, id_col=id_col,
         n_clusters=n_clusters, m=m, opq_iters=opq_iters,
@@ -260,18 +260,17 @@ def append_retrieval_index(
     path: str,
     vec_col: str = "embedding",
     id_col: str = "doc_id",
-    kind: str = "sq8",
 ) -> None:
-    """Incrementally add ``docs`` to a persisted serving index — the
-    daily-ingest shape: the trained artifacts (SQ8 stats / IVFPQ
-    coarse book + codebooks) stay frozen and only the delta's codes
-    are written (operators/similarity.py ``append_sq8_index`` /
-    ``append_ivfpq_index`` document the saturation/drift contracts;
-    rebuild cadence is the README decision table's freshness column).
-    Parity rows q128/q129: build(A)+append(B) serves row-identically
-    to brute over A∪B in the exhaustive-probe regime."""
-    _, append = _serving_kind(kind)
-    append(docs, path, vec_col=vec_col, id_col=id_col)
+    """Incrementally add ``docs`` to a persisted serving index of
+    either kind (read from the index) — the daily-ingest shape: the
+    trained artifacts (SQ8 stats / IVFPQ coarse book + codebooks) stay
+    frozen and only the delta's codes are written
+    (operators/similarity.py ``append_ann_index`` documents the
+    saturation/drift contracts; rebuild cadence is the README decision
+    table's freshness column). Parity rows q128/q129: build(A)+append(B)
+    serves row-identically to brute over A∪B in the exhaustive-probe
+    regime."""
+    append_ann_index(docs, path, vec_col=vec_col, id_col=id_col)
 
 
 def retrieve_tiered(
@@ -346,7 +345,7 @@ def retrieve_tiered(
     """
     if tier not in ("auto", "brute", "ann"):
         raise ValueError(f"unknown retrieval tier: {tier!r}")
-    probe, _ = _serving_kind(index_kind)
+    probe = _serving_probe(index_kind)
     if tier == "auto":
         # parquet row-count is metadata-only (footer counts); at serving
         # time the corpus size is known at index-build and callers pass
@@ -603,7 +602,7 @@ def retrieve_tiered_batch(
     """
     if index_path is None:
         raise ValueError("retrieve_tiered_batch needs index_path")
-    probe, _ = _serving_kind(index_kind)
+    probe = _serving_probe(index_kind)
     if id_col not in docs.columns:
         raise ValueError(f"batched tier needs the index id column {id_col!r}")
 

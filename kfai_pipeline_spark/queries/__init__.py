@@ -34,31 +34,9 @@ __all__ = ["REGISTRY", "Query", "register"]
 # official CORRECTNESS row; update them each round from CORRECTNESS_r{N}.json.
 # ---------------------------------------------------------------------------
 _SNAPSHOT_HISTORY: tuple[frozenset[str], ...] = (
-    # last official row: round 12 (r12's window minus the 11 names
-    # round 14 re-confirmed) — these 39 lead the r15 window after the
-    # restructure-priority names below
+    # last official row: round 13 (CORRECTNESS_r13.json's window minus
+    # the 11 names round 15 re-confirmed)
     frozenset({
-        "q100_rolling_zscore", "q102_incremental_agg",
-        "q103_bucketed_join", "q106_truncate_longdocs",
-        "q107_zscore_backfill", "q108_segment_dedup",
-        "q109_dsir_sample", "q110_quantized_ann",
-        "q111_sq8_index", "q112_pq_index",
-        "q124_rag_multi_topic", "q125_rag_tiered_ivfpq",
-        "q126_rag_tiered_batch", "q127_rag_multi_topic_tiered",
-        "q128_rag_index_append_sq8", "q129_rag_index_append_ivfpq",
-        "q130_rag_index_stream", "q131_index_drift",
-        "q21_dedup", "q22", "q23", "q41_cube", "q42_fullouter",
-        "q43_cross", "q61_decontaminate", "q62_repetition",
-        "q63_hash_sample", "q64_stratified_sample", "q65_quantiles",
-        "q66_pii_redact", "q67_shard_pack", "q68_boilerplate_strip",
-        "q87_composite_resume", "q88_skiplist_roundtrip",
-        "q89_asof_tolerance", "q90_cluster_assign",
-        "q93_multimodal_video", "q95_scd2_history",
-        "q97_merge_upsert",
-    }),
-    # last official row: round 13 (CORRECTNESS_r13.json's window)
-    frozenset({
-        "q01", "q01_count", "q02", "q03", "q04", "q05", "q06", "q07",
         "q08", "q09", "q10", "q101_hybrid_rrf", "q113_ivfpq_index",
         "q114_rolling_bucketed", "q115_bloom_decontam",
         "q116_zorder_scan", "q117_hard_negatives",
@@ -70,10 +48,9 @@ _SNAPSHOT_HISTORY: tuple[frozenset[str], ...] = (
         "q39_asof", "q40_quality", "q44_grouping_sets", "q45_stats",
         "q46_sketch", "q60_correlated_subquery", "q70_fixed_chunks",
         "q71_curation_funnel", "q73_mixture_sample",
-        "q74_semantic_dedup", "q75_unigram_logprob",
-        "q77_context_pack", "q81_tfidf_terms", "q91_training_order",
-        "q92_bigram_logprob", "q94_dup_spans", "q96_bm25",
-        "q98_heavy_hitters", "q99_source_curation",
+        "q74_semantic_dedup", "q75_unigram_logprob", "q77_context_pack",
+        "q91_training_order", "q96_bm25", "q98_heavy_hitters",
+        "q99_source_curation",
     }),
     # last official row: round 14 (CORRECTNESS_r14.json's window)
     frozenset({
@@ -94,17 +71,36 @@ _SNAPSHOT_HISTORY: tuple[frozenset[str], ...] = (
         "q69_radius_search", "q78_mixture_epochs", "q11", "q12", "q13",
         "q14", "q15", "q16", "q17", "q18", "q19", "q20", "q21",
     }),
+    # last official row: round 15 (CORRECTNESS_r15.json's window)
+    frozenset({
+        "q01", "q01_count", "q02", "q03", "q04", "q05", "q06", "q07",
+        "q100_rolling_zscore", "q102_incremental_agg",
+        "q103_bucketed_join", "q106_truncate_longdocs",
+        "q107_zscore_backfill", "q108_segment_dedup",
+        "q109_dsir_sample", "q110_quantized_ann", "q111_sq8_index",
+        "q112_pq_index", "q124_rag_multi_topic",
+        "q125_rag_tiered_ivfpq", "q126_rag_tiered_batch",
+        "q127_rag_multi_topic_tiered", "q128_rag_index_append_sq8",
+        "q129_rag_index_append_ivfpq", "q130_rag_index_stream",
+        "q131_index_drift", "q21_dedup", "q22", "q23", "q41_cube",
+        "q42_fullouter", "q43_cross", "q61_decontaminate",
+        "q62_repetition", "q63_hash_sample", "q64_stratified_sample",
+        "q65_quantiles", "q66_pii_redact", "q67_shard_pack",
+        "q68_boilerplate_strip", "q81_tfidf_terms",
+        "q87_composite_resume", "q88_skiplist_roundtrip",
+        "q89_asof_tolerance", "q90_cluster_assign",
+        "q92_bigram_logprob", "q93_multimodal_video", "q94_dup_spans",
+        "q95_scd2_history", "q97_merge_upsert",
+    }),
 )
 
 # Names whose query body was RESTRUCTURED after their last official
-# CORRECTNESS row (r14 rebuilt all three; their bucket above is r13,
-# i.e. pre-restructure). They jump the staleness queue and LEAD the
-# next window so the driver oracle re-confirms the rewritten plans —
-# the r14 verdict's item 1(b). Clear this tuple once they regain an
-# official row.
-_RESTRUCTURED_SINCE_SNAPSHOT: tuple[str, ...] = (
-    "q81_tfidf_terms", "q92_bigram_logprob", "q94_dup_spans",
-)
+# CORRECTNESS row (r15 replaced q84's collect_list arrays with stacked
+# window mins; its bucket above is r14, i.e. pre-restructure). They
+# jump the staleness queue and LEAD the next window so the driver
+# oracle re-confirms the rewritten plans — the r14 verdict's item
+# 1(b). Clear this tuple once they regain an official row.
+_RESTRUCTURED_SINCE_SNAPSHOT: tuple[str, ...] = ("q84_funnel",)
 
 
 def _validate_history(registry: dict[str, Query]) -> None:

@@ -3290,7 +3290,7 @@ def _tiered_rag_fixture(spark, sf_dir, kind, qname, n_clusters=8,
             )
             append_retrieval_index(
                 fixture.where(F.col("doc_id") % 2 == 1), idx,
-                id_col="doc_id", kind=kind,
+                id_col="doc_id",
             )
         else:
             # two_phase with an EMPTY seed half (the empty-input sweep:
@@ -3898,7 +3898,7 @@ def q127_rag_multi_topic_tiered(spark, sf_dir):
     oracle=_TIERED_RAG_ORACLE,
     doc=(
         "Incremental SQ8 index maintenance (similarity."
-        "append_sq8_index / rag.append_retrieval_index — the Faiss "
+        "append_ann_index / rag.append_retrieval_index — the Faiss "
         "add-after-train shape): the per-dim codebook is frozen at "
         "build; the daily ingest's codes APPEND without re-encoding "
         "the corpus (at 10^10 vectors a rebuild reads+writes every "
@@ -3917,7 +3917,7 @@ def q128_rag_index_append_sq8(spark, sf_dir):
     oracle=_TIERED_RAG_ORACLE,
     doc=(
         "Incremental IVFPQ index maintenance (similarity."
-        "append_ivfpq_index): coarse book + PQ codebooks are train-"
+        "append_ann_index): coarse book + PQ codebooks are train-"
         "time artifacts and stay frozen; appended vectors assign + "
         "residual-encode against them and land in the cluster_id "
         "partition layout via dynamic-partition APPEND (only the "
@@ -4002,7 +4002,7 @@ def q130_rag_index_stream(spark, sf_dir):
             .parquet(f"{src}/f*")
         )
         q = maintain_ann_index_stream(
-            stream, idx, os.path.join(root, "ckpt"), kind="sq8"
+            stream, idx, os.path.join(root, "ckpt")
         )
         q.awaitTermination()
         # completion marker AFTER the full drain: a crashed partial run
@@ -4146,7 +4146,7 @@ def q131_index_drift(spark, sf_dir):
         .otherwise(S._as_double("embedding"))
         .alias("embedding"),
     )
-    return index_drift_stats(incoming, idx, kind="sq8")
+    return index_drift_stats(incoming, idx)
 
 
 # ------ Q133: committed serving-pointer lifecycle (init/stream/compact)
@@ -4223,13 +4223,13 @@ def q133_rag_serving_lifecycle(spark, sf_dir):
             .parquet(f"{src}/f*")
         )
         q = maintain_serving_index_stream(
-            stream, idx, os.path.join(root, "ckpt"), kind="sq8"
+            stream, idx, os.path.join(root, "ckpt")
         )
         q.awaitTermination()
         # fold the streamed epochs + flip the committed pointer; the
         # serve below goes through the ROOT, so it proves resolution
         # reads the post-compaction version
-        stats = compact_serving_index(spark, idx, kind="sq8")
+        stats = compact_serving_index(spark, idx)
         assert stats["version"] == 1, stats
         with open(done, "w") as fh:
             fh.write("ok")
@@ -4347,12 +4347,12 @@ def q135_rag_selfheal_stream(spark, sf_dir):
             drifted = spark.read.parquet(f"{src}/f0")
             expect_fire = drifted.limit(1).count() > 0 and (
                 index_drift_stats(
-                    drifted, f"{idx}/v_0", kind="sq8", id_col="doc_id"
+                    drifted, f"{idx}/v_0", id_col="doc_id"
                 ).collect()[0]["frac_out_of_range"]
                 > 0.05
             )
             q = maintain_serving_index_stream(
-                stream, idx, os.path.join(root, "ckpt"), kind="sq8",
+                stream, idx, os.path.join(root, "ckpt"),
                 corpus_fn=lambda: fixture, max_frac_out_of_range=0.05,
             )
             q.awaitTermination()
@@ -4583,8 +4583,8 @@ def q134_rag_drift_rebuild(spark, sf_dir):
             # disproved (the odd half legitimately overshoots the even
             # half's per-dim min/max when n is tiny)
             quiet = rebuild_if_drifted(
-                fixture, incoming.limit(0), idx, kind="sq8",
-                id_col="doc_id", max_frac_out_of_range=0.05,
+                fixture, incoming.limit(0), idx, id_col="doc_id",
+                max_frac_out_of_range=0.05,
             )
             assert quiet["rebuilt"] is False, quiet
             assert serving_version(spark, idx) == 0, quiet
@@ -4595,7 +4595,7 @@ def q134_rag_drift_rebuild(spark, sf_dir):
                 ).alias("embedding"),
             )
             fired = rebuild_if_drifted(
-                fixture, incoming_drifted, idx, kind="sq8", id_col="doc_id",
+                fixture, incoming_drifted, idx, id_col="doc_id",
                 max_frac_out_of_range=0.05,
             )
             # the policy wiring: rebuilt iff the measurement breached

@@ -238,7 +238,10 @@ def q06(spark, sf_dir):
         "are exact while rows_per_group x ~1.1e11 < 2^63 — SF ~55 on "
         "this 4-6-group shape; beyond that swap the two product SUMs "
         "to .cast('decimal(38,0)') (+21% on B1 at sf0.1, headroom "
-        "1e27 rows/group) — non-ANSI Spark wraps LONG silently."
+        "1e27 rows/group). Past the bound the LONG sum overflows; "
+        "under ANSI mode (spark.sql.ansi.enabled, Spark 4.1's "
+        "default) that raises ARITHMETIC_OVERFLOW rather than "
+        "returning a wrapped sum."
     ),
 )
 def q07(spark, sf_dir):

@@ -1,16 +1,21 @@
 """Continuous ANN-index maintenance from an ingest stream — the
-streaming twin of X52 (``similarity.append_sq8_index`` /
-``append_ivfpq_index``), keeping the serving index fresh without ever
-re-encoding the corpus.
+streaming twin of X52 (``similarity.append_ann_index``), keeping the
+serving index fresh without ever re-encoding the corpus.
 
 The 100 TB workflow: the batch build (seed/backfill) trains the
 index's artifacts — SQ8 per-dim stats, IVFPQ coarse book + codebooks —
 and those stay FROZEN; each arriving micro-batch of documents encodes
-against them (one shuffle-free mapInPandas stage) and lands as codes.
-Every probe (``sq8_topk`` / ``ivfpq_topk``, and therefore the whole
+against them (one shuffle-free mapInPandas stage, the kind's one
+encoder in ``similarity._write_codes``) and lands as codes. Every
+probe (``sq8_topk`` / ``ivfpq_topk``, and therefore the whole
 ``retrieve_tiered`` serving plan) reads the batch-built codes UNIONED
 with every committed streamed epoch (``similarity._codes_df``), so
 freshly ingested documents are retrievable at the next trigger.
+
+The index kind is read from the index (``similarity.index_kind``: the
+manifest's ``kind``, else the artifacts dir) — chosen once at build,
+never restated here. Starting a maintainer on a path that holds no
+index raises at start.
 
 Exactly-once without a transactional store: each epoch's codes land in
 their own ``codes_batches/batch_<id>/`` directory written with
@@ -37,79 +42,40 @@ def encode_epoch(
     batch_df: DataFrame,
     artifacts_path: str,
     dest: str,
-    kind: str = "sq8",
     vec_col: str = "embedding",
     id_col: str = "doc_id",
 ) -> None:
-    """Encode one micro-batch against the FROZEN artifacts at
-    ``artifacts_path`` (an index dir carrying stats / books) and land
-    it as the overwrite-idempotent epoch directory ``dest`` — the
-    shared kernel of :func:`maintain_ann_index_stream` (plain index
-    dirs) and operators/index_lifecycle.py's versioned maintainer
-    (root-level shared epochs). NULL / zero-norm vectors are excluded
-    by the encode kernels (the degenerate-vector contract); an
-    empty-built index raises (no artifacts to encode against)."""
-    import numpy as np
+    """Encode one micro-batch against the FROZEN artifacts of the index
+    at ``artifacts_path`` and land it as the overwrite-idempotent epoch
+    directory ``dest`` — the shared kernel of
+    :func:`maintain_ann_index_stream` (plain index dirs) and
+    operators/index_lifecycle.py's versioned maintainer (root-level
+    shared epochs). The epoch is written unpartitioned (see
+    ``similarity._write_codes``). NULL / zero-norm vectors are excluded
+    by the encoders (the degenerate-vector contract); an empty-built
+    index raises (no artifacts to encode against)."""
+    from kfai_pipeline_spark.operators.similarity import _trained, _write_codes
 
-    from kfai_pipeline_spark.operators import similarity as S
-
-    if kind not in ("sq8", "ivfpq"):
-        raise ValueError(f"unknown index kind: {kind!r}")
-    spark = batch_df.sparkSession
-    if kind == "sq8":
-        srow = spark.read.parquet(f"{artifacts_path}/stats").collect()[0]
-        mn = np.array(srow["__mn"], dtype=np.float64)
-        mx = np.array(srow["__mx"], dtype=np.float64)
-        if mn.size == 0:
-            raise ValueError(
-                "cannot maintain an empty-built SQ8 index (no stats "
-                "row) — seed it with write_sq8_index first"
-            )
-        S._sq8_encoded(batch_df, mn, mx, vec_col, id_col).write.mode(
-            "overwrite"
-        ).parquet(dest)
-    else:
-        centroids, codebooks = S.load_ivfpq_meta(spark, artifacts_path)
-        if not centroids or not codebooks:
-            raise ValueError(
-                "cannot maintain an empty-built IVFPQ index (no "
-                "trained books) — seed it with write_ivfpq_index first"
-            )
-        encoded, bc = S._ivfpq_encoded(
-            batch_df, centroids, codebooks, vec_col, id_col,
-            rotation=S.load_ivfpq_rotation(spark, artifacts_path),
-        )
-        # UNPARTITIONED epoch write, cluster_id as a plain column:
-        # a zero-row dynamic-partition write emits NO part files
-        # but still commits _SUCCESS (write_ivfpq_index's
-        # documented hazard class), and one all-degenerate
-        # micro-batch would then poison every later _codes_df read
-        # with UNABLE_TO_INFER_SCHEMA. A plain write always leaves
-        # a schema-bearing footer. Epochs are small between
-        # compactions, so the probe's cluster filter row-filters
-        # them (row-group stats still prune); partition-level
-        # pruning applies to the compacted base, which compaction
-        # restores.
-        encoded.repartition("cluster_id").write.mode(
-            "overwrite"
-        ).parquet(dest)
-        bc.destroy()
+    codec, arts = _trained(batch_df.sparkSession, artifacts_path, "maintain")
+    _write_codes(
+        codec, batch_df, arts, dest, "overwrite", vec_col, id_col,
+        partition_by=False,
+    )
 
 
 def maintain_ann_index_stream(
     stream_df: DataFrame,
     index_path: str,
     checkpoint_dir: str,
-    kind: str = "sq8",
     vec_col: str = "embedding",
     id_col: str = "doc_id",
 ):
     """Start an AvailableNow query folding each micro-batch's vectors
     into the persisted index at ``index_path`` (built beforehand with
-    ``rag.build_retrieval_index`` / ``similarity.write_*_index`` — the
-    artifacts to encode against must exist; an empty-built index
+    ``rag.build_retrieval_index`` / ``similarity.build_ann_index`` — a
+    path holding no index raises here, at start; an empty-built index
     raises in the first epoch, same as the batch append). NULL /
-    zero-norm vectors are excluded by the encode kernels (the
+    zero-norm vectors are excluded by the encoders (the
     degenerate-vector contract). Returns the started query.
 
     ``index_path`` here is a PLAIN index dir and epochs land inside it
@@ -118,17 +84,17 @@ def maintain_ann_index_stream(
     versioned layout (shared root epochs + manifest membership + the
     committed serving pointer) use index_lifecycle.
     maintain_serving_index_stream."""
-    if kind not in ("sq8", "ivfpq"):
-        raise ValueError(f"unknown index kind: {kind!r}")
-
+    from kfai_pipeline_spark.operators.similarity import _kind_at
     from kfai_pipeline_spark.streaming.sinks import write_stream_foreach_batch
+
+    # a path holding no index fails here, at start, not in the first fold
+    _kind_at(stream_df.sparkSession, index_path)
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         encode_epoch(
             batch_df,
             index_path,
             f"{index_path}/codes_batches/batch_{batch_id}",
-            kind=kind,
             vec_col=vec_col,
             id_col=id_col,
         )

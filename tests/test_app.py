@@ -350,7 +350,6 @@ def test_index_stage_epoch_id_clears_pruned_folded(
     from kfai_pipeline_spark.operators.index_lifecycle import (
         compact_serving_index,
         prune_serving_index,
-        serving_index_kind,
     )
 
     wd = str(tmp_path_factory.mktemp("ws_prune"))
@@ -361,8 +360,7 @@ def test_index_stage_epoch_id_clears_pruned_folded(
     app.run_chain(spark, cat2, wd, "1>4>5")
     s = app.index_maintain(spark, wd)
     if s["action"] == "epoch":  # drift may legitimately rebuild at tiny n
-        kind = serving_index_kind(spark, root)
-        compact_serving_index(spark, root, kind=kind)
+        compact_serving_index(spark, root)
         prune_serving_index(spark, root, retain_versions=1)
     cat3 = _add_video(cat2, "vidPRN00002", 3999)
     app.run_chain(spark, cat3, wd, "1>4>5")
@@ -655,14 +653,14 @@ def test_index_stage_legacy_claimless_pruned_id_never_reused(
     rows(0, 30).write.mode("overwrite").parquet(store)  # corpus truth
 
     # fold + r13 prune: the dir goes, the tombstone stays
-    compact_serving_index(spark, root, kind="sq8")  # v_1 folds {0}
+    compact_serving_index(spark, root)  # v_1 folds {0}
     prune_serving_index(spark, root, retain_versions=1)  # GC batch_0 + v_0
     assert list_epoch_tombstones(spark, root) == [0]
     assert not os.path.exists(os.path.join(root, "codes_batches", "batch_0"))
 
     # a later cycle drops the id from every RETAINED manifest: v_2
     # folds nothing, and pruning to it deletes v_1 (folded=[0])
-    compact_serving_index(spark, root, kind="sq8")
+    compact_serving_index(spark, root)
     prune_serving_index(spark, root, retain_versions=1)
     m = read_index_manifest(spark, serving_index_path(spark, root))
     assert list(m.get("folded", [])) == []

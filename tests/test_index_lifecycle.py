@@ -124,7 +124,7 @@ def test_epoch_append_serves_through_root(spark, corpus, prebuilt, tmp_path_fact
     root = prebuilt("sq8", "even")
     even = corpus.where(F.col("doc_id") % 2 == 0)
     odd = corpus.where(F.col("doc_id") % 2 == 1)
-    write_serving_epoch(odd, root, 0, kind="sq8")
+    write_serving_epoch(odd, root, 0)
     got = sorted(tuple(r) for r in _serve(corpus, root).select(*COLS).collect())
     want = sorted(tuple(r) for r in _brute(corpus).select(*COLS).collect())
     assert got == want
@@ -137,13 +137,13 @@ def test_compact_race_epoch_included_or_still_served(spark, corpus, prebuilt, tm
     shared directory) — never silently dropped."""
     root = prebuilt("sq8", "third0")
     thirds = [corpus.where(F.col("doc_id") % 3 == r) for r in range(3)]
-    write_serving_epoch(thirds[1], root, 0, kind="sq8")
+    write_serving_epoch(thirds[1], root, 0)
 
     def racing_epoch():
-        write_serving_epoch(thirds[2], root, 1, kind="sq8")
+        write_serving_epoch(thirds[2], root, 1)
 
     stats = compact_serving_index(
-        spark, root, kind="sq8", _after_pin=racing_epoch
+        spark, root, _after_pin=racing_epoch
     )
     assert stats["version"] == 1 and stats["folded_epochs"] == 1
     m = read_index_manifest(spark, f"{root}/v_1")
@@ -152,7 +152,7 @@ def test_compact_race_epoch_included_or_still_served(spark, corpus, prebuilt, tm
     want = sorted(tuple(r) for r in _brute(corpus).select(*COLS).collect())
     assert got == want  # ...but IS still served through the root
     # the next compaction folds it into the base
-    stats2 = compact_serving_index(spark, root, kind="sq8")
+    stats2 = compact_serving_index(spark, root)
     assert stats2["version"] == 2 and stats2["folded_epochs"] == 1
     assert read_index_manifest(spark, f"{root}/v_2")["folded"] == [0, 1]
     got2 = sorted(tuple(r) for r in _serve(corpus, root).select(*COLS).collect())
@@ -161,7 +161,7 @@ def test_compact_race_epoch_included_or_still_served(spark, corpus, prebuilt, tm
 
 def test_pointer_lost_recovers_from_committed_listing(spark, corpus, prebuilt, tmp_path_factory):
     root = prebuilt("sq8", "corpus")
-    compact_serving_index(spark, root, kind="sq8")
+    compact_serving_index(spark, root)
     os.remove(os.path.join(root, "_LATEST"))
     assert serving_version(spark, root) == 1  # listing recovery, not -1
     got = sorted(tuple(r) for r in _serve(corpus, root).select(*COLS).collect())
@@ -175,7 +175,7 @@ def test_rebuild_bumps_artifacts_and_retires_stale_epochs(spark, corpus, prebuil
     root = prebuilt("sq8", "even")
     even = corpus.where(F.col("doc_id") % 2 == 0)
     odd = corpus.where(F.col("doc_id") % 2 == 1)
-    write_serving_epoch(odd, root, 0, kind="sq8")
+    write_serving_epoch(odd, root, 0)
     rebuild_serving_index(corpus, root, kind="sq8")
     assert serving_version(spark, root) == 1
     m = read_index_manifest(spark, f"{root}/v_1")
@@ -191,14 +191,14 @@ def test_rebuild_bumps_artifacts_and_retires_stale_epochs(spark, corpus, prebuil
 def test_rebuild_if_drifted_policy(spark, corpus, prebuilt, tmp_path_factory):
     root = prebuilt("sq8", "corpus")
     fresh = corpus.select("doc_id", "embedding")
-    out = rebuild_if_drifted(corpus, fresh, root, kind="sq8")
+    out = rebuild_if_drifted(corpus, fresh, root)
     assert out["rebuilt"] is False and out["serving"].endswith("/v_0")
     assert serving_version(spark, root) == 0
     drifted = corpus.select(
         "doc_id",
         F.transform("embedding", lambda x: x * 3.0).alias("embedding"),
     )
-    out2 = rebuild_if_drifted(corpus, drifted, root, kind="sq8")
+    out2 = rebuild_if_drifted(corpus, drifted, root)
     assert out2["rebuilt"] is True and out2["serving"].endswith("/v_1")
     assert out2["stats"]["frac_out_of_range"] > 0.05
     assert serving_version(spark, root) == 1
@@ -218,10 +218,10 @@ def test_rebuild_if_drifted_ivfpq_needs_baseline(spark, corpus, prebuilt, tmp_pa
     write_index_manifest(spark, f"{root}/v_0", 0, [])
     with pytest.raises(ValueError, match="min_p10_cos"):
         rebuild_if_drifted(
-            corpus, corpus.select("doc_id", "embedding"), root, kind="ivfpq"
+            corpus, corpus.select("doc_id", "embedding"), root
         )
     out = rebuild_if_drifted(
-        corpus, corpus.select("doc_id", "embedding"), root, kind="ivfpq",
+        corpus, corpus.select("doc_id", "embedding"), root,
         min_p10_cos=-1.1,  # unreachable: confidence always >= -1
     )
     assert out["rebuilt"] is False
@@ -239,7 +239,7 @@ def test_ivfpq_routing_baseline_default_policy(spark, corpus, prebuilt, tmp_path
     # fresh incoming == the build corpus: p10 equals the baseline, so
     # baseline - margin never breaches — deterministic no-fire
     fresh = rebuild_if_drifted(
-        corpus, corpus.select("doc_id", "embedding"), root, kind="ivfpq"
+        corpus, corpus.select("doc_id", "embedding"), root
     )
     assert fresh["rebuilt"] is False
     assert fresh["stats"]["p10_best_cos"] >= m0["routing_baseline"] - 0.05
@@ -252,14 +252,14 @@ def test_ivfpq_routing_baseline_default_policy(spark, corpus, prebuilt, tmp_path
         ],
         "doc_id long, embedding array<double>",
     )
-    out = rebuild_if_drifted(corpus, off, root, kind="ivfpq", ivfpq_margin=0.0)
+    out = rebuild_if_drifted(corpus, off, root, ivfpq_margin=0.0)
     assert out["rebuilt"] == (
         out["stats"]["p10_best_cos"] < m0["routing_baseline"]
     )
     # deterministic fire: a threshold above any reachable cosine
     if not out["rebuilt"]:
         out = rebuild_if_drifted(
-            corpus, off, root, kind="ivfpq", min_p10_cos=1.1
+            corpus, off, root, min_p10_cos=1.1
         )
         assert out["rebuilt"] is True
     assert serving_version(spark, root) == 1
@@ -271,8 +271,8 @@ def test_ivfpq_routing_baseline_default_policy(spark, corpus, prebuilt, tmp_path
     assert m1["kind"] == "ivfpq" and m1["n_clusters"] == 4 and m1["m"] == 8
     # compaction carries the baseline into the folded version
     even = corpus.where(F.col("doc_id") % 2 == 0)
-    write_serving_epoch(even, root, 0, kind="ivfpq")
-    compact_serving_index(spark, root, kind="ivfpq")
+    write_serving_epoch(even, root, 0)
+    compact_serving_index(spark, root)
     m2 = read_index_manifest(spark, f"{root}/v_2")
     assert m2["routing_baseline"] == m1["routing_baseline"]
 
@@ -285,7 +285,7 @@ def test_ivfpq_root_epoch_compact_serves(spark, corpus, prebuilt, tmp_path_facto
     root = prebuilt("ivfpq", "even")
     even = corpus.where(F.col("doc_id") % 2 == 0)
     odd = corpus.where(F.col("doc_id") % 2 == 1)
-    write_serving_epoch(odd, root, 0, kind="ivfpq")
+    write_serving_epoch(odd, root, 0)
     want = sorted(tuple(r) for r in _brute(corpus).select(*COLS).collect())
     got = sorted(
         tuple(r)
@@ -294,7 +294,7 @@ def test_ivfpq_root_epoch_compact_serves(spark, corpus, prebuilt, tmp_path_facto
         .collect()
     )
     assert got == want
-    stats = compact_serving_index(spark, root, kind="ivfpq")
+    stats = compact_serving_index(spark, root)
     assert stats["folded_epochs"] == 1
     # the compacted base restores the partition layout the probe prunes
     assert os.path.isdir(os.path.join(root, "v_1", "codes", "cluster_id=0"))
@@ -324,13 +324,13 @@ def test_maintain_serving_index_stream(spark, corpus, prebuilt, tmp_path_factory
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{base}/src/f*")
     )
-    q = maintain_serving_index_stream(stream, root, f"{base}/ckpt", kind="sq8")
+    q = maintain_serving_index_stream(stream, root, f"{base}/ckpt")
     q.awaitTermination()
     got = sorted(tuple(r) for r in _serve(corpus, root).select(*COLS).collect())
     want = sorted(tuple(r) for r in _brute(corpus).select(*COLS).collect())
     assert got == want
     # streamed epochs are stamped + shared: a compaction folds both
-    stats = compact_serving_index(spark, root, kind="sq8")
+    stats = compact_serving_index(spark, root)
     assert stats["folded_epochs"] == 2
     got2 = sorted(tuple(r) for r in _serve(corpus, root).select(*COLS).collect())
     assert got2 == want
@@ -340,8 +340,8 @@ def test_prune_serving_index(spark, corpus, prebuilt, tmp_path_factory):
     root = prebuilt("sq8", "even")
     even = corpus.where(F.col("doc_id") % 2 == 0)
     odd = corpus.where(F.col("doc_id") % 2 == 1)
-    write_serving_epoch(odd, root, 0, kind="sq8")
-    compact_serving_index(spark, root, kind="sq8")  # v_1 folds epoch 0
+    write_serving_epoch(odd, root, 0)
+    compact_serving_index(spark, root)  # v_1 folds epoch 0
     out = prune_serving_index(spark, root, retain_versions=1)
     assert out["versions_deleted"] == 1  # v_0 gone
     assert out["epochs_deleted"] == 1  # epoch 0 folded everywhere retained
@@ -363,7 +363,7 @@ def test_torn_epoch_stamp_reads_not_servable(spark, corpus, prebuilt, tmp_path_f
     root = prebuilt("sq8", "even")
     even = corpus.where(F.col("doc_id") % 2 == 0)
     odd = corpus.where(F.col("doc_id") % 2 == 1)
-    write_serving_epoch(odd, root, 0, kind="sq8")
+    write_serving_epoch(odd, root, 0)
     with open(os.path.join(root, "codes_batches", "batch_0", "_ARTIFACTS_ID"), "w"):
         pass  # truncate to empty — the torn-write shape
     got = sorted(tuple(r) for r in _serve(corpus, root).select(*COLS).collect())
@@ -387,7 +387,7 @@ def test_rebuild_refuses_pointer_flip_on_raced_epoch(spark, corpus, prebuilt, tm
     def build_with_racing_epoch(docs, path, **kw):
         real_build(docs, path, **kw)
         if "v_1" in path:  # only the rebuild's own build races
-            write_serving_epoch(odd, root, 7, kind="sq8")
+            write_serving_epoch(odd, root, 7)
 
     monkeypatch.setattr(L, "build_ann_index", build_with_racing_epoch)
     with pytest.raises(RuntimeError, match="committed during the rebuild"):
@@ -409,7 +409,7 @@ def test_prune_retains_pointer_resolved_version(spark, corpus, prebuilt, tmp_pat
     from kfai_pipeline_spark.operators.similarity import _fs_write_text
 
     root = prebuilt("sq8", "corpus")
-    compact_serving_index(spark, root, kind="sq8")  # v_1, pointer -> 1
+    compact_serving_index(spark, root)  # v_1, pointer -> 1
     # simulate the crash-before-flip shape: pointer back at v_0 while
     # v_1 stays committed
     _fs_write_text(spark, f"{root}/_LATEST", "0")
@@ -430,7 +430,7 @@ def test_compact_ann_index_rejects_lifecycle_version(spark, corpus, prebuilt, tm
     root = prebuilt("sq8", "corpus")
     vpath = f"{root}/v_0"
     with pytest.raises(ValueError, match="compact_serving_index"):
-        compact_ann_index(spark, vpath, f"{root}/nope", kind="sq8")
+        compact_ann_index(spark, vpath, f"{root}/nope")
 
 
 def test_prune_keeps_epoch_servable_by_retained_version(spark, corpus, prebuilt, tmp_path_factory):
@@ -439,10 +439,10 @@ def test_prune_keeps_epoch_servable_by_retained_version(spark, corpus, prebuilt,
     served documents."""
     root = prebuilt("sq8", "third0")
     thirds = [corpus.where(F.col("doc_id") % 3 == r) for r in range(3)]
-    write_serving_epoch(thirds[1], root, 0, kind="sq8")
+    write_serving_epoch(thirds[1], root, 0)
     compact_serving_index(
-        spark, root, kind="sq8",
-        _after_pin=lambda: write_serving_epoch(thirds[2], root, 1, kind="sq8"),
+        spark, root,
+        _after_pin=lambda: write_serving_epoch(thirds[2], root, 1),
     )
     out = prune_serving_index(spark, root, retain_versions=1)
     assert out["epochs_deleted"] == 1  # epoch 0 (folded) only
@@ -505,7 +505,7 @@ def test_selfheal_stream_epoch_then_rebuild(spark, corpus, prebuilt, tmp_path_fa
         )
     )
     kw = dict(
-        kind="sq8", corpus_fn=lambda: corpus2, max_frac_out_of_range=0.05
+        corpus_fn=lambda: corpus2, max_frac_out_of_range=0.05
     )
     # run 1: only the fresh (clipped) batch exists -> epoch, no rebuild
     clip_df.coalesce(1).write.mode("overwrite").parquet(f"{base}/src/f0")
@@ -564,8 +564,13 @@ def test_selfheal_stream_ivfpq_needs_baseline_eagerly(
     spark, corpus, tmp_path_factory
 ):
     """An armed ivfpq maintainer without min_p10_cos must fail at
-    START (misconfiguration), not at the first drifted batch."""
+    START (misconfiguration), not at the first drifted batch. The root
+    is an ivfpq index committed without a routing baseline (an empty
+    build), so only the missing threshold stands in the way."""
     base = str(tmp_path_factory.mktemp("lc_heal_cfg"))
+    init_serving_index(
+        corpus.limit(0), f"{base}/idx", kind="ivfpq", n_clusters=4
+    )
     corpus.select("doc_id", "embedding").limit(1).coalesce(1).write.mode(
         "overwrite"
     ).parquet(f"{base}/src/f0")
@@ -574,8 +579,7 @@ def test_selfheal_stream_ivfpq_needs_baseline_eagerly(
     ).parquet(f"{base}/src/f*")
     with pytest.raises(ValueError, match="min_p10_cos"):
         maintain_serving_index_stream(
-            stream, f"{base}/idx", f"{base}/ckpt", kind="ivfpq",
-            corpus_fn=lambda: corpus,
+            stream, f"{base}/idx", f"{base}/ckpt", corpus_fn=lambda: corpus
         )
 
 
@@ -588,15 +592,15 @@ def test_compact_single_writer_cas(spark, corpus, prebuilt, tmp_path_factory):
     root = prebuilt("sq8", "even")
     even = corpus.where(F.col("doc_id") % 2 == 0)
     odd = corpus.where(F.col("doc_id") % 2 == 1)
-    write_serving_epoch(odd, root, 0, kind="sq8")
+    write_serving_epoch(odd, root, 0)
     inner = {}
 
     def racing_compact():
-        inner.update(compact_serving_index(spark, root, kind="sq8"))
+        inner.update(compact_serving_index(spark, root))
 
     with pytest.raises(RuntimeError, match="already a COMMITTED version"):
         compact_serving_index(
-            spark, root, kind="sq8", _after_pin=racing_compact
+            spark, root, _after_pin=racing_compact
         )
     assert inner["version"] == 1 and serving_version(spark, root) == 1
     # the inner writer's committed version was never rewritten
@@ -604,7 +608,7 @@ def test_compact_single_writer_cas(spark, corpus, prebuilt, tmp_path_factory):
     want = sorted(tuple(r) for r in _brute(corpus).select(*COLS).collect())
     assert got == want
     # a fresh run (pointer read post-flip) proceeds normally to v_2
-    compact_serving_index(spark, root, kind="sq8")
+    compact_serving_index(spark, root)
     assert serving_version(spark, root) == 2
     got2 = sorted(tuple(r) for r in _serve(corpus, root).select(*COLS).collect())
     assert got2 == want
@@ -619,7 +623,7 @@ def test_maintenance_refuses_claimed_version_dir(spark, corpus, prebuilt, tmp_pa
     claim = os.path.join(root, "v_1", "_CLAIM")
     open(claim, "w").close()
     with pytest.raises(RuntimeError, match="claimed by another"):
-        compact_serving_index(spark, root, kind="sq8")
+        compact_serving_index(spark, root)
     with pytest.raises(RuntimeError, match="claimed by another"):
         rebuild_serving_index(corpus, root, kind="sq8")
     assert os.path.exists(claim)  # the refusals never steal the claim
@@ -663,7 +667,7 @@ def test_ivfpq_empty_build_commits_baselineless(
     assert m["kind"] == "ivfpq" and "routing_baseline" not in m
     with pytest.raises(ValueError, match="min_p10_cos"):
         rebuild_if_drifted(
-            corpus, corpus.select("doc_id", "embedding"), root, kind="ivfpq"
+            corpus, corpus.select("doc_id", "embedding"), root
         )
     # recovery is one rebuild over the real corpus: baseline appears
     rebuild_serving_index(corpus, root, kind="ivfpq", n_clusters=4)
@@ -672,10 +676,9 @@ def test_ivfpq_empty_build_commits_baselineless(
 
 
 def test_maintain_stream_kind_follows_manifest(spark, corpus, prebuilt, tmp_path_factory):
-    """Round-10 advice: the streaming maintainer resolves kind from the
-    root's manifest (like app stage 10) — an explicit mismatch raises
-    at START, and the kwarg-less default maintains an ivfpq root as
-    ivfpq instead of crashing in-fold reading sq8 artifacts."""
+    """Round-10 advice: the streaming maintainer reads the kind from the
+    root's manifest (like app stage 10), so it maintains an ivfpq root
+    as ivfpq instead of crashing in-fold reading sq8 artifacts."""
     base = str(tmp_path_factory.mktemp("lc_kindfollow"))
     root = f"{base}/idx"
     even = corpus.where(F.col("doc_id") % 2 == 0)
@@ -684,13 +687,8 @@ def test_maintain_stream_kind_follows_manifest(spark, corpus, prebuilt, tmp_path
     odd.coalesce(1).write.mode("overwrite").parquet(f"{base}/src/f0")
     schema = "doc_id long, embedding array<double>"
     stream = spark.readStream.schema(schema).parquet(f"{base}/src/f*")
-    with pytest.raises(ValueError, match="follows the manifest"):
-        maintain_serving_index_stream(
-            stream, root, f"{base}/ckpt_bad", kind="sq8"
-        )
-    stream2 = spark.readStream.schema(schema).parquet(f"{base}/src/f*")
     maintain_serving_index_stream(
-        stream2, root, f"{base}/ckpt"
+        stream, root, f"{base}/ckpt"
     ).awaitTermination()
     got = sorted(
         tuple(r)
@@ -720,7 +718,7 @@ def test_reader_resolving_pointer_during_flip(spark, corpus, prebuilt, tmp_path_
     from kfai_pipeline_spark.operators.similarity import _fs_write_text
 
     root = prebuilt("sq8", "corpus")
-    compact_serving_index(spark, root, kind="sq8")  # v_1 committed, ptr->1
+    compact_serving_index(spark, root)  # v_1 committed, ptr->1
     want = sorted(tuple(r) for r in _brute(corpus).select(*COLS).collect())
 
     def serve_ok():
@@ -757,23 +755,23 @@ def test_epoch_writer_fence(spark, corpus, prebuilt, tmp_path_factory):
     root = prebuilt("sq8", "even")
     first = corpus.where((F.col("doc_id") % 2 == 1) & (F.col("doc_id") < 45))
     other = corpus.where((F.col("doc_id") % 2 == 1) & (F.col("doc_id") >= 45))
-    write_serving_epoch(first, root, 0, kind="sq8", writer="stream:ckptA")
+    write_serving_epoch(first, root, 0, writer="stream:ckptA")
     served = corpus.where((F.col("doc_id") % 2 == 0) | (F.col("doc_id") < 45))
     want = sorted(tuple(r) for r in _brute(served).select(*COLS).collect())
 
     # a DIFFERENT writer colliding on id 0 refuses and changes nothing
     with pytest.raises(RuntimeError, match="claimed by writer"):
-        write_serving_epoch(other, root, 0, kind="sq8", writer="app-stage10")
+        write_serving_epoch(other, root, 0, writer="app-stage10")
     got = sorted(tuple(r) for r in _serve(served, root).select(*COLS).collect())
     assert got == want  # the winner's batch still serves, un-overwritten
 
     # the SAME writer replaying its own id passes (exactly-once replay)
-    write_serving_epoch(first, root, 0, kind="sq8", writer="stream:ckptA")
+    write_serving_epoch(first, root, 0, writer="stream:ckptA")
     got2 = sorted(tuple(r) for r in _serve(served, root).select(*COLS).collect())
     assert got2 == want
 
     # the other writer lands cleanly on its OWN id
-    write_serving_epoch(other, root, 1, kind="sq8", writer="app-stage10")
+    write_serving_epoch(other, root, 1, writer="app-stage10")
     got3 = sorted(tuple(r) for r in _serve(corpus, root).select(*COLS).collect())
     want3 = sorted(tuple(r) for r in _brute(corpus).select(*COLS).collect())
     assert got3 == want3
@@ -799,17 +797,17 @@ def test_committed_unpointed_orphan_repairs_pointer(spark, corpus, prebuilt, tmp
     root = prebuilt("sq8", "even")
     even = corpus.where(F.col("doc_id") % 2 == 0)
     odd = corpus.where(F.col("doc_id") % 2 == 1)
-    write_serving_epoch(odd, root, 0, kind="sq8")
-    compact_serving_index(spark, root, kind="sq8")
+    write_serving_epoch(odd, root, 0)
+    compact_serving_index(spark, root)
     assert serving_version(spark, root) == 1
     # simulate the crash: v_1 committed, pointer never flipped
     _write_latest_version(spark, root, 0)
     assert serving_version(spark, root) == 0
     with pytest.raises(RuntimeError, match="repaired"):
-        compact_serving_index(spark, root, kind="sq8")
+        compact_serving_index(spark, root)
     assert serving_version(spark, root) == 1  # the flip was completed
     # the advised re-run now actually proceeds (the old wedge)
-    stats = compact_serving_index(spark, root, kind="sq8")
+    stats = compact_serving_index(spark, root)
     assert stats["version"] == 2 and serving_version(spark, root) == 2
     got = sorted(tuple(r) for r in _serve(corpus, root).select(*COLS).collect())
     want = sorted(tuple(r) for r in _brute(corpus).select(*COLS).collect())
@@ -831,8 +829,8 @@ def test_force_reclaim_refuses_live_served_dest(spark, corpus, prebuilt, tmp_pat
     root = prebuilt("sq8", "even")
     even = corpus.where(F.col("doc_id") % 2 == 0)
     odd = corpus.where(F.col("doc_id") % 2 == 1)
-    write_serving_epoch(odd, root, 0, kind="sq8")
-    compact_serving_index(spark, root, kind="sq8")  # v_1, pointer -> 1
+    write_serving_epoch(odd, root, 0)
+    compact_serving_index(spark, root)  # v_1, pointer -> 1
     with pytest.raises(RuntimeError, match="LIVE serving version"):
         _acquire_version_dir(spark, root, f"{root}/v_1", 0, True)
     assert os.path.exists(os.path.join(root, "v_1", "_COMMITTED"))
@@ -981,10 +979,10 @@ def test_epoch_claims_keep_ids_monotonic_across_prune_cycle(spark, corpus, prebu
     root = prebuilt("sq8", "even")
     even = corpus.where(F.col("doc_id") % 2 == 0)
     odd = corpus.where(F.col("doc_id") % 2 == 1)
-    write_serving_epoch(odd, root, 0, kind="sq8", writer="stream:ckptA")
-    compact_serving_index(spark, root, kind="sq8")  # v_1 folds {0}
+    write_serving_epoch(odd, root, 0, writer="stream:ckptA")
+    compact_serving_index(spark, root)  # v_1 folds {0}
     prune_serving_index(spark, root, retain_versions=1)
-    stats = compact_serving_index(spark, root, kind="sq8")  # v_2
+    stats = compact_serving_index(spark, root)  # v_2
     m = read_index_manifest(spark, f"{root}/v_2")
     assert m["folded"] == []  # the pruned epoch's id dropped from folded
     # live dirs and folded are both empty — only the CLAIM remembers id 0
@@ -994,7 +992,7 @@ def test_epoch_claims_keep_ids_monotonic_across_prune_cycle(spark, corpus, prebu
     assert next_id == 1  # the stage-10 allocator skips the reused-looking id
     # and a writer blindly landing on id 0 refuses rather than colliding
     with pytest.raises(RuntimeError, match="claimed by writer"):
-        write_serving_epoch(odd, root, 0, kind="sq8", writer="app-stage10")
+        write_serving_epoch(odd, root, 0, writer="app-stage10")
     # the root still serves the full corpus through the compacted base
     got = sorted(tuple(r) for r in _serve(corpus, root).select(*COLS).collect())
     want = sorted(tuple(r) for r in _brute(corpus).select(*COLS).collect())
@@ -1018,7 +1016,7 @@ def test_epoch_listing_tolerates_junk_sidecars(spark, corpus, prebuilt, tmp_path
     root = prebuilt("sq8", "even")
     even = corpus.where(F.col("doc_id") % 2 == 0)
     odd = corpus.where(F.col("doc_id") % 2 == 1)
-    write_serving_epoch(odd, root, 0, kind="sq8", writer="stream:ckptA")
+    write_serving_epoch(odd, root, 0, writer="stream:ckptA")
     base = os.path.join(root, "codes_batches")
     for junk in (
         "batch_5._WRITER.",        # torn: empty tag
@@ -1038,7 +1036,7 @@ def test_epoch_listing_tolerates_junk_sidecars(spark, corpus, prebuilt, tmp_path
     assert got == want  # serving unaffected by the junk
     # the torn empty-tag claim fails SAFE: id 5 refuses a real writer
     with pytest.raises(RuntimeError, match="claimed by writer"):
-        write_serving_epoch(odd, root, 5, kind="sq8", writer="app-stage10")
+        write_serving_epoch(odd, root, 5, writer="app-stage10")
 
 
 def test_epoch_claim_cross_writer_race_backs_off(spark, tmp_path_factory):
@@ -1183,7 +1181,7 @@ def test_report_epoch_claims_states(spark, corpus, prebuilt, tmp_path_factory):
     even = corpus.where(F.col("doc_id") % 2 == 0)
     odd = corpus.where(F.col("doc_id") % 2 == 1)
     # committed
-    write_serving_epoch(odd, root, 0, kind="sq8", writer="stream:ckptA")
+    write_serving_epoch(odd, root, 0, writer="stream:ckptA")
     # in-flight: claim + dir with data but no parquet _SUCCESS
     il._claim_epoch_id(spark, root, 1, "stream:ckptA")
     os.makedirs(os.path.join(root, "codes_batches", "batch_1"))
@@ -1202,7 +1200,7 @@ def test_report_epoch_claims_states(spark, corpus, prebuilt, tmp_path_factory):
     assert by_id[0]["writer_tag"].startswith("stream-ckptA-")
 
     # fold epoch 0 into v_1: still on disk -> committed, folded=True
-    compact_serving_index(spark, root, kind="sq8")
+    compact_serving_index(spark, root)
     by_id = {r["batch_id"]: r for r in il.report_epoch_claims(spark, root)}
     assert by_id[0]["state"] == "committed" and by_id[0]["folded"]
 
@@ -1217,8 +1215,8 @@ def test_report_epoch_claims_states(spark, corpus, prebuilt, tmp_path_factory):
 
     # legacy shape: folded membership with neither dir nor tombstone
     # (pre-r13 prunes) -> "folded"
-    write_serving_epoch(odd, root, 8, kind="sq8", writer="stream:ckptA")
-    compact_serving_index(spark, root, kind="sq8")  # v_2 folds {8}
+    write_serving_epoch(odd, root, 8, writer="stream:ckptA")
+    compact_serving_index(spark, root)  # v_2 folds {8}
     import shutil
 
     shutil.rmtree(os.path.join(root, "codes_batches", "batch_8"))
@@ -1238,8 +1236,8 @@ def test_compact_interleaved_with_drift_rebuild(spark, corpus, prebuilt, tmp_pat
     root = prebuilt("sq8", "even")
     first = corpus.where((F.col("doc_id") % 2 == 1) & (F.col("doc_id") < 45))
     rest = corpus.where((F.col("doc_id") % 2 == 1) & (F.col("doc_id") >= 45))
-    write_serving_epoch(first, root, 0, kind="sq8", writer="stream:ckptA")
-    write_serving_epoch(rest, root, 1, kind="sq8", writer="stream:ckptA")
+    write_serving_epoch(first, root, 0, writer="stream:ckptA")
+    write_serving_epoch(rest, root, 1, writer="stream:ckptA")
     want = sorted(tuple(r) for r in _brute(corpus).select(*COLS).collect())
     old_manifest = read_index_manifest(spark, f"{root}/v_0")
 
@@ -1250,7 +1248,7 @@ def test_compact_interleaved_with_drift_rebuild(spark, corpus, prebuilt, tmp_pat
 
     with pytest.raises(RuntimeError, match="already a COMMITTED version"):
         compact_serving_index(
-            spark, root, kind="sq8", _after_pin=racing_rebuild
+            spark, root, _after_pin=racing_rebuild
         )
     # the rebuild's version serves, un-rewritten, with bumped artifacts
     assert serving_version(spark, root) == 1
@@ -1260,7 +1258,7 @@ def test_compact_interleaved_with_drift_rebuild(spark, corpus, prebuilt, tmp_pat
     assert got == want
     # a fresh compaction proceeds against the rebuilt version and folds
     # ZERO pre-rebuild epochs (stale artifacts lineage)
-    stats = compact_serving_index(spark, root, kind="sq8")
+    stats = compact_serving_index(spark, root)
     assert stats["version"] == 2 and stats["folded_epochs"] == 0
     assert serving_version(spark, root) == 2
     got2 = sorted(tuple(r) for r in _serve(corpus, root).select(*COLS).collect())
@@ -1288,7 +1286,7 @@ def test_prune_racing_mid_build_compaction_is_harmless(spark, corpus, prebuilt, 
     root = prebuilt("sq8", "even")
     even = corpus.where(F.col("doc_id") % 2 == 0)
     odd = corpus.where(F.col("doc_id") % 2 == 1)
-    write_serving_epoch(odd, root, 0, kind="sq8", writer="stream:ckptA")
+    write_serving_epoch(odd, root, 0, writer="stream:ckptA")
     want = sorted(tuple(r) for r in _brute(corpus).select(*COLS).collect())
 
     raced: dict = {}
@@ -1300,7 +1298,7 @@ def test_prune_racing_mid_build_compaction_is_harmless(spark, corpus, prebuilt, 
         assert os.path.exists(os.path.join(root, "codes_batches", "batch_0"))
 
     stats = compact_serving_index(
-        spark, root, kind="sq8", _after_pin=racing_prune
+        spark, root, _after_pin=racing_prune
     )
     assert raced == {"versions_deleted": 0, "epochs_deleted": 0}
     # the compaction completed over the epochs prune left alone

@@ -254,6 +254,40 @@ def test_q07_partial_aggregation_before_shuffle(spark):
     assert "partial_sum" in p, "aggregate must be partial before the exchange"
 
 
+def test_q07_cents_long_overflow_raises_under_ansi(spark, tmp_path):
+    # q07's domain bound: past it the cents-LONG product sums overflow,
+    # and ANSI mode (Spark 4.1's default) raises instead of wrapping.
+    # Ten rows at l_extendedprice=1e12 put sum_charge's LONG sum at
+    # ~1e19 > 2^63. The query reads a private sf dir, so the shared
+    # lineitem temp view other modules use is never re-registered.
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    n = 10
+    pq.write_table(
+        pa.table(
+            {
+                "l_quantity": [1.0] * n,
+                "l_extendedprice": [1e12] * n,
+                "l_discount": [0.0] * n,
+                "l_tax": [0.0] * n,
+                "l_returnflag": ["A"] * n,
+                "l_linestatus": ["F"] * n,
+                "l_shipdate": pa.array(
+                    [datetime.datetime(1995, 1, 1)] * n, pa.timestamp("us")
+                ),
+            }
+        ),
+        str(tmp_path / "lineitem.parquet"),
+    )
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
+        REGISTRY["q07"].build(spark, str(tmp_path)).collect()
+
+
 def test_partitioned_json_read_prunes_partitions(spark, tmp_path):
     # S5 sink layout (year=Y/month=MM) + a partition-column predicate
     # must prune at the FILE level: PartitionFilters carries the

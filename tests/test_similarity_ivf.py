@@ -674,7 +674,7 @@ def test_append_sq8_index_incremental_build_matches_full(spark):
     import tempfile
 
     from kfai_pipeline_spark.operators.similarity import (
-        append_sq8_index,
+        append_ann_index,
         sq8_topk,
         write_sq8_index,
     )
@@ -692,7 +692,7 @@ def test_append_sq8_index_incremental_build_matches_full(spark):
         # A alone spans the full [0,5) range per dim, so A's stats ==
         # the union's stats and codes must be bit-identical
         write_sq8_index(a, f"{tmp}/inc")
-        append_sq8_index(b, f"{tmp}/inc")
+        append_ann_index(b, f"{tmp}/inc")
         got_full = [
             tuple(r) for r in sq8_topk(
                 spark, f"{tmp}/full", q, k=7, refine=8, vectors=corpus
@@ -711,7 +711,7 @@ def test_append_sq8_index_incremental_build_matches_full(spark):
         out = spark.createDataFrame(
             [(999, [100.0] * 8)], "vec_id long, embedding array<double>"
         )
-        append_sq8_index(out, f"{tmp}/inc")
+        append_ann_index(out, f"{tmp}/inc")
         q2 = spark.createDataFrame(
             [(0, [1.0] * 8)], ["query_id", "embedding"]
         )
@@ -731,7 +731,7 @@ def test_append_ivfpq_index_incremental_build_matches_full(spark):
     import pytest as _pytest
 
     from kfai_pipeline_spark.operators.similarity import (
-        append_ivfpq_index,
+        append_ann_index,
         ivfpq_topk,
         train_ivfpq,
         write_ivfpq_index,
@@ -750,7 +750,7 @@ def test_append_ivfpq_index_incremental_build_matches_full(spark):
         cents, books = train_ivfpq(a, n_clusters=4, m=4)
         write_ivfpq_index(corpus, f"{tmp}/full", cents, books)
         write_ivfpq_index(a, f"{tmp}/inc", cents, books)
-        append_ivfpq_index(b, f"{tmp}/inc")
+        append_ann_index(b, f"{tmp}/inc")
         kw = dict(k=6, nprobe=4, refine=16, vectors=corpus)
         got_full = [
             tuple(r)
@@ -765,7 +765,7 @@ def test_append_ivfpq_index_incremental_build_matches_full(spark):
         empty = corpus.where("vec_id < 0")
         write_ivfpq_index(empty, f"{tmp}/empty", [], [])
         with _pytest.raises(ValueError, match="empty-built"):
-            append_ivfpq_index(b, f"{tmp}/empty")
+            append_ann_index(b, f"{tmp}/empty")
 
 
 def test_compact_ann_index_preserves_probes_and_drops_files(spark, tmp_path_factory):
@@ -776,8 +776,7 @@ def test_compact_ann_index_preserves_probes_and_drops_files(spark, tmp_path_fact
     import os
 
     from kfai_pipeline_spark.operators.similarity import (
-        append_ivfpq_index,
-        append_sq8_index,
+        append_ann_index,
         compact_ann_index,
         ivfpq_topk,
         sq8_topk,
@@ -801,16 +800,16 @@ def test_compact_ann_index_preserves_probes_and_drops_files(spark, tmp_path_fact
     # SQ8: seed + batch append + one streamed epoch, then compact
     live = os.path.join(root, "sq8")
     write_sq8_index(third[0], live, id_col="doc_id")
-    append_sq8_index(third[1], live, id_col="doc_id")
+    append_ann_index(third[1], live, id_col="doc_id")
     src = os.path.join(root, "src")
     third[2].coalesce(1).write.parquet(f"{src}/f0")
     stream = spark.readStream.schema(corpus.schema).parquet(f"{src}/f*")
     maintain_ann_index_stream(
-        stream, live, os.path.join(root, "ckpt"), kind="sq8"
+        stream, live, os.path.join(root, "ckpt")
     ).awaitTermination()
 
     dest = os.path.join(root, "sq8_opt")
-    stats = compact_ann_index(spark, live, dest, kind="sq8")
+    stats = compact_ann_index(spark, live, dest)
     assert stats["n_rows"] == 60
     assert stats["files_after"] < stats["files_before"]
     kw = dict(k=7, refine=8, vectors=corpus, id_col="doc_id")
@@ -823,9 +822,9 @@ def test_compact_ann_index_preserves_probes_and_drops_files(spark, tmp_path_fact
     cents, books = train_ivfpq(third[0], n_clusters=4, m=4, id_col="doc_id")
     live2 = os.path.join(root, "pq")
     write_ivfpq_index(third[0], live2, cents, books, id_col="doc_id")
-    append_ivfpq_index(third[1].unionByName(third[2]), live2, id_col="doc_id")
+    append_ann_index(third[1].unionByName(third[2]), live2, id_col="doc_id")
     dest2 = os.path.join(root, "pq_opt")
-    stats2 = compact_ann_index(spark, live2, dest2, kind="ivfpq")
+    stats2 = compact_ann_index(spark, live2, dest2)
     assert stats2["n_rows"] == 60
     kw2 = dict(k=6, nprobe=4, refine=16, vectors=corpus, id_col="doc_id")
     b2 = [tuple(r) for r in ivfpq_topk(spark, live2, q, **kw2).collect()]
@@ -856,33 +855,33 @@ def test_index_drift_stats_both_kinds(spark, tmp_path_factory):
     sq8 = os.path.join(root, "sq8")
     write_sq8_index(corpus, sq8)
 
-    fresh = index_drift_stats(corpus, sq8, kind="sq8").collect()[0]
+    fresh = index_drift_stats(corpus, sq8).collect()[0]
     assert fresh["n_out_of_range"] == 0 and fresh["max_overshoot"] == 0.0
     # seed dims span [0,4]; value 12 overshoots by (12-4)/4 = 2.0
     drifted = spark.createDataFrame(
         [(100, [12.0] + [1.0] * 7), (101, [1.0] * 8)],
         "vec_id long, embedding array<double>",
     )
-    d = index_drift_stats(drifted, sq8, kind="sq8").collect()[0]
+    d = index_drift_stats(drifted, sq8).collect()[0]
     assert d["n_rows"] == 2 and d["n_out_of_range"] == 1
     assert d["frac_out_of_range"] == 0.5 and d["max_overshoot"] == 2.0
     # degenerate rows are excluded, not counted as drift
     degen = spark.createDataFrame(
         [(1, [0.0] * 8), (2, None)], "vec_id long, embedding array<double>"
     )
-    z = index_drift_stats(degen, sq8, kind="sq8").collect()[0]
+    z = index_drift_stats(degen, sq8).collect()[0]
     assert z["n_rows"] == 0 and z["n_out_of_range"] == 0
 
     pq = os.path.join(root, "pq")
     cents, books = train_ivfpq(corpus, n_clusters=4, m=4)
     write_ivfpq_index(corpus, pq, cents, books)
-    on_manifold = index_drift_stats(corpus, pq, kind="ivfpq").collect()[0]
+    on_manifold = index_drift_stats(corpus, pq).collect()[0]
     # an orthogonal-ish direction the build never saw routes worse
     off = spark.createDataFrame(
         [(200, [1.0, -1.0, 1.0, -1.0, 1.0, -1.0, 1.0, -1.0])],
         "vec_id long, embedding array<double>",
     )
-    off_row = index_drift_stats(off, pq, kind="ivfpq").collect()[0]
+    off_row = index_drift_stats(off, pq).collect()[0]
     assert off_row["mean_best_cos"] < on_manifold["mean_best_cos"]
 
 
@@ -911,26 +910,66 @@ def test_index_drift_stats_ivfpq_empty_batch_reads_full_confidence(
         [(1, [0.0] * 8), (2, None)], "vec_id long, embedding array<double>"
     )
     scope = CacheScope()
-    row = index_drift_stats(empty, pq, kind="ivfpq", scope=scope).collect()[0]
+    row = index_drift_stats(empty, pq, scope=scope).collect()[0]
     scope.release()
     assert row["n_rows"] == 0
     assert row["mean_best_cos"] == 1.0 and row["p10_best_cos"] == 1.0
 
 
-def test_compact_and_append_reject_unknown_kind(spark, tmp_path_factory):
-    import pytest as _pytest
-
-    from kfai_pipeline_spark.operators.similarity import compact_ann_index
-    from kfai_pipeline_spark.plans.rag import append_retrieval_index
-
-    root = str(tmp_path_factory.mktemp("kind_guard"))
-    with _pytest.raises(ValueError, match="index kind"):
-        compact_ann_index(spark, f"{root}/a", f"{root}/b", kind="hnsw")
-    docs = spark.createDataFrame(
-        [(1, [1.0, 2.0])], "doc_id long, embedding array<double>"
+@pytest.mark.parametrize("kind", ["sq8", "ivfpq"])
+def test_index_kind_contracts(spark, tmp_path, kind):
+    """The kind is chosen once, at build, and every operation on a
+    built index reads it back: from the artifacts of a plain dir (also
+    after a rebuild as the other kind) and from the manifest of a
+    lifecycle root. An empty-built index refuses append and epoch; a
+    path holding no index raises the same error from append,
+    compaction, drift and stream start."""
+    from kfai_pipeline_spark.operators.index_lifecycle import (
+        compact_serving_index,
+        init_serving_index,
+        maintain_serving_index_stream,
     )
-    with _pytest.raises(ValueError, match="index kind"):
-        append_retrieval_index(docs, f"{root}/c", kind="hnsw")
+    from kfai_pipeline_spark.streaming.index_maintain import (
+        encode_epoch,
+        maintain_ann_index_stream,
+    )
+
+    corpus, _ = _corpus_queries(spark)
+    kw = {"n_clusters": 4} if kind == "ivfpq" else {}
+    plain, root = str(tmp_path / "plain"), str(tmp_path / "root")
+    S.build_ann_index(corpus, plain, kind=kind, id_col="vec_id", **kw)
+    init_serving_index(corpus, root, kind=kind, id_col="vec_id", **kw)
+    assert S.index_kind(spark, plain) == kind
+    assert S.index_kind(spark, root) == kind
+    # a rebuild of the plain dir as the other kind reads back as that kind
+    other = "ivfpq" if kind == "sq8" else "sq8"
+    S.build_ann_index(corpus, plain, kind=other, id_col="vec_id", n_clusters=4)
+    assert S.index_kind(spark, plain) == other
+
+    empty = str(tmp_path / "empty")
+    S.build_ann_index(corpus.limit(0), empty, kind=kind, id_col="vec_id", **kw)
+    assert S.index_kind(spark, empty) == kind
+    with pytest.raises(ValueError, match="empty-built"):
+        S.append_ann_index(corpus, empty, id_col="vec_id")
+    with pytest.raises(ValueError, match="empty-built"):
+        encode_epoch(corpus, empty, str(tmp_path / "epoch"), id_col="vec_id")
+
+    nothing = str(tmp_path / "nothing")
+    corpus.limit(2).write.parquet(str(tmp_path / "src"))
+    stream = spark.readStream.schema(corpus.schema).parquet(
+        str(tmp_path / "src")
+    )
+    ckpt = str(tmp_path / "ckpt")
+    for call in (
+        lambda: S.append_ann_index(corpus, nothing, id_col="vec_id"),
+        lambda: S.compact_ann_index(spark, nothing, str(tmp_path / "dest")),
+        lambda: compact_serving_index(spark, nothing),
+        lambda: S.index_drift_stats(corpus, nothing),
+        lambda: maintain_ann_index_stream(stream, nothing, ckpt),
+        lambda: maintain_serving_index_stream(stream, nothing, ckpt),
+    ):
+        with pytest.raises(FileNotFoundError, match="no ANN index at"):
+            call()
 
 
 def test_opq_rotation_orthogonal_and_error_no_worse(spark):
@@ -984,7 +1023,7 @@ def test_opq_ivfpq_exhaustive_parity_append_and_copy(spark, tmp_path):
         idx, kind="ivfpq", id_col="vec_id", n_clusters=8, opq_iters=5,
     )
     assert S.load_ivfpq_rotation(spark, idx) is not None
-    S.append_ivfpq_index(
+    S.append_ann_index(
         corpus.where(F.col("vec_id") % 2 == 0), idx, id_col="vec_id"
     )
     got = [
@@ -1000,7 +1039,7 @@ def test_opq_ivfpq_exhaustive_parity_append_and_copy(spark, tmp_path):
     assert sorted(got) == sorted(exact) and len(got) == 25
     # artifact copy carries the optional rotation verbatim
     dest = str(tmp_path / "copy")
-    S._copy_index_artifacts(spark, idx, dest, "ivfpq")
+    S._copy_index_artifacts(spark, idx, dest)
     assert S.load_ivfpq_rotation(spark, dest) == S.load_ivfpq_rotation(
         spark, idx
     )

@@ -800,7 +800,7 @@ def test_maintain_ann_index_stream_sq8_serves_streamed_docs(spark, tmp_path_fact
 
     from kfai_pipeline_spark.operators.similarity import sq8_topk
     from kfai_pipeline_spark.operators.similarity import (
-        append_sq8_index,
+        append_ann_index,
         write_sq8_index,
     )
     from kfai_pipeline_spark.streaming.index_maintain import (
@@ -824,9 +824,7 @@ def test_maintain_ann_index_stream_sq8_serves_streamed_docs(spark, tmp_path_fact
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src}/f*")
     )
-    q = maintain_ann_index_stream(
-        stream, live, os.path.join(root, "ckpt"), kind="sq8",
-    )
+    q = maintain_ann_index_stream(stream, live, os.path.join(root, "ckpt"))
     q.awaitTermination()
     batch_dirs = [
         d for d in os.listdir(os.path.join(live, "codes_batches"))
@@ -837,7 +835,7 @@ def test_maintain_ann_index_stream_sq8_serves_streamed_docs(spark, tmp_path_fact
     # reference index: batch build + batch append over the same halves
     ref = os.path.join(root, "ref")
     write_sq8_index(seed, ref, id_col="doc_id")
-    append_sq8_index(rest, ref, id_col="doc_id")
+    append_ann_index(rest, ref, id_col="doc_id")
 
     qdf = spark.createDataFrame(
         [(0, [1.0, 2.0, 3.0, 4.0, 0.0, 1.0, 2.0, 3.0])],
@@ -851,15 +849,13 @@ def test_maintain_ann_index_stream_sq8_serves_streamed_docs(spark, tmp_path_fact
     assert any(r[1] % 2 == 1 for r in got)
 
 
-def test_maintain_ann_index_stream_ivfpq_and_bad_kind(spark, tmp_path_factory):
+def test_maintain_ann_index_stream_ivfpq(spark, tmp_path_factory):
     """IVFPQ arm: streamed epochs encode against the frozen books and
-    probe identically to the batch append; unknown kind raises."""
+    probe identically to the batch append."""
     import os
 
-    import pytest as _pytest
-
     from kfai_pipeline_spark.operators.similarity import (
-        append_ivfpq_index,
+        append_ann_index,
         ivfpq_topk,
         train_ivfpq,
         write_ivfpq_index,
@@ -881,14 +877,12 @@ def test_maintain_ann_index_stream_ivfpq_and_bad_kind(spark, tmp_path_factory):
     src = os.path.join(root, "src")
     rest.coalesce(1).write.parquet(f"{src}/f0")
     stream = spark.readStream.schema(corpus.schema).parquet(f"{src}/f*")
-    q = maintain_ann_index_stream(
-        stream, live, os.path.join(root, "ckpt"), kind="ivfpq",
-    )
+    q = maintain_ann_index_stream(stream, live, os.path.join(root, "ckpt"))
     q.awaitTermination()
 
     ref = os.path.join(root, "ref")
     write_ivfpq_index(seed, ref, cents, books, id_col="doc_id")
-    append_ivfpq_index(rest, ref, id_col="doc_id")
+    append_ann_index(rest, ref, id_col="doc_id")
 
     qdf = spark.createDataFrame(
         [(0, [1.0, -1.0, 2.0, 0.5, -0.5, 1.5, -2.0, 1.0])],
@@ -898,6 +892,3 @@ def test_maintain_ann_index_stream_ivfpq_and_bad_kind(spark, tmp_path_factory):
     got = [tuple(r) for r in ivfpq_topk(spark, live, qdf, **kw).collect()]
     want = [tuple(r) for r in ivfpq_topk(spark, ref, qdf, **kw).collect()]
     assert got == want and len(got) == 6
-
-    with _pytest.raises(ValueError, match="index kind"):
-        maintain_ann_index_stream(stream, live, f"{root}/c2", kind="hnsw")
