@@ -270,16 +270,14 @@ def query(
 
     store = spark.read.parquet(_dir(workdir, "store"))
     if use_index:
-        from kfai_pipeline_spark.operators.index_lifecycle import (
-            serving_index_kind,
-        )
+        from kfai_pipeline_spark.operators.similarity import index_kind
 
         root = _dir(workdir, "index")
         return answer_query(
             _with_chunk_id(store), question, parser, embedder, synthesizer,
             k=k, retrieval="tiered", tier="ann",
             index_path=root, id_col="__chunk_id", refine=refine,
-            index_kind=serving_index_kind(spark, root) or "sq8",
+            index_kind=index_kind(spark, root),
         )
     return answer_query(store, question, parser, embedder, synthesizer, k=k)
 

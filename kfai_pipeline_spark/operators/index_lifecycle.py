@@ -347,9 +347,8 @@ def serving_index_kind(spark: SparkSession, root: str) -> str | None:
 def resolve_index_path(spark: SparkSession, path: str) -> str:
     """``path`` if it is a plain index dir; its serving version when it
     is a lifecycle ROOT. This is what lets every retrieval entry point
-    accept either form — the pointer read is one tiny FS call per
-    query, the same cost class as the stats-row collect the probes
-    already pay."""
+    accept either form — the pointer read is a few FS calls per query
+    and starts no Spark job."""
     v = serving_version(spark, path)
     return f"{path}/v_{v}" if v >= 0 else path
 

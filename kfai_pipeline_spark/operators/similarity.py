@@ -25,7 +25,10 @@ the codes table (``_codes_df``: build + appends + streamed epochs) with
 ``mapInPandas`` through ``_PartitionTopK``, keep the global top
 ``k*refine`` per query, then ``_exact_rerank`` against the
 full-precision vectors when given (``quantized_topk``, the expression
-arm, ends in the same re-rank). A kind is a ``_Codec`` of four parts:
+arm, ends in the same re-rank). A probe reads its kind's artifacts and
+the codes schema once per index version (``_serving_artifacts``), and
+its pool mode hands ``rag.retrieve_tiered`` one candidate pool to replay
+its top-up rounds from. A kind is a ``_Codec`` of four parts:
 
 * artifact load — ``_sq8_load`` (per-dim stats), ``_pq_load``
   (codebooks), ``_ivfpq_load`` (coarse book, codebooks, OPQ rotation);
@@ -61,6 +64,8 @@ from __future__ import annotations
 
 import math
 import random
+import threading
+from collections import OrderedDict
 from typing import Callable, NamedTuple
 
 from pyspark.sql import Column, DataFrame
@@ -1145,18 +1150,18 @@ def quantized_topk(
 
 
 def _top_per_query(
-    df: DataFrame, score_col: str, id_col: str, n: int
+    df: DataFrame, score_col: str, id_col: str, n: int,
+    rank_col: str | None = None,
 ) -> DataFrame:
     """The top ``n`` rows per ``query_id`` by (score DESC, id ASC) — a
-    total order, so the cut is deterministic under score ties."""
+    total order, so the cut is deterministic under score ties.
+    ``rank_col`` keeps each row's 1-based rank under that name."""
     w = Window.partitionBy("query_id").orderBy(
         F.desc(score_col), F.asc(id_col)
     )
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= n)
-        .drop("__rn")
-    )
+    rank = rank_col or "__rn"
+    out = df.withColumn(rank, F.row_number().over(w)).where(F.col(rank) <= n)
+    return out if rank_col else out.drop(rank)
 
 
 def _rounded(col: str, round_to: int | None) -> Column:
@@ -1391,7 +1396,56 @@ def write_index_manifest(
     _fs_write_text(spark, f"{index_dir}/{_MANIFEST}", json.dumps(doc))
 
 
-def _codes_df(spark: SparkSession, path: str) -> DataFrame:
+_ARTIFACT_CACHE_SIZE = 8
+_artifact_cache: OrderedDict = OrderedDict()
+_artifact_lock = threading.Lock()
+
+
+def _artifact_stamp(spark: SparkSession, path: str, codec) -> tuple:
+    """What a write to the index dir ``path`` changes, read with FS
+    calls only (no Spark job): the name, length and mtime of every file
+    under the codec's artifact sides (a rewrite's part files carry a
+    new job id in their names), plus the codes dir's own mtime (the
+    cache holds the codes schema too). A missing side or codes dir
+    stamps as None."""
+    from kfai_pipeline_spark.streaming.rollup import _hadoop_path
+
+    stamp = []
+    for side in codec.sides + codec.optional_sides:
+        fs, p, _ = _hadoop_path(spark, f"{path}/{side}")
+        stamp.append(
+            tuple(sorted(
+                (s.getPath().getName(), s.getLen(), s.getModificationTime())
+                for s in fs.listStatus(p)
+            )) if fs.exists(p) else None
+        )
+    fs, p, _ = _hadoop_path(spark, f"{path}/codes")
+    stamp.append(fs.getFileStatus(p).getModificationTime() if fs.exists(p) else None)
+    return tuple(stamp)
+
+
+def _serving_artifacts(spark: SparkSession, path: str, codec):
+    """(frozen artifacts, codes schema) of the index dir ``path`` for a
+    probe, read once per index version: a small process-level LRU keyed
+    by (codec, resolved dir, :func:`_artifact_stamp`). Lifecycle
+    versions are immutable and appends leave the artifacts frozen, so a
+    hit re-reads nothing; a rebuild in place changes the stamp and
+    misses. A miss pays the artifact read and the codes schema
+    inference (three Spark jobs for sq8)."""
+    key = (codec.name, path.rstrip("/"), _artifact_stamp(spark, path, codec))
+    with _artifact_lock:
+        if key in _artifact_cache:
+            _artifact_cache.move_to_end(key)
+            return _artifact_cache[key]
+    entry = (codec.load(spark, path), spark.read.parquet(f"{path}/codes").schema)
+    with _artifact_lock:
+        _artifact_cache[key] = entry
+        while len(_artifact_cache) > _ARTIFACT_CACHE_SIZE:
+            _artifact_cache.popitem(last=False)
+    return entry
+
+
+def _codes_df(spark: SparkSession, path: str, schema=None) -> DataFrame:
     """The index codes table: ``<path>/codes`` (the batch build +
     any :func:`append_*_index` rows) unioned with every COMMITTED
     streaming-maintenance epoch under ``<path>/codes_batches/batch_*``
@@ -1415,12 +1469,17 @@ def _codes_df(spark: SparkSession, path: str) -> DataFrame:
     epoch stamped by OLDER artifacts (pre-rebuild) has incompatible
     codes and is excluded; its documents come from the rebuild corpus
     (epochs are derived data, the corpus table is the source of
-    truth)."""
+    truth).
+
+    ``schema`` (the probes pass the cached one,
+    :func:`_serving_artifacts`) reads every member with it instead of
+    inferring each one's, which costs a Spark job per member."""
     from kfai_pipeline_spark.operators.dedup import list_success_dirs
 
-    df = spark.read.parquet(f"{path}/codes")
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(f"{path}/codes")
     for _, d in list_success_dirs(spark, f"{path}/codes_batches", ("batch_",)):
-        df = df.unionByName(spark.read.parquet(d))
+        df = df.unionByName(reader.parquet(d))
     manifest = read_index_manifest(spark, path)
     if manifest is not None:
         root = path.rstrip("/").rsplit("/", 1)[0]
@@ -1429,7 +1488,7 @@ def _codes_df(spark: SparkSession, path: str) -> DataFrame:
         for bid, d, stamp in list_epoch_dirs(spark, root):
             if bid in folded or stamp != aid:
                 continue
-            df = df.unionByName(spark.read.parquet(d))
+            df = df.unionByName(reader.parquet(d))
     return df
 
 
@@ -1894,7 +1953,9 @@ class _Codec(NamedTuple):
     # (vectors, artifacts broadcast | None, vec_col, id_col) -> codes frame
     encode: Callable | None = None
     partition: str | None = None  # the codes table's partition column
-    sides: tuple = ()  # artifact dirs; sides[0] marks the kind on disk
+    # artifact dirs (the probe cache's stamp); for a maintained kind
+    # sides[0] marks the kind on disk
+    sides: tuple = ()
     optional_sides: tuple = ()  # artifact dirs only some builds carry
     drift: Callable | None = None  # (vectors, artifacts, vec_col, scope)
 
@@ -1914,6 +1975,7 @@ def _probe_codes(
     round_to: int | None = 4,
     scope=None,
     nprobe: int | None = None,
+    pool: dict | None = None,
 ) -> DataFrame:
     """The one quantized probe kernel (module docstring: "Quantized
     probe family"). Collects the query block once (NULL and zero-norm
@@ -1925,6 +1987,18 @@ def _probe_codes(
     local frame), so the caller's ``queries`` plan runs once. Returns
     (query_id, id, ``codec.approx_col``[, score]); an empty-built index
     or an all-degenerate query block returns that schema with no rows.
+    The artifacts and the codes schema come from the per-version cache
+    (:func:`_serving_artifacts`).
+
+    Pool mode (``pool``: {name: Column over ``vectors``' rows}; a
+    one-query block): no exact cut. Every row of the approx top
+    ``k*refine`` joins ``vectors`` (the full doc rows) once, and
+    carries ``__rank`` (its 1-based rank by (approx DESC, id ASC)),
+    ``__pool_n`` (how many codes rows the pool holds: fewer than
+    ``k*refine`` only when the codes ran out), the unrounded
+    ``__approx`` and exact cosine ``__raw``, and the ``pool`` columns.
+    Any shallower probe's candidates are a rank prefix of the pool, so
+    a caller replays those probes from one scan (rag.retrieve_tiered).
 
     The query payload is a ``scope``-tracked broadcast when a
     dedup.CacheScope is given; otherwise it rides in the scan closure,
@@ -1935,11 +2009,15 @@ def _probe_codes(
 
     from kfai_pipeline_spark.session import local_frame
 
-    arts = codec.load(spark, path)
-    codes_df = _codes_df(spark, path)
+    arts, codes_schema = _serving_artifacts(spark, path, codec)
+    codes_df = _codes_df(spark, path, codes_schema)
     q_collected = queries.select(
         F.col(query_id_col), _as_double(query_vec_col)
     ).collect()
+    if pool is not None and len(q_collected) != 1:
+        raise ValueError(
+            f"a pool probe serves one query, got {len(q_collected)}"
+        )
     _warn_large_query_collect(len(q_collected), codec.name)
     q_rows = [
         r for r in q_collected if r[1] is not None and any(x != 0 for x in r[1])
@@ -1948,6 +2026,18 @@ def _probe_codes(
     qid_field = StructField("query_id", queries.schema[query_id_col].dataType)
     id_field = codes_df.schema[id_col]
     if arts is None or not q_rows:
+        if pool is not None:
+            # the pool columns take their types from the caller's
+            # expressions; a zero-row limit plans as an empty relation
+            return vectors.limit(0).select(
+                F.lit(None).cast(qid_field.dataType).alias("query_id"),
+                id_col,
+                F.lit(0).alias("__rank"),
+                F.lit(0).cast("long").alias("__pool_n"),
+                F.lit(None).cast("double").alias("__approx"),
+                F.lit(None).cast("double").alias("__raw"),
+                *[c.alias(name) for name, c in pool.items()],
+            )
         fields = [
             qid_field, id_field, StructField(codec.approx_col, DoubleType())
         ]
@@ -1986,9 +2076,26 @@ def _probe_codes(
     out_schema = StructType(
         [qid_field, id_field, StructField("__approx", DoubleType())]
     )
-    cands = _top_per_query(
-        codes_df.mapInPandas(scan, schema=out_schema), "__approx", id_col, n_cand
-    )
+    scanned = codes_df.mapInPandas(scan, schema=out_schema)
+    if pool is not None:
+        ranked = _top_per_query(
+            scanned, "__approx", id_col, n_cand, rank_col="__rank"
+        ).withColumn(
+            "__pool_n", F.count(F.lit(1)).over(Window.partitionBy("query_id"))
+        )
+        # the one query rides as a literal: a local query block would
+        # cost a broadcast job
+        q = _as_double(F.lit([float(x) for x in q_rows[0][1]]))
+        return (
+            F.broadcast(ranked)
+            .join(vectors, id_col)
+            .select(
+                "query_id", id_col, "__rank", "__pool_n", "__approx",
+                cosine(_as_double(vec_col), q).alias("__raw"),
+                *[c.alias(name) for name, c in pool.items()],
+            )
+        )
+    cands = _top_per_query(scanned, "__approx", id_col, n_cand)
     if vectors is None:
         return cands.select(
             "query_id", id_col,
@@ -2422,7 +2529,10 @@ def _pq_scores(luts, pdf):
     return np.stack([lut[cols[None, :], C].sum(axis=1) for lut in luts], axis=1)
 
 
-_PQ = _Codec("pq_topk", "approx_dot", _pq_load, _pq_prepare, _pq_scores)
+_PQ = _Codec(
+    "pq_topk", "approx_dot", _pq_load, _pq_prepare, _pq_scores,
+    sides=("codebooks",),
+)
 
 
 def pq_topk(

@@ -309,6 +309,27 @@ def retrieve_tiered(
     predicate is very selective — that is exactly the brute tier, so
     callers with a known-selective predicate pass ``tier="brute"``.
 
+    Round model: round r probes ``k_probe = k*topup_factor^(r-1)`` —
+    the approx top ``k_probe*refine`` candidates, re-ranked exactly to
+    the top ``k_probe`` — and ends the question when the probe came
+    back short (exhausted), its scores are all NULL, its certificate
+    passes, or the rounds are spent. Round 1 never certifies: its
+    ``k_probe = k`` rows can put at most ``n_safe <= k_probe - 1 < k``
+    distinct survivors strictly above their own weakest score, so a
+    question that is not exhausted in round 1 always reaches round 2.
+    One probe scan therefore serves two rounds: it collects the approx
+    top ``k*refine*topup_factor`` (round 2's depth, capped by the last
+    round's) joined once to the doc rows, and the driver replays each
+    round from that pool exactly — the candidate prefix by approx rank,
+    the exact re-rank, the exhaustion and NULL checks and the
+    certificate (no per-round collect or count). Only a round deeper
+    than the pool, with codes left beyond it, scans again, at its own
+    depth x ``topup_factor`` (capped likewise), so per-partition
+    emission never exceeds the deepest round's. The index artifacts
+    and codes schema are read once per index version
+    (similarity._serving_artifacts). The final rows come from one plan:
+    the last round's candidate ids joined back to ``docs``.
+
     ``index_kind`` selects the ANN tier's index: ``"sq8"`` (flat
     1 byte/dim codes scan, :func:`sq8_topk`) or ``"ivfpq"`` (the
     q113/X44 partition-pruned residual-PQ probe, :func:`ivfpq_topk` —
@@ -339,7 +360,7 @@ def retrieve_tiered(
     size x predicate selectivity x index freshness -> tier, with the
     measured curves each cell rests on.
 
-    ``scope`` (a dedup.CacheScope) takes each probe round's query
+    ``scope`` (a dedup.CacheScope) takes each probe scan's query
     block as a broadcast for deterministic release; without one the
     block rides in the scan closure (similarity._probe_codes).
     """
@@ -384,58 +405,53 @@ def retrieve_tiered(
 
     spark = docs.sparkSession
     # a lifecycle serving ROOT resolves to its committed serving
-    # version; a plain index dir passes through (one FS pointer read,
-    # the same cost class as the probe's stats-row collect)
+    # version; a plain index dir passes through (FS calls, no job)
     index_path = resolve_index_path(spark, index_path)
     qdf = local_frame(
         spark,
         [(0, list(map(float, query_vec)))],
         "query_id int, embedding array<double>",
     )
-    vectors = docs.select(id_col, vec_col)
-    k_probe = k
+    # what each pool row carries for the replay: the hits' predicate
+    # (NULL counts as False, as where() drops it), their rounded score
+    # and the dedup key
+    pool_cols = {
+        "__pred": F.coalesce(pred, F.lit(False)),
+        "score": score,
+        "video_id": F.col("video_id"),
+        "start_time": F.col("start_time"),
+    }
+    rounds = max(max_rounds, 1)
+    k_last = k * topup_factor ** (rounds - 1)  # the last round's k_probe
+    k_probe, depth, pool, pool_n = k, 0, [], 0
     while True:
-        # collect the candidate list (<= k*topup_factor^max_rounds rows
-        # by construction — driver-safe): the stats read, the
-        # certificate count, and the final consumer would otherwise
-        # each re-run the corpus-scale codes scan (no shared subplans)
-        cand_rows = (
-            probe(
-                spark, index_path, qdf, k_probe, refine, vectors,
+        if k_probe > depth and pool_n >= depth * refine:
+            # this round is deeper than the pool and the codes did not
+            # run out: one scan, deep enough for the next round too
+            depth = min(k_probe * topup_factor, k_last)
+            pool = probe(
+                spark, index_path, qdf, depth, refine, docs,
                 vec_col=vec_col, id_col=id_col, round_to=round_to,
-                scope=scope, nprobe=nprobe,
-            )
-            .select(id_col, "score")
-            .collect()
-        )
-        id_type = docs.schema[id_col].dataType
-        cands = local_frame(
-            spark,
-            [(r[0],) for r in cand_rows],
-            StructType([StructField(id_col, id_type)]),
-        )
-        # probe ids -> doc rows (tiny candidate set, broadcast by
-        # construction), THEN the metadata predicate. NULL re-scores
-        # drop here too: a zero-norm vector's SQ8 RECONSTRUCTION has
-        # nonzero norm (codes quantize toward the corpus min), so it
-        # can sneak into the candidate pool and re-score NULL — the
-        # same degenerate-vector exclusion as the brute tier.
-        hits = (
-            docs.join(F.broadcast(cands), id_col)
-            .where(pred)
-            .withColumn("score", score)
-            .where(F.col("score").isNotNull())
-        )
-        if len(cand_rows) < k_probe or max_rounds <= 1:
+                scope=scope, nprobe=nprobe, pool=pool_cols,
+            ).collect()
+            pool_n = pool[0]["__pool_n"] if pool else 0
+        # the round's probe, replayed: its candidates are the pool's
+        # approx-rank prefix, re-ranked exactly to the top k_probe
+        ranked = sorted(
+            (r for r in pool if r["__rank"] <= k_probe * refine),
+            # Spark's (__raw DESC NULLS LAST, id ASC)
+            key=lambda r: (r["__raw"] is None, -(r["__raw"] or 0.0), r[id_col]),
+        )[:k_probe]
+        if len(ranked) < k_probe or rounds <= 1:
             # index exhausted (the probe returned fewer rows than
             # asked: nothing left to top up) or round budget spent
             break
         # NULL re-scores (a zero-norm vector whose SQ8 reconstruction
-        # sneaked into the pool — the exclusion comment above) carry no
+        # sneaked into the pool — the exclusion comment below) carry no
         # rank information: the cutoff is the weakest REAL score, the
         # same NULL-ignoring min the batch arm's Spark aggregate
         # computes. All-NULL candidates = nothing rankable to top up.
-        real_scores = [r[1] for r in cand_rows if r[1] is not None]
+        real_scores = [r["score"] for r in ranked if r["score"] is not None]
         if not real_scores:
             break
         cutoff = min(real_scores)
@@ -450,16 +466,34 @@ def retrieve_tiered(
         # k_probe*refine covers the corpus. DISTINCT (video_id,
         # start_time): the dedup stage collapses same-chunk survivors,
         # so k raw rows above the cutoff may dedup below k.
-        n_safe = (
-            hits.where(F.col("score") > F.lit(cutoff))
-            .select("video_id", "start_time")
-            .distinct()
-            .count()
-        )
+        ids = {r[id_col] for r in ranked}
+        n_safe = len({
+            (r["video_id"], r["start_time"])
+            for r in pool
+            if r[id_col] in ids and r["__pred"] and r["score"] is not None
+            and r["score"] > cutoff
+        })
         if n_safe >= k:
             break
         k_probe *= topup_factor
-        max_rounds -= 1
+        rounds -= 1
+    cands = local_frame(
+        spark,
+        [(r[id_col],) for r in ranked],
+        StructType([StructField(id_col, docs.schema[id_col].dataType)]),
+    )
+    # probe ids -> doc rows (tiny candidate set, broadcast by
+    # construction), THEN the metadata predicate. NULL re-scores drop
+    # here too: a zero-norm vector's SQ8 RECONSTRUCTION has nonzero
+    # norm (codes quantize toward the corpus min), so it can sneak into
+    # the candidate pool and re-score NULL — the same degenerate-vector
+    # exclusion as the brute tier.
+    hits = (
+        docs.join(F.broadcast(cands), id_col)
+        .where(pred)
+        .withColumn("score", score)
+        .where(F.col("score").isNotNull())
+    )
     return _dedup_cap_resort(hits, k, deterministic=True, id_col=id_col)
 
 
@@ -597,8 +631,12 @@ def retrieve_tiered_batch(
     certificate/top-up rules (NULL-ignoring cutoff min, all-NULL pool
     = nothing to top up, strict > certificate, exhaustion on a short
     probe) and _dedup_cap_resort's deterministic windows with query_id
-    prepended. Any change to either rule set must land in BOTH arms —
-    the q126 oracle and the batch-vs-loop parity tests are the tripwire.
+    prepended. The single-query arm decides those rules on the driver,
+    replaying its rounds from one collected candidate pool per two
+    rounds; this arm decides them in Spark, one probe and one status
+    collect per round. Any change to either rule set must land in BOTH
+    arms — the q126 oracle and the batch-vs-loop parity tests are the
+    tripwire.
     """
     if index_path is None:
         raise ValueError("retrieve_tiered_batch needs index_path")

@@ -5,6 +5,7 @@ edge rows (null transcripts, empty hosts, published_at=0, dirty text)."""
 from __future__ import annotations
 
 import random
+import uuid
 
 HOST_POOL = [f"Host {chr(65 + i)}" for i in range(10)]
 SHOWS = ["Alpha Show", "Beta Cast", "Gamma Hour"]
@@ -68,3 +69,24 @@ def plan_leaf_kinds(df) -> list[str]:
     (``LocalRelation``, ``LogicalRelation`` for a file scan, ...)."""
     leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
     return [leaves.apply(i).getClass().getSimpleName() for i in range(leaves.size())]
+
+
+def jobs_started(spark, action) -> tuple[object, int]:
+    """Run ``action`` under a fresh job group; its result and job count."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    # setJobGroup sets all three; restore each so the shared session's
+    # later jobs carry none of them
+    keys = (
+        "spark.jobGroup.id",
+        "spark.job.description",
+        "spark.job.interruptOnCancel",
+    )
+    prev = {key: sc.getLocalProperty(key) for key in keys}
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        for key, value in prev.items():
+            sc.setLocalProperty(key, value)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -91,6 +91,24 @@ def test_query_stage(spark, catalog, workdir):
     assert sources.count() == 1
 
 
+def test_query_use_index_without_index_raises(spark, tmp_path):
+    """``use_index=True`` on a workspace whose chain never ran stage 10
+    raises the "no ANN index" error instead of guessing a kind and
+    failing on a missing artifact path."""
+    wd = str(tmp_path)
+    vec = [float(x) for x in hash_embed(["a chunk"])[0]]
+    spark.createDataFrame(
+        [("vid00000001", 0.0, "Alpha Show", 1_600_000_000, "T", "a chunk", vec)],
+        "video_id string, start_time double, show_name string, "
+        "published_at long, title string, text string, embedding array<double>",
+    ).write.parquet(f"{wd}/store")
+    with pytest.raises(FileNotFoundError, match="no ANN index at"):
+        app.query(
+            spark, wd, "anything", lambda q: ParsedQuery(), hash_embed,
+            lambda q, rows: ("answer", []), use_index=True,
+        )
+
+
 def test_bad_stage_rejected(spark, catalog, workdir):
     with pytest.raises(ValueError, match="unknown stage"):
         app.run_chain(spark, catalog, workdir, "1>42")

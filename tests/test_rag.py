@@ -393,6 +393,166 @@ def test_retrieve_tiered_topup_exhausts_on_selective_filter(tiered_docs):
     assert a == b and len(a) == 15
 
 
+def _ann_question(docs, idx, text, parsed, **kw):
+    from kfai_pipeline_spark.plans.rag import retrieve_tiered
+
+    qv = [float(x) for x in hash_embed([text])[0]]
+    return retrieve_tiered(
+        docs, qv, parsed, id_col="doc_id", tier="ann", index_path=idx, **kw
+    )
+
+
+# certificate first passes in round 3 (k_probe 20): past the first pool,
+# whose depth is round 2's, and with 20 x refine >= 90 rows exhaustive
+ROUND3 = dict(
+    text="topic 3 theme 2", parsed=ParsedQuery(shows=["Show 1"]),
+    k=5, refine=5, topup_factor=2, max_rounds=4,
+)
+
+
+def test_retrieve_tiered_job_budget(spark, tiered_docs):
+    """An ANN question's Spark jobs do not grow with its top-up rounds:
+    one pool scan serves rounds 1 and 2, and a question that reaches
+    round 3 adds exactly one more pool scan. The counts are the same at
+    1, 4 and 8 cores; a change that raises one says why in CHANGES.md."""
+    from kfai_pipeline_spark.operators.similarity import _serving_probe
+    from kfai_pipeline_spark.plans.rag import retrieve_tiered
+    from kfai_pipeline_spark.session import local_frame
+    from tests.fixtures import jobs_started
+
+    docs, idx = tiered_docs
+
+    def jobs(build):
+        # the pool scans run while the plan is built, so count both
+        return jobs_started(spark, lambda: build().collect())[1]
+
+    # the first probe of an index version reads its artifacts (3 jobs);
+    # the pins below hold for every later question
+    jobs(lambda: _ann_question(docs, idx, "warm up", ParsedQuery(), k=5))
+    qv = [float(x) for x in hash_embed(["topic 3 theme 2"])[0]]
+    brute = jobs(
+        lambda: retrieve_tiered(docs, qv, ParsedQuery(), k=5, tier="brute")
+    )
+    # 90 rows < k: the round-1 probe comes back short (exhausted)
+    exhausted = jobs(lambda: _ann_question(
+        docs, idx, "theme 0", ParsedQuery(), k=100, refine=1
+    ))
+    # unfiltered: round 1 never certifies, round 2 does
+    certified = jobs(lambda: _ann_question(
+        docs, idx, "topic 3 theme 2", ParsedQuery(), k=5, refine=4
+    ))
+    round3 = jobs(lambda: _ann_question(docs, idx, **ROUND3))
+    pool_scan = jobs(lambda: _serving_probe("sq8")(
+        spark, idx,
+        local_frame(spark, [(0, qv)], "query_id int, embedding array<double>"),
+        20, 5, docs, id_col="doc_id", pool={"video_id": F.col("video_id")},
+    ))
+    assert exhausted == certified
+    assert round3 == certified + pool_scan
+    assert (brute, exhausted, certified, round3, pool_scan) == (2, 6, 6, 9, 3)
+
+
+def test_retrieve_tiered_round3_matches_brute_and_batch(spark, tiered_docs):
+    """The rescan path: a question whose certificate first passes in
+    round 3 is served by a second pool scan, and its rows equal the
+    brute tier's (exhaustive regime) and the batched arm's."""
+    from kfai_pipeline_spark.plans.rag import (
+        retrieve_tiered,
+        retrieve_tiered_batch,
+    )
+
+    docs, idx = tiered_docs
+    kw = {k: v for k, v in ROUND3.items() if k not in ("text", "parsed")}
+    qv = [float(x) for x in hash_embed([ROUND3["text"]])[0]]
+    cols = ["doc_id", "video_id", "start_time", "score"]
+    ann = _ann_question(docs, idx, **ROUND3).select(*cols).collect()
+    brute = retrieve_tiered(
+        docs, qv, ROUND3["parsed"], k=5, tier="brute"
+    ).select(*cols).collect()
+    batch = retrieve_tiered_batch(
+        docs,
+        spark.createDataFrame([(0, qv)], "query_id int, embedding array<double>"),
+        ROUND3["parsed"], id_col="doc_id", index_path=idx, **kw,
+    ).select(*cols).collect()
+    assert len(ann) == 5
+    assert sorted(map(tuple, ann)) == sorted(map(tuple, brute))
+    assert sorted(map(tuple, ann)) == sorted(map(tuple, batch))
+
+
+def _same_arrays(x, y) -> bool:
+    import numpy as np
+
+    if isinstance(x, (tuple, list)):
+        return len(x) == len(y) and all(map(_same_arrays, x, y))
+    if x is None or y is None:
+        return x is y
+    return np.array_equal(x, y)
+
+
+def test_retrieve_tiered_artifact_cache_follows_rebuilds(spark, tmp_path):
+    """The probe's per-version artifact cache never serves a stale
+    version in one process: after an in-place sq8 rebuild over a
+    shifted corpus (new [mn, mx]), an in-place rebuild as ivfpq, and a
+    lifecycle root rebuilt to a new version, the cached artifacts equal
+    a fresh read and the ANN rows equal brute (exhaustive regime)."""
+    from kfai_pipeline_spark.operators.index_lifecycle import (
+        init_serving_index,
+        rebuild_serving_index,
+        resolve_index_path,
+    )
+    from kfai_pipeline_spark.operators.similarity import (
+        _codec,
+        _serving_artifacts,
+        index_kind,
+    )
+    from kfai_pipeline_spark.plans.rag import build_retrieval_index, retrieve_tiered
+
+    texts = [f"cache doc {i} theme {i % 4}" for i in range(24)]
+    vecs = [[float(x) for x in v] for v in hash_embed(texts)]
+
+    def corpus(shift):
+        return spark.createDataFrame(
+            [
+                (i, f"v{i}", 0.0, f"Show {i % 3}", 1_600_000_000 + i, f"T{i}",
+                 texts[i], [x * 3.0 + shift for x in vecs[i]])
+                for i in range(24)
+            ],
+            "doc_id long, video_id string, start_time double, show_name string, "
+            "published_at long, title string, text string, embedding array<double>",
+        )
+
+    qv = [float(x) for x in hash_embed(["theme 2"])[0]]
+    cols = ["doc_id", "score"]
+
+    def check(docs, path):
+        kind = index_kind(spark, path)
+        ann = retrieve_tiered(
+            docs, qv, ParsedQuery(), k=6, tier="ann", index_path=path,
+            index_kind=kind, refine=8, nprobe=16,
+        )
+        brute = retrieve_tiered(docs, qv, ParsedQuery(), k=6, tier="brute")
+        assert sorted(map(tuple, ann.select(*cols).collect())) == sorted(
+            map(tuple, brute.select(*cols).collect())
+        )
+        vpath = resolve_index_path(spark, path)
+        cached = _serving_artifacts(spark, vpath, _codec(kind))[0]
+        assert _same_arrays(cached, _codec(kind).load(spark, vpath))
+
+    plain = str(tmp_path / "plain")
+    a, b = corpus(0.0), corpus(0.5)
+    build_retrieval_index(a, plain)
+    check(a, plain)
+    build_retrieval_index(b, plain)  # in place, sq8, new [mn, mx]
+    check(b, plain)
+    build_retrieval_index(b, plain, kind="ivfpq", n_clusters=4)
+    check(b, plain)
+    root = str(tmp_path / "root")
+    init_serving_index(a, root)
+    check(a, root)
+    rebuild_serving_index(b, root)
+    check(b, root)
+
+
 def test_retrieve_tiered_routing(tiered_docs):
     """tier='auto' routes by corpus size vs threshold; tier='ann'
     without an index is an error."""

@@ -3,31 +3,9 @@
 from __future__ import annotations
 
 import datetime
-import uuid
 
 from kfai_pipeline_spark.session import local_frame
-from tests.fixtures import plan_leaf_kinds
-
-
-def _jobs_started(spark, action) -> tuple[object, int]:
-    """Run ``action`` under a fresh job group; its result and job count."""
-    sc = spark.sparkContext
-    group = f"local-frame-{uuid.uuid4().hex}"
-    # setJobGroup sets all three; restore each so the shared session's
-    # later jobs carry none of them
-    keys = (
-        "spark.jobGroup.id",
-        "spark.job.description",
-        "spark.job.interruptOnCancel",
-    )
-    prev = {key: sc.getLocalProperty(key) for key in keys}
-    sc.setJobGroup(group, group)
-    try:
-        out = action()
-    finally:
-        for key, value in prev.items():
-            sc.setLocalProperty(key, value)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+from tests.fixtures import jobs_started, plan_leaf_kinds
 
 
 SCHEMA = "s string, l long, i int, ad array<double>, af array<float>"
@@ -41,7 +19,7 @@ def test_local_frame_round_trip(spark):
     ]
     df = local_frame(spark, rows, SCHEMA)
     assert df.schema == spark.createDataFrame([], SCHEMA).schema
-    got, n_jobs = _jobs_started(spark, df.collect)
+    got, n_jobs = jobs_started(spark, df.collect)
     assert [tuple(r) for r in got] == rows
     assert n_jobs == 0
     assert plan_leaf_kinds(df) == ["LocalRelation"]
@@ -53,7 +31,7 @@ def test_local_frame_empty_and_struct_schema(spark):
     schema = StructType([StructField("id", LongType())])
     df = local_frame(spark, [], schema)
     assert df.schema == schema
-    got, n_jobs = _jobs_started(spark, df.collect)
+    got, n_jobs = jobs_started(spark, df.collect)
     assert got == [] and n_jobs == 0
     assert plan_leaf_kinds(df) == ["LocalRelation"]
 
