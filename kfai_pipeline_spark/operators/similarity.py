@@ -27,8 +27,9 @@ the codes table (``_codes_df``: build + appends + streamed epochs) with
 full-precision vectors when given (``quantized_topk``, the expression
 arm, ends in the same re-rank). A probe reads its kind's artifacts and
 the codes schema once per index version (``_serving_artifacts``), and
-its pool mode hands ``rag.retrieve_tiered`` one candidate pool to replay
-its top-up rounds from. A kind is a ``_Codec`` of four parts:
+its pool mode hands both tiered arms (``rag._tiered_rounds``) one
+candidate pool per query, to replay the top-up rounds from. A kind is a
+``_Codec`` of four parts:
 
 * artifact load — ``_sq8_load`` (per-dim stats), ``_pq_load``
   (codebooks), ``_ivfpq_load`` (coarse book, codebooks, OPQ rotation);
@@ -1431,7 +1432,7 @@ def _serving_artifacts(spark: SparkSession, path: str, codec):
     versions are immutable and appends leave the artifacts frozen, so a
     hit re-reads nothing; a rebuild in place changes the stamp and
     misses. A miss pays the artifact read and the codes schema
-    inference (three Spark jobs for sq8)."""
+    inference (two Spark jobs for sq8)."""
     key = (codec.name, path.rstrip("/"), _artifact_stamp(spark, path, codec))
     with _artifact_lock:
         if key in _artifact_cache:
@@ -1990,15 +1991,17 @@ def _probe_codes(
     The artifacts and the codes schema come from the per-version cache
     (:func:`_serving_artifacts`).
 
-    Pool mode (``pool``: {name: Column over ``vectors``' rows}; a
-    one-query block): no exact cut. Every row of the approx top
+    Pool mode (``pool``: {name: Column over ``vectors``' rows and
+    ``query_id``}): no exact cut. Every row of each query's approx top
     ``k*refine`` joins ``vectors`` (the full doc rows) once, and
     carries ``__rank`` (its 1-based rank by (approx DESC, id ASC)),
-    ``__pool_n`` (how many codes rows the pool holds: fewer than
-    ``k*refine`` only when the codes ran out), the unrounded
-    ``__approx`` and exact cosine ``__raw``, and the ``pool`` columns.
-    Any shallower probe's candidates are a rank prefix of the pool, so
-    a caller replays those probes from one scan (rag.retrieve_tiered).
+    ``__pool_n`` (how many codes rows that query's pool holds: fewer
+    than ``k*refine`` only when the codes ran out), the exact cosine
+    ``__raw``, its rounded ``score`` and the ``pool`` columns. Any
+    shallower probe's candidates are a rank prefix of the pool, so a
+    caller replays those probes from one scan (rag._tiered_rounds).
+    One query's vector rides as a literal; a block of several joins
+    its vectors by ``query_id``, as the re-rank does.
 
     The query payload is a ``scope``-tracked broadcast when a
     dedup.CacheScope is given; otherwise it rides in the scan closure,
@@ -2014,29 +2017,27 @@ def _probe_codes(
     q_collected = queries.select(
         F.col(query_id_col), _as_double(query_vec_col)
     ).collect()
-    if pool is not None and len(q_collected) != 1:
-        raise ValueError(
-            f"a pool probe serves one query, got {len(q_collected)}"
-        )
     _warn_large_query_collect(len(q_collected), codec.name)
     q_rows = [
         r for r in q_collected if r[1] is not None and any(x != 0 for x in r[1])
     ]
     # id types follow the data: string keys work exactly like longs
     qid_field = StructField("query_id", queries.schema[query_id_col].dataType)
+    q_schema = StructType([qid_field, StructField("__q", ArrayType(DoubleType()))])
     id_field = codes_df.schema[id_col]
     if arts is None or not q_rows:
         if pool is not None:
             # the pool columns take their types from the caller's
             # expressions; a zero-row limit plans as an empty relation
-            return vectors.limit(0).select(
-                F.lit(None).cast(qid_field.dataType).alias("query_id"),
-                id_col,
-                F.lit(0).alias("__rank"),
-                F.lit(0).cast("long").alias("__pool_n"),
-                F.lit(None).cast("double").alias("__approx"),
-                F.lit(None).cast("double").alias("__raw"),
+            return vectors.limit(0).withColumns({
+                "query_id": F.lit(None).cast(qid_field.dataType),
+                "__rank": F.lit(0),
+                "__pool_n": F.lit(0).cast("long"),
+                "__raw": F.lit(None).cast("double"),
+            }).select(
+                "query_id", id_col, "__rank", "__pool_n", "__raw",
                 *[c.alias(name) for name, c in pool.items()],
+                F.col("__raw").alias("score"),
             )
         fields = [
             qid_field, id_field, StructField(codec.approx_col, DoubleType())
@@ -2083,18 +2084,21 @@ def _probe_codes(
         ).withColumn(
             "__pool_n", F.count(F.lit(1)).over(Window.partitionBy("query_id"))
         )
-        # the one query rides as a literal: a local query block would
-        # cost a broadcast job
-        q = _as_double(F.lit([float(x) for x in q_rows[0][1]]))
-        return (
-            F.broadcast(ranked)
-            .join(vectors, id_col)
-            .select(
-                "query_id", id_col, "__rank", "__pool_n", "__approx",
-                cosine(_as_double(vec_col), q).alias("__raw"),
-                *[c.alias(name) for name, c in pool.items()],
+        joined = F.broadcast(ranked).join(vectors, id_col)
+        if len(q_rows) == 1:
+            # one query rides as a literal: a local query block would
+            # cost a broadcast job
+            q = _as_double(F.lit([float(x) for x in q_rows[0][1]]))
+        else:
+            q = F.col("__q")
+            joined = joined.join(
+                F.broadcast(local_frame(spark, q_rows, q_schema)), "query_id"
             )
-        )
+        return joined.select(
+            "query_id", id_col, "__rank", "__pool_n",
+            cosine(_as_double(vec_col), q).alias("__raw"),
+            *[c.alias(name) for name, c in pool.items()],
+        ).withColumn("score", _rounded("__raw", round_to))
     cands = _top_per_query(scanned, "__approx", id_col, n_cand)
     if vectors is None:
         return cands.select(
@@ -2102,10 +2106,7 @@ def _probe_codes(
             _rounded("__approx", round_to).alias(codec.approx_col),
         )
     # re-rank against the block collected above, not the caller's plan
-    q_block = local_frame(
-        spark, q_collected,
-        StructType([qid_field, StructField("__q", ArrayType(DoubleType()))]),
-    )
+    q_block = local_frame(spark, q_collected, q_schema)
     return _exact_rerank(
         cands, vectors, q_block, k, codec.approx_col,
         vec_col, id_col, "__q", "query_id", round_to,
@@ -2138,7 +2139,10 @@ def _adc_luts(books, Q):
 def _sq8_load(spark: SparkSession, path: str):
     import numpy as np
 
-    srow = spark.read.parquet(f"{path}/stats").collect()[0]
+    # the schema quantization_stats writes: inferring it costs a job
+    srow = spark.read.schema("__mn array<double>, __mx array<double>").parquet(
+        f"{path}/stats"
+    ).collect()[0]
     mn = np.array(srow["__mn"], dtype=np.float64)
     mx = np.array(srow["__mx"], dtype=np.float64)
     return (mn, mx) if mn.size else None

@@ -24,12 +24,19 @@ injected callables; everything between them is Spark.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import (
+    BooleanType,
+    DoubleType,
+    StructField,
+    StructType,
+    _parse_datatype_string,
+)
 from pyspark.sql.window import Window
 
 from kfai_pipeline_spark.operators.similarity import (
@@ -309,26 +316,19 @@ def retrieve_tiered(
     predicate is very selective — that is exactly the brute tier, so
     callers with a known-selective predicate pass ``tier="brute"``.
 
-    Round model: round r probes ``k_probe = k*topup_factor^(r-1)`` —
-    the approx top ``k_probe*refine`` candidates, re-ranked exactly to
-    the top ``k_probe`` — and ends the question when the probe came
-    back short (exhausted), its scores are all NULL, its certificate
-    passes, or the rounds are spent. Round 1 never certifies: its
-    ``k_probe = k`` rows can put at most ``n_safe <= k_probe - 1 < k``
-    distinct survivors strictly above their own weakest score, so a
-    question that is not exhausted in round 1 always reaches round 2.
-    One probe scan therefore serves two rounds: it collects the approx
-    top ``k*refine*topup_factor`` (round 2's depth, capped by the last
-    round's) joined once to the doc rows, and the driver replays each
-    round from that pool exactly — the candidate prefix by approx rank,
-    the exact re-rank, the exhaustion and NULL checks and the
-    certificate (no per-round collect or count). Only a round deeper
-    than the pool, with codes left beyond it, scans again, at its own
-    depth x ``topup_factor`` (capped likewise), so per-partition
-    emission never exceeds the deepest round's. The index artifacts
-    and codes schema are read once per index version
+    Round model (:func:`_decide_rounds`, the rules both tiered arms
+    share): round r probes ``k_probe = k*topup_factor^(r-1)`` — the
+    approx top ``k_probe*refine`` candidates, re-ranked exactly to the
+    top ``k_probe``. Round 1 never certifies, so one probe scan serves
+    two rounds: it collects the approx top ``k*refine*topup_factor``
+    (round 2's depth, capped by the last round's) joined once to the
+    doc rows, and the driver replays the rounds from that pool
+    (:func:`_tiered_rounds` on a one-query block). Only a round deeper
+    than the pool, with codes left beyond it, scans again, so
+    per-partition emission never exceeds the deepest round's. The index
+    artifacts and codes schema are read once per index version
     (similarity._serving_artifacts). The final rows come from one plan:
-    the last round's candidate ids joined back to ``docs``.
+    the decided round's hits joined back to ``docs``.
 
     ``index_kind`` selects the ANN tier's index: ``"sq8"`` (flat
     1 byte/dim codes scan, :func:`sq8_topk`) or ``"ivfpq"`` (the
@@ -380,9 +380,6 @@ def retrieve_tiered(
         use_ann = False
 
     pred = metadata_predicate(parsed) & topic_predicate(parsed.topics)
-    qv = F.lit(query_vec).cast("array<double>")
-    score = F.round(cosine(_as_double(vec_col), qv), round_to)
-
     if not use_ann:
         # NULL scores (NULL/zero-norm embeddings) are EXCLUDED — the
         # degenerate-vector contract, and what the ANN tier does
@@ -391,9 +388,10 @@ def retrieve_tiered(
         # Chunk-grain frames without an id column fall back to the
         # weaker (video_id, start_time) tie-break — those ARE the row
         # key at chunk grain, so it stays a total order there.
+        qv = F.lit(query_vec).cast("array<double>")
         scored = (
             docs.where(pred)
-            .withColumn("score", score)
+            .withColumn("score", F.round(cosine(_as_double(vec_col), qv), round_to))
             .where(F.col("score").isNotNull())
         )
         id_arg = id_col if id_col in docs.columns else None
@@ -407,55 +405,70 @@ def retrieve_tiered(
     # a lifecycle serving ROOT resolves to its committed serving
     # version; a plain index dir passes through (FS calls, no job)
     index_path = resolve_index_path(spark, index_path)
-    qdf = local_frame(
-        spark,
-        [(0, list(map(float, query_vec)))],
-        "query_id int, embedding array<double>",
-    )
-    # what each pool row carries for the replay: the hits' predicate
-    # (NULL counts as False, as where() drops it), their rounded score
-    # and the dedup key
-    pool_cols = {
-        "__pred": F.coalesce(pred, F.lit(False)),
-        "score": score,
-        "video_id": F.col("video_id"),
-        "start_time": F.col("start_time"),
-    }
-    rounds = max(max_rounds, 1)
-    k_last = k * topup_factor ** (rounds - 1)  # the last round's k_probe
-    k_probe, depth, pool, pool_n = k, 0, [], 0
+    cands = _tiered_rounds(
+        docs, probe, index_path, pred, [(0, list(map(float, query_vec)))],
+        "query_id int, embedding array<double>", k, refine, topup_factor,
+        max_rounds, id_col, scope, vec_col=vec_col, round_to=round_to,
+        nprobe=nprobe,
+    ).drop("query_id")
+    # the decided hits (a local frame: its broadcast is one one-task
+    # job) -> doc rows
+    hits = docs.join(F.broadcast(cands), id_col)
+    return _dedup_cap_resort(hits, k, deterministic=True, id_col=id_col)
+
+
+def _pool_depth(k_probe: int, topup_factor: int, rounds: int) -> int:
+    """A pool's depth: the ``k_probe`` of the second round it serves.
+    Round 1 never certifies (its ``k_probe = k`` rows put at most
+    ``n_safe <= k - 1`` distinct survivors strictly above their own
+    weakest score), so one pool serves two rounds, or the last one."""
+    return k_probe * topup_factor ** (min(2, rounds) - 1)
+
+
+def _decide_rounds(
+    pool: list, k_probe: int, k: int, refine: int, topup_factor: int,
+    rounds: int, id_col: str,
+) -> list | None:
+    """The round rules of both tiered arms, for one query: replay its
+    rounds from ``pool`` (its pool rows, as :func:`_tiered_rounds`
+    probes them), starting at the round that probes ``k_probe`` with
+    ``rounds`` rounds left. Returns the decided round's hits as (id,
+    score) pairs, or None when the query needs a deeper pool.
+
+    Round r probes ``k_probe = k*topup_factor^(r-1)``: the approx top
+    ``k_probe*refine`` candidates (the pool's approx-rank prefix),
+    re-ranked exactly to the top ``k_probe``. A round ends the query
+    when its probe comes back short (the index is exhausted), its
+    scores are all NULL, its certificate passes, or the rounds are
+    spent. A round deeper than the pool needs a rescan only when the
+    pool's codes did not run out."""
+    depth = _pool_depth(k_probe, topup_factor, rounds)
+    full = bool(pool) and pool[0]["__pool_n"] >= depth * refine
     while True:
-        if k_probe > depth and pool_n >= depth * refine:
-            # this round is deeper than the pool and the codes did not
-            # run out: one scan, deep enough for the next round too
-            depth = min(k_probe * topup_factor, k_last)
-            pool = probe(
-                spark, index_path, qdf, depth, refine, docs,
-                vec_col=vec_col, id_col=id_col, round_to=round_to,
-                scope=scope, nprobe=nprobe, pool=pool_cols,
-            ).collect()
-            pool_n = pool[0]["__pool_n"] if pool else 0
-        # the round's probe, replayed: its candidates are the pool's
-        # approx-rank prefix, re-ranked exactly to the top k_probe
+        if k_probe > depth and full:
+            return None
         ranked = sorted(
             (r for r in pool if r["__rank"] <= k_probe * refine),
             # Spark's (__raw DESC NULLS LAST, id ASC)
             key=lambda r: (r["__raw"] is None, -(r["__raw"] or 0.0), r[id_col]),
         )[:k_probe]
+        # hits: the rows the predicate keeps, minus NULL re-scores — a
+        # zero-norm vector's SQ8 RECONSTRUCTION has nonzero norm, so it
+        # can enter the pool and re-score NULL (the brute tier's
+        # degenerate-vector exclusion)
+        hits = [r for r in ranked if r["__pred"] and r["score"] is not None]
         if len(ranked) < k_probe or rounds <= 1:
             # index exhausted (the probe returned fewer rows than
             # asked: nothing left to top up) or round budget spent
             break
-        # NULL re-scores (a zero-norm vector whose SQ8 reconstruction
-        # sneaked into the pool — the exclusion comment below) carry no
-        # rank information: the cutoff is the weakest REAL score, the
-        # same NULL-ignoring min the batch arm's Spark aggregate
-        # computes. All-NULL candidates = nothing rankable to top up.
+        # NULL re-scores (a zero-norm vector's reconstruction) carry no
+        # rank information: the cutoff is the weakest REAL score. All-
+        # NULL candidates = nothing rankable to top up.
         real_scores = [r["score"] for r in ranked if r["score"] is not None]
         if not real_scores:
             break
         cutoff = min(real_scores)
-        # certificate-gated early exit: break only when k survivors
+        # certificate-gated early exit: stop only when k survivors
         # score STRICTLY above the probe's weakest returned candidate
         # (rounded domain, same expression both sides) — an unfetched
         # row scores <= the cutoff, so it can neither beat nor TIE any
@@ -466,35 +479,100 @@ def retrieve_tiered(
         # k_probe*refine covers the corpus. DISTINCT (video_id,
         # start_time): the dedup stage collapses same-chunk survivors,
         # so k raw rows above the cutoff may dedup below k.
-        ids = {r[id_col] for r in ranked}
         n_safe = len({
-            (r["video_id"], r["start_time"])
-            for r in pool
-            if r[id_col] in ids and r["__pred"] and r["score"] is not None
-            and r["score"] > cutoff
+            (r["video_id"], r["start_time"]) for r in hits if r["score"] > cutoff
         })
         if n_safe >= k:
             break
         k_probe *= topup_factor
         rounds -= 1
-    cands = local_frame(
-        spark,
-        [(r[id_col],) for r in ranked],
-        StructType([StructField(id_col, docs.schema[id_col].dataType)]),
+    return [(r[id_col], r["score"]) for r in hits]
+
+
+def _decide_group(args: tuple, pdf):
+    """:func:`_decide_rounds` over one query's pool rows on an executor
+    (``groupBy("query_id").applyInPandas``): the decided hits, or one
+    ``__deeper`` row when the query needs a deeper pool."""
+    import pandas as pd
+
+    # the driver sees NULL as None; Arrow hands pandas NaN
+    rows = pdf.astype(object).where(pdf.notna(), None).to_dict("records")
+    hits = _decide_rounds(rows, *args)
+    out = [(None, None, True)] if hits is None else [(*h, False) for h in hits]
+    return pd.DataFrame(
+        [(rows[0]["query_id"], *r) for r in out],
+        columns=["query_id", args[-1], "score", "__deeper"],
     )
-    # probe ids -> doc rows (tiny candidate set, broadcast by
-    # construction), THEN the metadata predicate. NULL re-scores drop
-    # here too: a zero-norm vector's SQ8 RECONSTRUCTION has nonzero
-    # norm (codes quantize toward the corpus min), so it can sneak into
-    # the candidate pool and re-score NULL — the same degenerate-vector
-    # exclusion as the brute tier.
-    hits = (
-        docs.join(F.broadcast(cands), id_col)
-        .where(pred)
-        .withColumn("score", score)
-        .where(F.col("score").isNotNull())
-    )
-    return _dedup_cap_resort(hits, k, deterministic=True, id_col=id_col)
+
+
+def _tiered_rounds(
+    docs: DataFrame, probe: Callable, index_path: str, pred: Column,
+    block: list, block_schema, k: int, refine: int, topup_factor: int,
+    max_rounds: int, id_col: str, scope=None, **probe_kw,
+) -> DataFrame:
+    """The top-up loop of both tiered arms: the decided hits (query_id,
+    ``id_col``, score) of the queries in ``block`` (rows positional to
+    ``block_schema``, query id first). Each pass scans one pool, with
+    ``probe``'s pool mode over ``docs``, for every pending query and
+    decides each with :func:`_decide_rounds`; only the queries that
+    need a deeper pool scan again, at the round after the pool's depth.
+
+    Where the rules run depends only on the pass's block size: one
+    query's pool is collected and replayed on the driver; a block of
+    several replays each query's pool on the executors, materialises
+    the result once and collects only the ids that need a deeper pool,
+    so the driver traffic is O(#queries) rows per pass."""
+    spark = docs.sparkSession
+    if isinstance(block_schema, str):
+        block_schema = _parse_datatype_string(block_schema)
+    schema = StructType([
+        StructField("query_id", block_schema[0].dataType),
+        docs.schema[id_col],
+        StructField("score", DoubleType()),
+    ])
+    status = StructType(schema.fields + [StructField("__deeper", BooleanType())])
+    # what each pool row carries for the rules: the hits' predicate
+    # (NULL counts as False, as where() drops it) and the dedup key
+    pool_cols = {
+        "__pred": F.coalesce(pred, F.lit(False)),
+        "video_id": F.col("video_id"),
+        "start_time": F.col("start_time"),
+    }
+    rounds, k_probe, parts = max(max_rounds, 1), k, []
+    while block:
+        pooled = probe(
+            spark, index_path, local_frame(spark, block, block_schema),
+            _pool_depth(k_probe, topup_factor, rounds), refine, docs,
+            id_col=id_col, scope=scope, pool=pool_cols, **probe_kw,
+        )
+        args = (k_probe, k, refine, topup_factor, rounds, id_col)
+        if len(block) == 1:
+            hits = _decide_rounds(pooled.collect(), *args)
+            if hits is not None:
+                parts.append(local_frame(
+                    spark, [(block[0][0], i, s) for i, s in hits], schema
+                ))
+                block = []
+        else:
+            decided = (
+                pooled.groupBy("query_id")
+                .applyInPandas(functools.partial(_decide_group, args), status)
+                .localCheckpoint(eager=True)
+            )
+            if scope is not None:
+                scope.add(decided)
+            parts.append(decided.where(~F.col("__deeper")).drop("__deeper"))
+            # a pool that serves the last round decides every query
+            deeper = set() if rounds <= 2 else {
+                r[0] for r in decided.where("__deeper").select("query_id").collect()
+            }
+            block = [r for r in block if r[0] in deeper]
+        served = min(2, rounds)
+        k_probe *= topup_factor ** served
+        rounds -= served
+    if not parts:
+        return local_frame(spark, [], schema)
+    return functools.reduce(DataFrame.unionByName, parts)
 
 
 def _parsed_pred_key(p: ParsedQuery) -> str:
@@ -580,27 +658,28 @@ def retrieve_tiered_batch(
     ``query_id``, so chunked == unchunked rows (parity-pinned);
     rows whose query id is NULL ride with the first chunk so the
     single-pass NULL behavior (no output rows under a shared filter —
-    the probe kernels key by id; a loud raise under a dict filter) is
+    a NULL id names no question; a loud raise under a dict filter) is
     preserved. ``None`` disables chunking (the pre-round-12
     single-pass shape, and what each chunk runs internally).
 
-    Scale shape (the q76/q120 per-batch local top-k pattern): each
-    top-up round runs ONE probe over the codes table serving ALL
-    still-pending queries (the probe kernel is natively multi-query —
-    the query block ships into the scan);
-    the candidate frame (<= pending x k_probe rows, id+score only) is
-    localCheckpoint-materialized so the certificate stats, the round's
-    hits, and the final consumer reuse one scan (Spark shares no
-    subplans); the doc join-back broadcasts the DISTINCT candidate id
-    set (never a corpus shuffle); and the driver traffic is the query
-    block, collected once per pass, plus the O(#queries)-row per-round
-    status frame deciding who tops up. The block is held as a local
-    frame that serves every round, so the caller's ``queries`` plan
-    runs once per pass (plus one distinct-id collect when the block
-    has more than ``max_pending`` rows).
-    Queries satisfying the certificate (or exhausting the index) leave
-    the pending set; the rest re-probe at ``k_probe * topup_factor`` —
-    per-query probe depth, not a uniform worst case.
+    Scale shape (the q76/q120 per-batch local top-k pattern): the
+    rounds are :func:`retrieve_tiered`'s, decided by the same
+    :func:`_tiered_rounds` loop. One pool scan over the codes table, at
+    round 2's depth, serves ALL pending queries (the probe kernel is
+    natively multi-query — the query block ships into the scan);
+    ``groupBy(query_id).applyInPandas`` replays each query's rounds
+    from its pool on the executors (:func:`_decide_rounds`), and the
+    decided rows are localCheckpoint-materialized once, so the status
+    collect and the final consumer reuse one scan (Spark shares no
+    subplans). Only queries whose pool was too shallow, with codes left
+    beyond it, scan again, at the next round's depth — per-query probe
+    depth, not a uniform worst case. The doc join-back broadcasts the
+    DISTINCT decided id set (never a corpus shuffle). Driver traffic is
+    O(#queries) rows per pass: the query block, collected once and held
+    as a local frame (so the caller's ``queries`` plan runs once, plus
+    one distinct-id collect when the block has more than
+    ``max_pending`` rows), and the ids that need a deeper pool; no
+    candidate pool of a multi-query block reaches the driver.
 
     ``parsed`` is either one shared :class:`ParsedQuery` (a recall
     curve over a single corpus slice) or a ``{query_id value ->
@@ -609,10 +688,10 @@ def retrieve_tiered_batch(
     filter per question: ref loaders/utils/filtering.py:18-123 +
     query_agent.py:252-283). Per-query predicates compile to ONE CASE
     expression over ``query_id`` with a branch per DISTINCT predicate
-    template (:func:`_per_query_predicate`), applied after the
-    candidate join binds ``query_id`` — the corpus is still never
-    shuffled and the codes scan stays one-per-round; only the tiny
-    candidate frame evaluates the CASE. A query id in ``queries`` with
+    template (:func:`_per_query_predicate`), evaluated on the pool rows
+    once the pool binds ``query_id`` — the corpus is still never
+    shuffled and the codes scan stays one-per-pass; only the pool
+    evaluates the CASE. A query id in ``queries`` with
     no mapping entry raises (never silently retrieves nothing); the
     check reads the held query block.
 
@@ -622,21 +701,10 @@ def retrieve_tiered_batch(
     zero-norm) produce no output rows — the single-query contract's
     empty frame, batched.
 
-    ``scope`` (a dedup.CacheScope) tracks the per-round checkpointed
-    candidate frames and query-block broadcasts for deterministic
+    ``scope`` (a dedup.CacheScope) tracks the per-pass checkpointed
+    decided frames and query-block broadcasts for deterministic
     release; without it the frames are freed when the returned frame
     is garbage-collected and the query blocks ride in the scan closure.
-
-    TWIN-SYNC contract: this function re-expresses retrieve_tiered's
-    certificate/top-up rules (NULL-ignoring cutoff min, all-NULL pool
-    = nothing to top up, strict > certificate, exhaustion on a short
-    probe) and _dedup_cap_resort's deterministic windows with query_id
-    prepended. The single-query arm decides those rules on the driver,
-    replaying its rounds from one collected candidate pool per two
-    rounds; this arm decides them in Spark, one probe and one status
-    collect per round. Any change to either rule set must land in BOTH
-    arms — the q126 oracle and the batch-vs-loop parity tests are the
-    tripwire.
     """
     if index_path is None:
         raise ValueError("retrieve_tiered_batch needs index_path")
@@ -653,8 +721,8 @@ def retrieve_tiered_batch(
         F.col(qid), F.col(query_vec_col).alias(query_vec_col)
     )
     # The query block is collected once per pass and held: the rounds,
-    # the pending set, the unknown-id check and the final union all
-    # read it as a local frame, so the caller's plan never runs again.
+    # the pending set and the unknown-id check all read it, so the
+    # caller's plan never runs again.
     # Only a block whose DISTINCT ids overflow max_pending chunks.
     chunking = max_pending is not None and max_pending > 0
     held = (
@@ -664,8 +732,8 @@ def retrieve_tiered_batch(
         # Exact chunk decision: distinct() emits NULL as one row, and
         # the chunk condition is (#non-null ids + has_null) > max_pending
         # (duplicate ids can put more rows than that in one pass).
-        # O(#queries) driver traffic — the same order as one round's
-        # status frame; only the DISTINCT id list travels
+        # O(#queries) driver traffic — the same order as one pass's
+        # status rows; only the DISTINCT id list travels
         id_rows = queries.select(qid).distinct().collect()
         if len(id_rows) <= max_pending:
             held = block.collect()
@@ -709,15 +777,16 @@ def retrieve_tiered_batch(
             # each chunk pass ends ordered; re-assert the contract's
             # global order over the union
             return out.orderBy(qid, "published_at", "video_id", "start_time")
-    pending = local_frame(spark, held, block.schema)
     if isinstance(parsed, dict):
-        pred, known_ids = _per_query_predicate(parsed, qid)
+        # over the pool rows, whose query id the probe names "query_id"
+        pred, known_ids = _per_query_predicate(parsed, "query_id")
         # NULL ids must fail too: ~isin(...) evaluates to NULL for a
         # NULL id, which where() drops — the row would dodge this check
         # AND the CASE (NULL condition -> otherwise(False)), silently
         # scoring zero recall for that question (round-10 review catch)
         unknown = (
-            pending.where(F.col(qid).isNull() | ~F.col(qid).isin(known_ids))
+            local_frame(spark, held, block.schema)
+            .where(F.col(qid).isNull() | ~F.col(qid).isin(known_ids))
             .limit(1)
             .collect()
         )
@@ -728,116 +797,22 @@ def retrieve_tiered_batch(
                 "batch needs its compiled predicate (a missing entry "
                 "would otherwise silently retrieve nothing)"
             )
-        shared_pred = None
     else:
-        shared_pred = metadata_predicate(parsed) & topic_predicate(
-            parsed.topics
-        )
-        pred = shared_pred
+        pred = metadata_predicate(parsed) & topic_predicate(parsed.topics)
 
-    def probe_once(pending: DataFrame, k_probe: int) -> DataFrame:
-        out = probe(
-            spark, index_path, pending, k_probe, refine,
-            docs.select(id_col, vec_col), vec_col=vec_col, id_col=id_col,
-            query_vec_col=query_vec_col, query_id_col=qid,
-            round_to=round_to, scope=scope, nprobe=nprobe,
-        )
-        # one materialization serves the status aggregate, the round's
-        # hits, AND the final consumer — otherwise each re-runs the
-        # corpus codes scan. eager + lineage-truncating; O(q x k_probe)
-        # slim rows. The probes NAME their output id column "query_id"
-        # regardless of query_id_col (their output contract) — alias it
-        # back to the caller's name here.
-        cand = out.select(
-            F.col("query_id").alias(qid), id_col, "score"
-        ).localCheckpoint(eager=True)
-        if scope is not None:
-            scope.add(cand)
-        return cand
-
-    def hits_for(cand: DataFrame) -> DataFrame:
-        # candidate ids -> doc rows: distinct ids across queries stay
-        # <= q x k_probe (tiny vs corpus), broadcast back onto the doc
-        # table, THEN the metadata predicate + NULL re-score exclusion
-        # (probe scores are the same rounded exact cosine the
-        # single-query arm computes; NULL marks degenerate re-scores).
-        # A SHARED predicate applies on the doc slice BEFORE the
-        # candidate join (prunes the merge join's build side); the
-        # per-query CASE needs query_id bound, so it applies after.
-        doc_slice = docs.join(
-            F.broadcast(cand.select(id_col).distinct()), id_col
-        )
-        if shared_pred is not None:
-            doc_slice = doc_slice.where(shared_pred)
-        out = doc_slice.join(cand.hint("merge"), id_col)
-        if shared_pred is None:
-            out = out.where(pred)
-        return out.where(F.col("score").isNotNull())
-
-    k_probe = k
-    finished: list[DataFrame] = []
-    while True:
-        cand = probe_once(pending, k_probe)
-        hits = hits_for(cand)
-        if max_rounds <= 1:
-            finished.append(hits)
-            break
-        # per-query certificate: n_safe = distinct surviving chunks
-        # STRICTLY above that query's weakest returned candidate;
-        # n_ret < k_probe = index exhausted for that query. Queries
-        # absent from cand (degenerate vector, empty index) have
-        # nothing to top up — finished with no rows.
-        cutoffs = cand.groupBy(qid).agg(
-            F.min("score").alias("__cut"), F.count(F.lit(1)).alias("__n_ret")
-        )
-        safe = (
-            hits.join(cutoffs, qid)
-            .where(F.col("score") > F.col("__cut"))
-            .select(qid, "video_id", "start_time")
-            .distinct()
-            .groupBy(qid)
-            .agg(F.count(F.lit(1)).alias("__n_safe"))
-        )
-        status = (
-            cutoffs.join(safe, qid, "left")
-            .select(
-                qid,
-                "__n_ret",
-                F.coalesce("__n_safe", F.lit(0)).alias("__n_safe"),
-                "__cut",
-            )
-            .collect()
-        )  # O(#queries) rows — the only driver traffic per round
-        # __cut is NULL when a query's ENTIRE pool re-scored NULL
-        # (zero-norm reconstructions): nothing rankable to top up —
-        # the single-query arm's all-NULL break, per query (a NULL
-        # cutoff would otherwise keep the query pending all rounds,
-        # re-scanning the codes table for nothing)
-        topup_ids = [
-            r[0]
-            for r in status
-            if r[1] >= k_probe and r[2] < k and r[3] is not None
-        ]
-        if not topup_ids:
-            finished.append(hits)
-            break
-        # keep hits only for queries leaving the pending set this
-        # round; topped-up queries take their DEEPER probe's rows
-        finished.append(
-            hits.join(
-                F.broadcast(
-                    pending.select(qid).where(~F.col(qid).isin(topup_ids))
-                ),
-                qid,
-                "left_semi",
-            )
-        )
-        pending = pending.where(F.col(qid).isin(topup_ids))
-        k_probe *= topup_factor
-        max_rounds -= 1
-    all_hits = finished[0]
-    for h in finished[1:]:
-        all_hits = all_hits.unionByName(h)
+    # a NULL query id names no question: it gets no rows
+    decided = _tiered_rounds(
+        docs, probe, index_path, pred, [r for r in held if r[0] is not None],
+        block.schema, k, refine, topup_factor, max_rounds, id_col, scope,
+        vec_col=vec_col, round_to=round_to, nprobe=nprobe,
+        query_vec_col=query_vec_col, query_id_col=qid,
+    ).withColumnRenamed("query_id", qid)
+    # decided ids -> doc rows: the DISTINCT id set broadcasts onto the
+    # doc table (never a corpus shuffle), then meets the decided rows
+    doc_slice = docs.join(
+        F.broadcast(decided.select(id_col).distinct()), id_col
+    )
+    all_hits = doc_slice.join(decided.hint("merge"), id_col)
     # per-query dedup/cap/resort — _dedup_cap_resort's deterministic
     # semantics with query_id prepended to every window/sort key
     w_dedup = Window.partitionBy(qid, "video_id", "start_time").orderBy(
@@ -928,13 +903,13 @@ def retrieve_multi_topic(
         if tier == "ann":
             # B branches ride the BATCHED arm as (query_id=branch)
             # rows with per-branch predicates (round-10 verdict item
-            # #3): ONE codes scan per top-up round serves every
+            # #3): ONE pool scan per two top-up rounds serves every
             # branch, and per-branch probe depth still applies — B
             # topics x 10^4 eval questions through the single-query
             # loop would re-open the per-query-scan shape
             # retrieve_tiered_batch exists to kill. Per-branch rows
-            # are identical to the loop (the batch arm's twin-sync
-            # contract + the q127 oracle), so only the scan count
+            # are identical to the loop (both arms decide rounds with
+            # _decide_rounds; the q127 oracle), so only the scan count
             # changes.
             branch_queries = []
             per_branch: dict[int, ParsedQuery] = {}

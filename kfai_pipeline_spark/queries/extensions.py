@@ -3590,13 +3590,14 @@ def q125_rag_tiered_ivfpq(spark, sf_dir):
     """,
     doc=(
         "Batched tiered retrieval (plans/rag.py retrieve_tiered_batch, "
-        "round-9 verdict item #4): the offline-eval arm — ONE codes "
-        "scan per top-up round serves every pending query (the q76/"
-        "q120 per-batch local top-k shape), the candidate frame is "
-        "checkpoint-materialized so the certificate stats and the "
-        "result reuse one scan, the doc join-back broadcasts distinct "
-        "candidate ids, and the only driver traffic is the per-round "
-        "O(#queries) status frame. Hash-checked against per-query "
+        "round-9 verdict item #4): the offline-eval arm — ONE pool "
+        "scan per two top-up rounds serves every pending query (the "
+        "q76/q120 per-batch local top-k shape), each query's rounds "
+        "are replayed from its pool on the executors and the decided "
+        "rows checkpoint-materialized so the status and the result "
+        "reuse one scan, the doc join-back broadcasts distinct "
+        "decided ids, and the only driver traffic is the per-pass "
+        "O(#queries) status rows. Hash-checked against per-query "
         "brute retrieval replayed in DuckDB."
     ),
 )
@@ -3686,8 +3687,8 @@ def q126_rag_tiered_batch(spark, sf_dir):
         "arm (plans/rag.py retrieve_tiered_batch with a {query_id -> "
         "ParsedQuery} mapping, round-10 verdict item #1): distinct "
         "predicate templates compile to ONE CASE expression over "
-        "query_id applied after the candidate join binds it — the "
-        "codes scan stays one-per-round for ALL pending queries and "
+        "query_id evaluated on the pool once it binds query_id — the "
+        "pool scan stays one-per-pass for ALL pending queries and "
         "the corpus never shuffles, while each question retrieves "
         "under its own show/year/topic filter. Hash-checked against "
         "per-query brute retrieval with the same filters replayed as "
@@ -3875,7 +3876,7 @@ def q124_rag_multi_topic(spark, sf_dir):
         "Multi-topic fan-out THROUGH the serving tier, batched "
         "(round-10 verdict item #3): the branches ride "
         "retrieve_tiered_batch as (query_id=branch) rows with "
-        "per-branch predicates — ONE codes scan per top-up round "
+        "per-branch predicates — ONE pool scan per two top-up rounds "
         "serves every branch (B topics x 10^4 eval questions through "
         "the single-query loop would re-open the per-query-scan shape "
         "the batch arm killed), each branch's ILIKE gate applying "

@@ -104,8 +104,9 @@ def local_frame(
     ``spark.createDataFrame(<python list>)`` is a parallelized Python
     RDD, so every action over it starts Python workers on every core
     (hundreds of ms each time for a 1-row frame). An Arrow table is
-    shipped to the JVM once and scanned there: collecting or
-    broadcasting the frame runs no job. Values convert through each
+    shipped to the JVM once and scanned there: collecting the frame
+    runs no job. A join on ``F.broadcast`` of it still starts one
+    one-task job, the broadcast exchange's. Values convert through each
     type's ``toInternal`` first, the same conversion the list path
     applies, so timestamps keep their instant whatever the host's
     time zone."""

@@ -334,15 +334,18 @@ SECTIONS = [
     (
         "q126_rag_tiered_batch",
         "Batched-query tiered serving (offline eval arm)",
-        "One codes scan per top-up round serves EVERY pending query "
-        "(the query block broadcasts into the scan kernel; per-batch "
-        "local top-k before the global per-query window); the "
-        "candidate frame is localCheckpoint-materialized so the "
-        "certificate stats, the round's hits, and the final consumer "
-        "reuse one scan; the doc join-back broadcasts the distinct "
-        "candidate id set (never a corpus shuffle); driver traffic is "
-        "the O(#queries)-row per-round status frame, not candidates. "
-        "Per-query dedup/cap windows replace the single-query limit.",
+        "One pool scan at round 2's depth serves EVERY pending query "
+        "(the query block ships into the scan kernel; per-partition "
+        "local top-k before the global per-query window); each "
+        "query's rounds replay from its pool on the executors "
+        "(groupBy(query_id).applyInPandas, the single-query arm's "
+        "rules), and the decided rows are localCheckpoint-materialized "
+        "once, so the plan below reads them as an existing RDD scan; "
+        "only queries whose pool was too shallow scan again. The doc "
+        "join-back broadcasts the distinct decided id set (never a "
+        "corpus shuffle); driver traffic is O(#queries) status rows "
+        "per pass, never a pool. Per-query dedup/cap windows replace "
+        "the single-query limit.",
     ),
     (
         "q124_rag_multi_topic",
@@ -412,11 +415,12 @@ SECTIONS = [
         "Per-query metadata predicates in the batched serving arm (X50e)",
         "The q126 plan with the shared predicate replaced by ONE CASE "
         "expression over query_id (a branch per DISTINCT predicate "
-        "template, evaluated inside WholeStageCodegen on the tiny "
-        "candidate frame after the broadcast doc join binds "
-        "query_id): the codes scan stays one-per-round for all "
-        "pending queries, the corpus never shuffles, and predicate "
-        "cost scales with templates, not query count.",
+        "template, evaluated on the pool rows once the pool binds "
+        "query_id, before the replay): the pool scan stays "
+        "one-per-pass for all pending queries, the corpus never "
+        "shuffles, and predicate cost scales with templates, not "
+        "query count. The plan below joins the checkpointed decided "
+        "rows back to the docs.",
     ),
     (
         "q133_rag_serving_lifecycle",

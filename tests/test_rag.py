@@ -415,6 +415,7 @@ def test_retrieve_tiered_job_budget(spark, tiered_docs):
     one pool scan serves rounds 1 and 2, and a question that reaches
     round 3 adds exactly one more pool scan. The counts are the same at
     1, 4 and 8 cores; a change that raises one says why in CHANGES.md."""
+    from kfai_pipeline_spark.operators import similarity
     from kfai_pipeline_spark.operators.similarity import _serving_probe
     from kfai_pipeline_spark.plans.rag import retrieve_tiered
     from kfai_pipeline_spark.session import local_frame
@@ -426,9 +427,11 @@ def test_retrieve_tiered_job_budget(spark, tiered_docs):
         # the pool scans run while the plan is built, so count both
         return jobs_started(spark, lambda: build().collect())[1]
 
-    # the first probe of an index version reads its artifacts (3 jobs);
-    # the pins below hold for every later question
-    jobs(lambda: _ann_question(docs, idx, "warm up", ParsedQuery(), k=5))
+    # the first probe of an index version reads its artifacts (2 jobs:
+    # the stats collect and the codes schema); the pins below hold for
+    # every later question
+    similarity._artifact_cache.clear()
+    cold = jobs(lambda: _ann_question(docs, idx, "warm up", ParsedQuery(), k=5))
     qv = [float(x) for x in hash_embed(["topic 3 theme 2"])[0]]
     brute = jobs(
         lambda: retrieve_tiered(docs, qv, ParsedQuery(), k=5, tier="brute")
@@ -450,12 +453,57 @@ def test_retrieve_tiered_job_budget(spark, tiered_docs):
     assert exhausted == certified
     assert round3 == certified + pool_scan
     assert (brute, exhausted, certified, round3, pool_scan) == (2, 6, 6, 9, 3)
+    assert cold == certified + 2
+
+
+def test_retrieve_tiered_batch_job_budget(spark, tiered_docs):
+    """A batch's Spark jobs do not grow with its queries or its top-up
+    rounds: one pool pass serves rounds 1 and 2 of every query, and a
+    batch whose queries reach round 3 adds exactly one more pool pass.
+    The batch is consumed as the benchmark's offline eval consumes it
+    (rows per query), and its query block is a local frame, so the
+    counts are the same at 1, 4 and 8 cores; a change that raises one
+    says why in CHANGES.md."""
+    from kfai_pipeline_spark.operators.similarity import _serving_probe
+    from kfai_pipeline_spark.plans import rag
+    from kfai_pipeline_spark.session import local_frame
+    from tests.fixtures import jobs_started
+
+    docs, idx = tiered_docs
+    schema = "query_id int, embedding array<double>"
+    texts = ["topic 3 theme 2", "theme 4 doc", "topic 1 and 6", "doc 42"]
+    block = [(i, [float(x) for x in v]) for i, v in enumerate(hash_embed(texts))]
+    kw = {k: v for k, v in ROUND3.items() if k not in ("text", "parsed")}
+
+    def jobs(parsed, **opts):
+        # the pool passes run while the plan is built, so count both
+        return jobs_started(spark, lambda: rag.retrieve_tiered_batch(
+            docs, local_frame(spark, block, schema), parsed, id_col="doc_id",
+            index_path=idx, **opts,
+        ).groupBy("query_id").count().collect())[1]
+
+    _ann_question(docs, idx, "warm up", ParsedQuery(), k=5).collect()
+    # unfiltered: every query certifies in round 2
+    round2 = jobs(ParsedQuery(), k=5, refine=4)
+    round3 = jobs(ROUND3["parsed"], **kw)
+
+    # one pass of the loop over the four queries, serving the last round
+    pool_pass = jobs_started(spark, lambda: rag._tiered_rounds(
+        docs, _serving_probe("sq8"), idx, F.lit(True), block, schema, 5,
+        kw["refine"], kw["topup_factor"], 2, "doc_id",
+    ))[1]
+    assert round3 == round2 + pool_pass
+    assert (round2, round3, pool_pass) == (13, 18, 5)
 
 
 def test_retrieve_tiered_round3_matches_brute_and_batch(spark, tiered_docs):
     """The rescan path: a question whose certificate first passes in
     round 3 is served by a second pool scan, and its rows equal the
-    brute tier's (exhaustive regime) and the batched arm's."""
+    brute tier's (exhaustive regime) and the batched arm's. In one batch
+    with per-query filters it rides with a question that certifies in
+    round 2, one whose selective topic keeps it topping up to its last
+    round, and a zero vector: each query's rows equal its own
+    single-question rows, and the zero vector yields none."""
     from kfai_pipeline_spark.plans.rag import (
         retrieve_tiered,
         retrieve_tiered_batch,
@@ -477,6 +525,33 @@ def test_retrieve_tiered_round3_matches_brute_and_batch(spark, tiered_docs):
     assert len(ann) == 5
     assert sorted(map(tuple, ann)) == sorted(map(tuple, brute))
     assert sorted(map(tuple, ann)) == sorted(map(tuple, batch))
+
+    mixed = {
+        0: (ROUND3["text"], ROUND3["parsed"]),
+        1: ("theme 4 doc", ParsedQuery()),  # certifies in round 2
+        # keeps three docs, so it tops up to its last round
+        2: ("topic 1 theme 1", ParsedQuery(topics=["topic 1 and theme 1"])),
+    }
+    qvecs = {q: [float(x) for x in hash_embed([t])[0]] for q, (t, _) in mixed.items()}
+    dim = len(qvecs[0])
+    queries = spark.createDataFrame(
+        list(qvecs.items()) + [(9, [0.0] * dim)],
+        "query_id int, embedding array<double>",
+    )
+    parsed = {q: p for q, (_, p) in mixed.items()} | {9: ParsedQuery()}
+    got = {}
+    for r in retrieve_tiered_batch(
+        docs, queries, parsed, id_col="doc_id", index_path=idx, **kw,
+    ).select("query_id", *cols).collect():
+        got.setdefault(r[0], []).append(tuple(r)[1:])
+    want = {
+        q: sorted(map(tuple, _ann_question(
+            docs, idx, t, p, **kw
+        ).select(*cols).collect()))
+        for q, (t, p) in mixed.items()
+    }
+    assert {q: sorted(v) for q, v in got.items()} == want
+    assert [len(want[q]) for q in (0, 1, 2)] == [5, 5, 2]
 
 
 def _same_arrays(x, y) -> bool:
