@@ -29,7 +29,17 @@ Workspace layout (all under ``workdir``):
     skip.json   dead-letter list (I3)
 
 Every stage is incremental: rerunning any stage with unchanged inputs
-adds zero rows (anti-join resume, I1/I2).
+adds zero rows (anti-join resume, I1/I2) and writes no file, because each
+stage checks its diffed input with one ``isEmpty()`` before any Python UDF
+runs. One exception: transform diffs raw/ against cleaned/ only, so it
+cleans a video it dead-lettered again on every run, and that run's empty
+write refreshes ``cleaned/_SUCCESS``.
+
+Each ingest stage runs its plan once. The stage's counts and dead-letter
+ids come from the write itself: metrics observed on the written frame
+(``session.observe``, built on ``pyspark.sql.Observation``) are collected
+in the same execution, where a ``count()`` or ``collect()`` beside the
+write would run the scans, the cleaner or the encoder again.
 """
 
 from __future__ import annotations
@@ -38,31 +48,46 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from kfai_pipeline_spark.operators.chunker import chunk_transcripts, explode_chunks
 from kfai_pipeline_spark.operators.embed import Encoder, embed_texts
 from kfai_pipeline_spark.operators.llm_clean import clean_chunks_grouped, identity_clean
-from kfai_pipeline_spark.operators.pipeline import (
-    integrity_check,
-    new_work,
-    split_dead_letter,
+from kfai_pipeline_spark.operators.pipeline import new_work
+from kfai_pipeline_spark.operators.similarity import _fs_exists
+from kfai_pipeline_spark.sources.skip_list import (
+    filter_skipped,
+    load_skip_set,
+    read_skip_ids,
+    write_skip_ids,
 )
-from kfai_pipeline_spark.sources.skip_list import filter_skipped, load_skip_set, save_skip_set
 from kfai_pipeline_spark.sources.video_records import (
     read_video_records,
     write_partitioned_json,
 )
+from kfai_pipeline_spark.session import observe
 
 
 def _dir(workdir: str, name: str) -> str:
     return os.path.join(workdir, name)
 
 
-def _maybe_read(spark: SparkSession, path: str) -> DataFrame | None:
-    try:
-        return read_video_records(spark, path)
-    except Exception:
-        return None  # first run: directory doesn't exist yet
+def _unprocessed(spark: SparkSession, source: DataFrame, done_dir: str) -> DataFrame:
+    """Videos of ``source`` not yet in the video records under
+    ``done_dir``; all of them on the first run, when the directory does
+    not exist yet. The directory is checked on the filesystem: a read of
+    a missing path fails analysis, and once a write in the session has
+    been observed (``session.observe``), the observation listener logs
+    every such failure as an ERROR."""
+    if not _fs_exists(spark, done_dir):
+        return source
+    return new_work(source, read_video_records(spark, done_dir), "video_id")
+
+
+def _extend_skip_list(path: str, ids) -> int:
+    """Add the driver-held ``ids`` to the skip list at ``path``; returns
+    its size. No frame is built, so this starts no Spark job."""
+    return write_skip_ids(sorted({*read_skip_ids(path), *ids}), path)
 
 
 def extract(
@@ -82,24 +107,28 @@ def extract(
     skip_path = _dir(workdir, "skip.json")
 
     skip = load_skip_set(spark, skip_path)
-    done = _maybe_read(spark, raw_dir)
-    todo = catalog
-    if done is not None:
-        todo = new_work(catalog, done, "video_id")
-    todo = filter_skipped(todo, skip)
+    todo = filter_skipped(_unprocessed(spark, catalog, raw_dir), skip)
+    if todo.isEmpty():
+        return {"new_videos": 0, "skip_list": _extend_skip_list(skip_path, [])}
 
-    # dead-letter: no transcript -> permanent skip (ref transcript.py sentinel)
-    failed = todo.where(F.col("transcript").isNull()).select("video_id")
-    ok = todo.where(F.col("transcript").isNotNull())
-
-    chunked = chunk_transcripts(ok, chunk_size=chunk_size, chunk_overlap=chunk_overlap).drop(
-        "transcript"
+    # one execution writes the new videos and reports on them: the count
+    # written and the no-transcript ids, which dead-letter into the skip
+    # list (ref transcript.py sentinel)
+    has_transcript = F.col("transcript").isNotNull()
+    todo, seen = observe(
+        todo,
+        F.count_if(has_transcript).alias("new_videos"),
+        F.collect_set(F.when(~has_transcript, F.col("video_id"))).alias("failed"),
     )
-    n_new = chunked.count()
-    if n_new:
-        write_partitioned_json(chunked, raw_dir, mode="append")
-    n_skipped = save_skip_set(skip.unionByName(failed), skip_path)
-    return {"new_videos": n_new, "skip_list": n_skipped}
+    chunked = chunk_transcripts(
+        todo.where(has_transcript), chunk_size=chunk_size, chunk_overlap=chunk_overlap
+    ).drop("transcript")
+    write_partitioned_json(chunked, raw_dir, mode="append")
+    wrote = seen()
+    return {
+        "new_videos": wrote["new_videos"],
+        "skip_list": _extend_skip_list(skip_path, wrote["failed"]),
+    }
 
 
 def transcribe_failed(
@@ -139,9 +168,8 @@ def transcribe_failed(
         "path",
         "content",
     )
-    done = _maybe_read(spark, _dir(workdir, "raw"))
-    if done is not None:
-        media = new_work(media, done, "video_id")
+    raw_dir = _dir(workdir, "raw")
+    media = _unprocessed(spark, media, raw_dir)
     if media.isEmpty():
         return {"transcribed_videos": 0}
 
@@ -163,13 +191,15 @@ def transcribe_failed(
     )
     meta = catalog.drop("transcript")
     recovered = meta.join(transcripts, "video_id")
-    chunked = chunk_transcripts(
-        recovered, chunk_size=chunk_size, chunk_overlap=chunk_overlap
-    ).drop("transcript")
-    n = chunked.count()
-    if n:
-        write_partitioned_json(chunked, _dir(workdir, "raw"), mode="append")
-    return {"transcribed_videos": n}
+    chunked, seen = observe(
+        chunk_transcripts(
+            recovered, chunk_size=chunk_size, chunk_overlap=chunk_overlap
+        ).drop("transcript"),
+        F.count(F.lit(1)).alias("n"),
+    )
+    write_partitioned_json(chunked, raw_dir, mode="append")
+    # no metrics when adaptive execution finds the catalog join empty
+    return {"transcribed_videos": seen().get("n", 0)}
 
 
 def transform(
@@ -180,35 +210,46 @@ def transform(
     """Stage 4: clean every raw video not yet cleaned, all-or-nothing
     per video, verify integrity, write cleaned JSON; failures dead-letter
     into the skip list (ref clean_locally.py:42-76)."""
-    raw = read_video_records(spark, _dir(workdir, "raw"))
     cleaned_dir = _dir(workdir, "cleaned")
-    done = _maybe_read(spark, cleaned_dir)
-    todo = raw if done is None else new_work(raw, done, "video_id")
+    raw = read_video_records(spark, _dir(workdir, "raw"))
+    todo = _unprocessed(spark, raw, cleaned_dir)
+    if todo.isEmpty():
+        return {"cleaned_videos": 0, "failed_videos": 0}
 
-    # Persist the clean stage ONCE: good/dead/skip all derive from this
-    # single materialization. Without it each consumer re-executes the
-    # injected LLM clean (doubling external-inference cost), and a
-    # non-deterministic clean_fn could land a video in BOTH cleaned/ and
-    # the skip list.
-    cleaned = clean_chunks_grouped(todo, clean_fn).persist()
-    good, dead = split_dead_letter(cleaned, "clean_ok")
-    good = good.drop("clean_ok")
-
-    chk = integrity_check(todo, good)
-    bad_keys = chk.where(~F.col("ok")).select("video_id")
-    good = good.join(bad_keys, "video_id", "left_anti")
-
-    n = good.count()
-    if n:
-        write_partitioned_json(good, cleaned_dir, mode="append")
-    skip_path = _dir(workdir, "skip.json")
-    skip = load_skip_set(spark, skip_path)
-    save_skip_set(
-        skip.unionByName(dead.select("video_id")).unionByName(bad_keys), skip_path
+    # Clean, verify and route in ONE execution, with nothing persisted:
+    # each chunk is cleaned once (an injected LLM clean is the expensive
+    # call), and the verdict that writes a video to cleaned/ is the one
+    # that leaves it off the skip list, so a non-deterministic clean_fn
+    # cannot land a video in both. The verdict is integrity_check's,
+    # computed without its join: a video passes when every raw chunk
+    # count of it equals every cleaned chunk count, and a NULL count
+    # fails. A window over the raw rows gives each row its video's one
+    # raw count (NULL when the rows disagree or one is NULL); the
+    # cleaner groups on the same exchange, so the window adds no
+    # shuffle. The cleaner keeps each row's chunk count, so comparing
+    # every row's cleaned count with that raw count finishes the check.
+    n_chunks = F.size("transcript_chunks")
+    video = Window.partitionBy("video_id")
+    agreed = ~F.bool_or(n_chunks.isNull()).over(video) & (
+        F.min(n_chunks).over(video) == F.max(n_chunks).over(video)
     )
-    n_dead = dead.count()
-    cleaned.unpersist()
-    return {"cleaned_videos": n, "failed_videos": n_dead}
+    counted = todo.withColumn("__n_raw", F.when(agreed, n_chunks))
+    cleaned_ok = F.coalesce(F.col("clean_ok"), F.lit(False))
+    intact = F.coalesce(F.col("__n_raw") == n_chunks, F.lit(False))
+    tagged = clean_chunks_grouped(counted, clean_fn).withColumn(
+        "__ok", cleaned_ok & intact
+    )
+    tagged, seen = observe(
+        tagged,
+        F.count_if("__ok").alias("cleaned_videos"),
+        F.count_if(~cleaned_ok).alias("failed_videos"),
+        F.collect_set(F.when(~F.col("__ok"), F.col("video_id"))).alias("failed"),
+    )
+    good = tagged.where("__ok").drop("__n_raw", "clean_ok", "__ok")
+    write_partitioned_json(good, cleaned_dir, mode="append")
+    wrote = seen()
+    _extend_skip_list(_dir(workdir, "skip.json"), wrote["failed"])
+    return {k: wrote[k] for k in ("cleaned_videos", "failed_videos")}
 
 
 def load(
@@ -235,17 +276,21 @@ def load(
             F.col("published_at").isNull() | (F.col("published_at") <= 0), 1325376000
         ).otherwise(F.col("published_at")),
     )
-    try:
-        existing = spark.read.parquet(store_dir)
-        todo = new_work(grain, existing, ["video_id", "start_time"])
-    except Exception:
-        todo = grain
+    todo = grain
+    if _fs_exists(spark, store_dir):
+        # only the resume keys, with their schema pinned: no inference job,
+        # and a store/ left empty by a failed first write still reads
+        done = spark.read.schema("video_id string, start_time double").parquet(store_dir)
+        todo = new_work(grain, done, ["video_id", "start_time"])
+    if todo.isEmpty():
+        return {"chunks_added": 0}
 
-    embedded = embed_texts(todo, encoder, batch_size=batch_size)
-    n = embedded.count()
-    if n:
-        embedded.write.mode("append").parquet(store_dir)
-    return {"chunks_added": n}
+    # the write reports its own row count, so the encoder runs once per chunk
+    embedded, seen = observe(
+        embed_texts(todo, encoder, batch_size=batch_size), F.count(F.lit(1)).alias("n")
+    )
+    embedded.write.mode("append").parquet(store_dir)
+    return {"chunks_added": seen()["n"]}
 
 
 def query(
@@ -368,19 +413,25 @@ def curate(
         max_tokens=max_tokens,
         min_stop_ratio=min_stop_ratio,
         sample_rate=sample_rate,
-    ).persist()
-    counts = flags.agg(
+    )
+    # the funnel counts come from the flags the write's semi join runs on
+    funnel = [
         F.count(F.lit(1)).alias("raw"),
-        F.sum(F.col("ok_len").cast("int")).alias("len_ok"),
-        F.sum(F.col("ok_quality").cast("int")).alias("quality_ok"),
-        F.sum(F.col("ok_dedup").cast("int")).alias("deduped"),
-        F.sum(F.col("ok_sample").cast("int")).alias("sampled"),
-    ).collect()[0]
-    kept = flags.where(F.col("ok_sample")).select("__cid")
+        F.count_if("ok_len").alias("len_ok"),
+        F.count_if("ok_quality").alias("quality_ok"),
+        F.count_if("ok_dedup").alias("deduped"),
+        F.count_if("ok_sample").alias("sampled"),
+    ]
+    observed, seen = observe(flags, *funnel)
+    kept = observed.where(F.col("ok_sample")).select("__cid")
     curated = keyed.join(kept, "__cid", "left_semi").drop("__cid")
     curated.write.mode("overwrite").parquet(_dir(workdir, "curated"))
-    flags.unpersist()
-    return {k: int(counts[k]) for k in ("raw", "len_ok", "quality_ok", "deduped", "sampled")}
+    # When either side of the semi join proves empty (an empty store, or
+    # gates that keep no chunk), adaptive execution replaces the join with
+    # an empty relation and drops the observed node with it. Only then are
+    # the counts aggregated apart, one more pass over the store.
+    wrote = seen() or flags.agg(*funnel).first().asDict()
+    return {k: wrote[k] for k in ("raw", "len_ok", "quality_ok", "deduped", "sampled")}
 
 
 def optimize(

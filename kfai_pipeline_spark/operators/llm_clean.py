@@ -40,11 +40,16 @@ def clean_chunks_grouped(
     Output schema = input schema + ``clean_ok boolean``. On any chunk
     failure the video keeps its ORIGINAL chunks and gets
     ``clean_ok = false`` (ref clean_locally.py:57-76 skips the video and
-    records the failure)."""
+    records the failure). Columns named ``__*`` are the caller's
+    bookkeeping: they pass through unchanged and stay out of the
+    metadata ``clean_fn`` sees."""
     import pandas as pd
 
     out_schema = StructType(df.schema.fields + [StructField("clean_ok", BooleanType())])
-    meta_cols = [f.name for f in df.schema.fields if f.name not in (chunks_col,)]
+    meta_cols = [
+        f.name for f in df.schema.fields
+        if f.name != chunks_col and not f.name.startswith("__")
+    ]
 
     def clean_group(pdf: pd.DataFrame) -> pd.DataFrame:
         ok = True

@@ -9,15 +9,18 @@ change; the SQL conf here is the 100 TB posture.
 
 Rows the driver already holds (a query block, a candidate id list,
 collected context rows) become frames through :func:`local_frame`, so
-using them starts no Python-worker job.
+using them starts no Python-worker job. Metrics a write should report
+on the rows it writes come from :func:`observe`, in the same execution.
 """
 
 from __future__ import annotations
 
 import os
+import threading
 from pathlib import Path
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -127,3 +130,60 @@ def local_frame(
     return spark.createDataFrame(
         pa.Table.from_arrays(columns, schema=arrow_schema), schema
     )
+
+
+_observers: list = []  # (JVM session, its ObservationManager)
+_observers_lock = threading.Lock()
+
+
+def _observation_manager(spark: SparkSession):
+    """The ObservationManager this module keeps for ``spark``, made on
+    first use; its constructor registers the listener that completes
+    observations when their query ends."""
+    jss = spark._jsparkSession
+    with _observers_lock:
+        for owner, manager in _observers:
+            if owner.equals(jss):
+                return manager
+        manager = spark._jvm.org.apache.spark.sql.classic.ObservationManager(jss)
+        _observers.append((jss, manager))
+        return manager
+
+
+def observe(df: DataFrame, *metrics: Column) -> tuple[DataFrame, Callable[[], dict]]:
+    """``df`` with the named aggregate ``metrics`` attached, and a
+    function that returns their values after an action over the
+    returned frame, such as its write, has run: the action computes them
+    in the same execution, where a ``count()`` beside it would run the
+    plan again.
+
+    This is ``pyspark.sql.Observation`` with its manager held here
+    instead of in the session. Spark 4.1 keeps a session's manager in a
+    field that Java serialization does not skip, so after a session's
+    first ``Observation`` every closure that captures the session fails
+    with "Task not serializable", among them the scoring UDF of an
+    MLlib model that kept its training summary (a fitted
+    ``LogisticRegression``).
+
+    Call the function only after the action has returned: it waits for
+    the query's end. Its dict is empty when adaptive execution dropped
+    the observed node before it ran (one side of a join whose other
+    side proved empty)."""
+    from pyspark.serializers import CPickleSerializer
+
+    spark = df.sparkSession
+    jvm = spark._jvm
+    jo = jvm.org.apache.spark.sql.Observation()
+    # registered under (name, id of the observed frame), as
+    # Dataset.observe(Observation, ...) registers with the session's
+    _observation_manager(spark).register(jo, df._jdf)
+    observed = df.observe(jo.name(), *metrics)
+
+    def seen() -> dict:
+        row = jo.getRow()
+        if row.length() == 0:
+            return {}
+        utils = getattr(jvm, "org.apache.spark.sql.api.python.PythonSQLUtils")
+        return CPickleSerializer().loads(utils.toPyRow(row)).asDict(recursive=False)
+
+    return observed, seen

@@ -20,11 +20,15 @@ from kfai_pipeline_spark.session import local_frame
 def load_skip_set(spark: SparkSession, path: str) -> DataFrame:
     """Skip file -> 1-column DataFrame (empty when absent, like the
     reference's missing-file fallback at fetch_raw_data.py:30-39)."""
-    ids: list[str] = []
-    if os.path.exists(path):
-        with open(path, encoding="utf-8") as f:
-            ids = json.load(f)
-    return local_frame(spark, [(v,) for v in ids], "video_id string")
+    return local_frame(spark, [(v,) for v in read_skip_ids(path)], "video_id string")
+
+
+def read_skip_ids(path: str) -> list[str]:
+    """The ids of the skip file at ``path``; none when it is absent."""
+    if not os.path.exists(path):
+        return []
+    with open(path, encoding="utf-8") as f:
+        return json.load(f)
 
 
 _SKIP_SET_WARN_ABOVE = 1_000_000
@@ -42,12 +46,18 @@ def save_skip_set(df: DataFrame, path: str) -> int:
     # one job: collect, then warn on the materialized size (a separate
     # count() would re-run the whole upstream pipeline a second time)
     ids = sorted(r[0] for r in df.select("video_id").distinct().collect())
+    return write_skip_ids(ids, path)
+
+
+def write_skip_ids(ids: list[str], path: str) -> int:
+    """Persist the driver-held, sorted, distinct ``ids`` as the skip
+    file's JSON array; returns their count."""
     if len(ids) > _SKIP_SET_WARN_ABOVE:
         import warnings
 
         warnings.warn(
             f"skip list has {len(ids):,} ids — beyond control-metadata size; "
-            "the driver-side collect above is memory-bound. Persist the ids "
+            "the driver holds it in memory. Persist the ids "
             "as a parquet table and anti-join with filter_skipped instead.",
             ResourceWarning,
             stacklevel=2,

@@ -3,6 +3,9 @@ a workspace, incremental semantics, and the query stage on the result."""
 
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -59,11 +62,199 @@ def test_full_chain(spark, catalog, workdir):
     assert store.where(F.col("published_at") < 1325376000).count() == 0
 
 
+def _files(workdir):
+    """(path, size, mtime) of every file the chain wrote under raw/,
+    cleaned/ and store/."""
+    out = set()
+    for sub in ("raw", "cleaned", "store"):
+        for dirpath, _, names in os.walk(os.path.join(workdir, sub)):
+            for name in names:
+                st = os.stat(os.path.join(dirpath, name))
+                out.add((os.path.join(dirpath, name), st.st_size, st.st_mtime_ns))
+    return out
+
+
+def _counting(spark):
+    """A clean_fn and an encoder that add one to a shared accumulator per
+    chunk they handle, and the accumulator."""
+    calls = spark.sparkContext.accumulator(0)
+
+    def clean_fn(text, metadata):
+        calls.add(1)
+        return text
+
+    def encoder(texts):
+        calls.add(len(texts))
+        return hash_embed(texts)
+
+    return clean_fn, encoder, calls
+
+
 def test_rerun_is_idempotent(spark, catalog, workdir):
+    before = _files(workdir)
     stats = app.run_chain(spark, catalog, workdir, "1>4>5")
     assert stats["extract"]["new_videos"] == 0
     assert stats["transform"]["cleaned_videos"] == 0
     assert stats["load"]["chunks_added"] == 0
+    # with nothing new, neither the cleaner nor the encoder runs, and no
+    # stage adds or rewrites a file (an empty write would add a part file)
+    clean_fn, encoder, calls = _counting(spark)
+    assert app.transform(spark, workdir, clean_fn=clean_fn) == {
+        "cleaned_videos": 0, "failed_videos": 0,
+    }
+    assert app.load(spark, workdir, encoder=encoder) == {"chunks_added": 0}
+    assert calls.value == 0
+    assert _files(workdir) == before
+
+
+def test_each_chunk_cleaned_and_embedded_once(spark, catalog, tmp_path):
+    """transform calls clean_fn once per chunk and load calls the encoder
+    once per chunk: each stage runs its plan once, and its counts come
+    from the write."""
+    from kfai_pipeline_spark.sources.video_records import read_video_records
+
+    wd = str(tmp_path)
+    app.extract(spark, catalog, wd)
+    n_chunks = (
+        read_video_records(spark, f"{wd}/raw")
+        .select(F.sum(F.size("transcript_chunks")))
+        .first()[0]
+    )
+    clean_fn, _, cleans = _counting(spark)
+    assert app.transform(spark, wd, clean_fn=clean_fn) == {
+        "cleaned_videos": 19, "failed_videos": 0,
+    }
+    assert cleans.value == n_chunks
+    _, encoder, embeds = _counting(spark)
+    assert app.load(spark, wd, encoder=encoder) == {"chunks_added": n_chunks}
+    assert embeds.value == n_chunks
+
+
+def test_load_recovers_from_a_failed_first_write(spark, catalog, tmp_path):
+    """A first load whose encoder raises fails the job and may leave an
+    empty store/ behind; the next load still resumes from it and adds
+    every chunk."""
+    wd = str(tmp_path)
+    app.run_chain(spark, catalog, wd, "1>4")
+
+    def broken(texts):
+        raise RuntimeError("encoder service unavailable")
+
+    with pytest.raises(Exception, match="encoder service unavailable"):
+        app.load(spark, wd, encoder=broken)
+    n_chunks = app.load(spark, wd)["chunks_added"]
+    assert n_chunks == spark.read.parquet(f"{wd}/store").count() > 19
+    assert app.load(spark, wd) == {"chunks_added": 0}
+
+
+def _raw_workspace(spark, wd, videos):
+    """A workspace whose raw/ holds one record per (video_id, n_chunks)
+    pair; ``n_chunks=None`` writes a NULL chunk array."""
+    from kfai_pipeline_spark.sources.video_records import (
+        VIDEO_RECORD_SCHEMA,
+        write_partitioned_json,
+    )
+
+    rows = [
+        (i, vid, "Alpha Show", ["Host A"], f"Episode {i}", "d", 1_600_000_000, 60,
+         None if n is None else [
+             {"text": f"{vid} chunk {j}", "start": float(j)} for j in range(n)
+         ])
+        for i, (vid, n) in enumerate(videos)
+    ]
+    write_partitioned_json(
+        spark.createDataFrame(rows, VIDEO_RECORD_SCHEMA), os.path.join(wd, "raw")
+    )
+
+
+def _cleaned_and_skipped(spark, wd):
+    from kfai_pipeline_spark.sources.video_records import read_video_records
+
+    cleaned = read_video_records(spark, os.path.join(wd, "cleaned"))
+    with open(os.path.join(wd, "skip.json"), encoding="utf-8") as f:
+        skipped = json.load(f)
+    return sorted(r[0] for r in cleaned.select("video_id").collect()), skipped
+
+
+def test_transform_checks_integrity_per_video(spark, tmp_path):
+    """transform's verdict is integrity_check's, per video: every raw
+    chunk count of a video must equal every cleaned one. A video held
+    twice in raw/ with 2 and 1 chunks fails as a whole (neither row is
+    written, its id dead-letters) while the video beside it is written;
+    one held twice with equal counts passes twice; a NULL chunk array
+    fails; a video whose clean raises is written nowhere but the skip
+    list and counts as failed."""
+    wd = str(tmp_path / "unequal")
+    _raw_workspace(spark, wd, [("vidDUP", 2), ("vidDUP", 1), ("vidOK", 3)])
+    assert app.transform(spark, wd) == {"cleaned_videos": 1, "failed_videos": 0}
+    assert _cleaned_and_skipped(spark, wd) == (["vidOK"], ["vidDUP"])
+
+    def clean_fn(text, metadata):
+        if metadata["video_id"] == "vidBAD":
+            raise RuntimeError("LLM unavailable")
+        return text.upper()
+
+    wd = str(tmp_path / "mixed")
+    _raw_workspace(
+        spark, wd,
+        [("vidSAME", 2), ("vidSAME", 2), ("vidBAD", 2), ("vidNULL", None)],
+    )
+    assert app.transform(spark, wd, clean_fn=clean_fn) == {
+        "cleaned_videos": 2, "failed_videos": 1,
+    }
+    assert _cleaned_and_skipped(spark, wd) == (
+        ["vidSAME", "vidSAME"], ["vidBAD", "vidNULL"],
+    )
+
+
+def test_rerun_recleans_a_dead_letter_but_adds_no_file(spark, tmp_path):
+    """transform diffs raw/ against cleaned/ only, not against the skip
+    list (a video that transcribe_failed recovers into raw/ stays on the
+    skip list and must still be cleaned). So a rerun with no new input
+    cleans a dead-lettered video again and reports it failed again, as
+    the parent did. Its write has no rows: it adds or rewrites no part
+    file, and only the cleaned/_SUCCESS marker (and its checksum) may be
+    refreshed."""
+    wd = str(tmp_path)
+    _raw_workspace(spark, wd, [("vidOK", 2), ("vidBAD", 2)])
+    calls = spark.sparkContext.accumulator(0)
+
+    def clean_fn(text, metadata):
+        calls.add(1)
+        if metadata["video_id"] == "vidBAD":
+            raise RuntimeError("LLM unavailable")
+        return text
+
+    def parts():
+        return {f for f in _files(wd) if not f[0].endswith(("_SUCCESS", "_SUCCESS.crc"))}
+
+    assert app.transform(spark, wd, clean_fn=clean_fn) == {
+        "cleaned_videos": 1, "failed_videos": 1,
+    }
+    before, first_calls = parts(), calls.value
+    assert app.transform(spark, wd, clean_fn=clean_fn) == {
+        "cleaned_videos": 0, "failed_videos": 1,
+    }
+    assert calls.value - first_calls == 1  # vidBAD's first chunk, which raises
+    assert parts() == before
+    assert _cleaned_and_skipped(spark, wd) == (["vidOK"], ["vidBAD"])
+
+
+def test_chain_job_budget(spark, catalog, tmp_path):
+    """Each ingest stage over a fresh workspace runs its plan once: an
+    emptiness check on its diffed input, then one write whose
+    observation carries the stage's counts and dead-letter ids. The
+    counts are the same at 1, 4 and 8 cores; a change that raises one
+    says why in CHANGES.md."""
+    from tests.fixtures import jobs_started
+
+    catalog.count()  # the fixture's cache is built outside the counts
+    wd = str(tmp_path)
+    jobs = {
+        stage: jobs_started(spark, lambda: app.run_chain(spark, catalog, wd, cmd))[1]
+        for cmd, stage in (("1", "extract"), ("4", "transform"), ("5", "load"), ("7", "curate"))
+    }
+    assert jobs == {"extract": 2, "transform": 3, "load": 2, "curate": 4}
 
 
 def test_incremental_new_video(spark, catalog, workdir):
@@ -275,6 +466,39 @@ def test_curate_stage_in_chain(spark, catalog, workdir):
     assert set(curated.columns) == store_cols
     # exact-dedup held: no two curated rows share identical text
     assert curated.count() == curated.select("text").distinct().count()
+
+
+@pytest.mark.parametrize(
+    "gate, funnel",
+    [
+        ({"min_tokens": 10**6}, {"len_ok": 0, "quality_ok": 0, "deduped": 0}),
+        ({"sample_rate": 0.0}, {}),
+    ],
+    ids=["no_chunk_long_enough", "nothing_sampled"],
+)
+def test_curate_keeps_nothing_reports_full_funnel(spark, catalog, workdir, gate, funnel):
+    """A loaded store whose gates keep no chunk still reports its funnel:
+    raw is every stored chunk, and the counts the gate leaves standing
+    match an ungated curate's."""
+    full = app.curate(spark, workdir)
+    n_store = spark.read.parquet(f"{workdir}/store").count()
+    assert full["raw"] == n_store and full["sampled"] > 0
+    assert app.curate(spark, workdir, **gate) == {**full, **funnel, "sampled": 0}
+    assert spark.read.parquet(f"{workdir}/curated").count() == 0
+    app.curate(spark, workdir)  # later tests read the ungated curated/
+
+
+def test_curate_empty_store(spark, tmp_path):
+    """Curating an empty store writes an empty curated/ and reports a
+    zero funnel."""
+    wd = str(tmp_path)
+    spark.createDataFrame(
+        [], "video_id string, start_time double, text string, embedding array<float>"
+    ).write.parquet(f"{wd}/store")
+    assert app.curate(spark, wd) == dict.fromkeys(
+        ("raw", "len_ok", "quality_ok", "deduped", "sampled"), 0
+    )
+    assert spark.read.parquet(f"{wd}/curated").count() == 0
 
 
 def test_index_stage_lifecycle(spark, catalog, workdir):
