@@ -29,12 +29,14 @@ resident until session teardown or ``spark.catalog.clearCache()``.
 
 from __future__ import annotations
 
+import math
+import random
 from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kfai_pipeline_spark.operators.similarity import _as_double, cosine, random_hyperplanes, _band_signatures
+from kfai_pipeline_spark.operators.similarity import _as_double, dot, l2_normalize
 
 
 # ---------------------------------------------------------------- exact
@@ -1051,6 +1053,33 @@ def ngram_jaccard_pairs(
 
 
 # ---------------------------------------------------------------- embedding near-dup
+def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
+    """Deterministic unit-norm random hyperplanes (driver-side, tiny)."""
+    rng = random.Random(seed)
+    planes = []
+    for _ in range(n_planes):
+        v = [rng.gauss(0.0, 1.0) for _ in range(dim)]
+        n = math.sqrt(sum(x * x for x in v)) or 1.0
+        planes.append([x / n for x in v])
+    return planes
+
+
+def _band_signatures(vec: Column, planes: list[list[float]], bands: int, rows_per_band: int) -> Column:
+    """array<string> of band signatures: each band concatenates the sign
+    bits of ``rows_per_band`` hyperplane projections."""
+    bits = [
+        F.when(dot(vec, F.array(*[F.lit(p) for p in plane])) >= 0, F.lit("1")).otherwise(
+            F.lit("0")
+        )
+        for plane in planes
+    ]
+    sigs = []
+    for b in range(bands):
+        band_bits = bits[b * rows_per_band : (b + 1) * rows_per_band]
+        sigs.append(F.concat(F.lit(f"{b}:"), *band_bits))
+    return F.array(*sigs)
+
+
 def embedding_neardup_pairs(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -1089,8 +1118,6 @@ def embedding_neardup_pairs(
     the extra projections are linear map-side work, the candidate
     collapse is multiplicative.
     """
-    from kfai_pipeline_spark.operators.similarity import l2_normalize
-
     # normalize once per row: per-pair scoring is then a single dot product
     v = df.select(F.col(id_col), l2_normalize(_as_double(vec_col)).alias("__v"))
     if use_lsh:
@@ -1127,7 +1154,6 @@ def embedding_neardup_pairs(
         a = v.select(F.col(id_col).alias("id_a"), F.col("__v").alias("__va"))
         b = v.select(F.col(id_col).alias("id_b"), F.col("__v").alias("__vb"))
         pairs = a.crossJoin(b).where(F.col("id_a") < F.col("id_b"))
-    from kfai_pipeline_spark.operators.similarity import dot
 
     return (
         pairs.withColumn("score", F.round(dot(F.col("__va"), F.col("__vb")), 4))

@@ -5,17 +5,13 @@ Spark has no native ANN; the engine provides:
 * ``cosine_topk``      — exact brute-force top-k, the correctness baseline.
   Dot products run JVM-side via higher-order array functions
   (``zip_with`` + ``aggregate``) in DOUBLE — no Python boundary.
-* ``cosine_topk_lsh``  — random-hyperplane (sign) LSH bucketing: candidates
-  share >= ``min_band_matches`` bands, then exact re-rank. This is the
-  100 TB path: the cross product never materializes; candidate
-  generation is a bucket equi-join that shuffles on band signature.
-* ``ivf_topk``         — IVF (inverted-file) routing: spherical-k-means
-  centroids (deterministic mini-Lloyd, driver holds only k*dim floats),
-  corpus partitioned by nearest-centroid cluster id, queries probe the
-  ``nprobe`` nearest clusters and re-rank exactly inside them. The
-  scan cost per query drops from |corpus| to ~|corpus|*nprobe/k; with
-  the index written out partitioned by ``cluster_id``, probing prunes
-  at the parquet-partition level.
+* ``cosine_topk_blas`` — the same exact top-k for large query batches:
+  one ``V @ Q.T`` matmul per Arrow batch and a local top-k before the
+  global window (``mine_hard_negatives_blas`` is its labelled call).
+* ``kmeans_centroids`` / ``assign_clusters`` — IVF routing: spherical
+  k-means centroids (deterministic mini-Lloyd, driver holds only k*dim
+  floats; IVFPQ's coarse book) and the broadcast-numpy nearest-centroid
+  assignment (q90).
 
 Quantized probe family — one kernel, three persisted index kinds.
 ``sq8_topk``, ``pq_topk`` and ``ivfpq_topk`` are one call each into
@@ -64,7 +60,6 @@ measured curves — is the README's "Serving-tier decision table".
 from __future__ import annotations
 
 import math
-import random
 import threading
 from collections import OrderedDict
 from typing import Callable, NamedTuple
@@ -271,214 +266,8 @@ def cosine_radius(
     )
 
 
-def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
-    """Deterministic unit-norm random hyperplanes (driver-side, tiny)."""
-    rng = random.Random(seed)
-    planes = []
-    for _ in range(n_planes):
-        v = [rng.gauss(0.0, 1.0) for _ in range(dim)]
-        n = math.sqrt(sum(x * x for x in v)) or 1.0
-        planes.append([x / n for x in v])
-    return planes
-
-
-def _band_signatures(vec: Column, planes: list[list[float]], bands: int, rows_per_band: int) -> Column:
-    """array<string> of band signatures: each band concatenates the sign
-    bits of ``rows_per_band`` hyperplane projections."""
-    bits = [
-        F.when(dot(vec, F.array(*[F.lit(p) for p in plane])) >= 0, F.lit("1")).otherwise(
-            F.lit("0")
-        )
-        for plane in planes
-    ]
-    sigs = []
-    for b in range(bands):
-        band_bits = bits[b * rows_per_band : (b + 1) * rows_per_band]
-        sigs.append(F.concat(F.lit(f"{b}:"), *band_bits))
-    return F.array(*sigs)
-
-
-def _band_rows(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    planes: list[list[float]],
-    bands: int,
-    rows_per_band: int,
-    out_id: str,
-    probe_flips: int = 0,
-    scope=None,
-) -> DataFrame:
-    """Exploded (id, band signature) rows via one broadcast-numpy matmul
-    per Arrow batch — the plan holds ZERO plane literals.
-
-    ``probe_flips`` (query side only): multi-probe LSH (Lv et al. 2007,
-    "Multi-Probe LSH") — besides each band's base signature, emit
-    variants with the ``probe_flips`` LOWEST-|margin| projection bits
-    flipped one at a time. A vector near a hyperplane lands on either
-    side with ~equal probability, so probing the adjacent buckets of
-    exactly those borderline bits recovers most of the recall that one
-    more band would buy, at (1 + probe_flips)x PROBE rows instead of
-    another full corpus band.
-
-    The expression arm (:func:`_band_signatures`) embeds every plane as
-    an ``F.lit`` array and evaluates n_planes interpreted dot folds per
-    row: at LSH-topk scale (192 planes x 64 dims x 10M rows) that is
-    ~12k multiply-adds per row in interpreted HOFs — the 10M-vector
-    sweep measured it at ~10 minutes per corpus pass. Here each batch
-    computes ``sign(V @ P.T)`` in one BLAS call and packs each band's
-    bits into a long (``band * 2^rows_per_band + bits``), so the join
-    key is a fixed-width integer instead of a string. Signatures are
-    self-consistent across corpus/query sides (same kernel)."""
-    import numpy as np
-
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    if rows_per_band > 56:
-        raise ValueError("rows_per_band > 56 overflows the packed long signature")
-    bc = df.sparkSession.sparkContext.broadcast(
-        np.array(planes, dtype=np.float64)
-    )
-    if scope is not None:
-        scope.add_broadcast(bc)
-    id_type = df.schema[id_col].dataType
-    schema = StructType([StructField(out_id, id_type), StructField("__sig", LongType())])
-    weights_shape = (bands, rows_per_band)
-
-    def kernel(batches):
-        import pandas as pd
-
-        P = bc.value
-        weights = (1 << np.arange(weights_shape[1] - 1, -1, -1, dtype=np.int64))
-        band_offset = (
-            np.arange(weights_shape[0], dtype=np.int64) << weights_shape[1]
-        )
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            mask = pdf[vec_col].notna().to_numpy()
-            sub = pdf[mask]
-            if not len(sub):
-                continue
-            V = np.array(sub[vec_col].tolist(), dtype=np.float64)
-            proj = V @ P.T  # b x n_planes
-            bits = proj >= 0
-            packed = (
-                bits.reshape(len(sub), *weights_shape).astype(np.int64) * weights
-            ).sum(axis=2) + band_offset  # b x bands
-            ids = sub[id_col].to_numpy()
-            sigs = [packed]
-            if probe_flips > 0:
-                # rank each band's projections by |margin|; flip the
-                # closest-to-the-hyperplane bits one at a time
-                margins = np.abs(proj).reshape(len(sub), *weights_shape)
-                order = np.argsort(margins, axis=2, kind="stable")
-                for j in range(min(probe_flips, weights_shape[1])):
-                    pos = order[:, :, j]  # projection index within band
-                    flip = np.int64(1) << (weights_shape[1] - 1 - pos)
-                    sigs.append(packed ^ flip)
-            all_sigs = np.stack(sigs, axis=1)  # b x variants x bands
-            yield pd.DataFrame(
-                {
-                    out_id: np.repeat(ids, all_sigs.shape[1] * weights_shape[0]),
-                    "__sig": all_sigs.reshape(len(sub), -1).ravel(),
-                }
-            )
-
-    return df.select(id_col, vec_col).mapInPandas(kernel, schema=schema)
-
-
-def cosine_topk_lsh(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int,
-    dim: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    query_vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    bands: int = 8,
-    rows_per_band: int = 4,
-    seed: int = 42,
-    round_to: int | None = 4,
-    multiprobe: int = 0,
-    scope=None,
-) -> DataFrame:
-    """Approximate top-k: sign-LSH banding for candidates, exact re-rank.
-
-    Recall/cost trades via (bands, rows_per_band): more bands -> higher
-    recall, more candidates. ``multiprobe`` adds query-side 1-bit
-    perturbation probes of the lowest-|margin| bits (see
-    :func:`_band_rows`) — recall per extra candidate beats adding
-    bands, since only the tiny broadcast side grows. Candidate
-    generation is a map-side broadcast join on (band signature) —
-    never a cross join, and the corpus bytes that move are band-frame
-    SLIM.
-
-    Scale shape (rewritten after the 10M-vector sweep): the corpus band
-    frame carries (id, signature) ONLY. An earlier revision exploded
-    the 64-dim normalized vector into every band row — corpus bytes x
-    bands (90 GB at 10M x 16 bands) — and left the signature join
-    unpinned, so Catalyst's fabricated post-projection estimate planned
-    a sort-merge join that SORTED those 90 GB (filled the disk with
-    spill before any result). Now: queries' band frame broadcasts (tiny
-    by the small-query contract, like :func:`cosine_topk`), candidates
-    dedup to (query, id) pairs, and the full vectors join back by id —
-    corpus-side pinned ``hint("merge")`` (the fabricated-estimate rule:
-    a corpus-derived frame must never ride the auto-broadcast
-    threshold), query side broadcast.
-
-    ``scope`` (a :class:`~kfai_pipeline_spark.operators.dedup.CacheScope`):
-    each call creates TWO SparkContext broadcasts (the hyperplane matrix,
-    once per side); the returned frame is lazy so they can't be destroyed
-    here. A loop running many LSH passes in one session should pass a
-    scope and ``release()`` between iterations, or the executor-resident
-    broadcast blocks accrete one pair per call. Same option on
-    assign_clusters / ivf_probe_topk / pq_topk / ivfpq_topk.
-    """
-    planes = random_hyperplanes(dim, bands * rows_per_band, seed)
-
-    # Sign-LSH band signatures are scale-invariant, so they're computed
-    # on the raw vectors (numpy kernel — see _band_rows for why not the
-    # expression arm); scoring uses unit-normalized copies.
-    v_slim = _band_rows(
-        vectors, vec_col, id_col, planes, bands, rows_per_band, id_col,
-        scope=scope,
-    )
-    q_slim = _band_rows(
-        queries, query_vec_col, query_id_col, planes, bands, rows_per_band, "__qid",
-        probe_flips=multiprobe, scope=scope,
-    )
-    cands = (
-        v_slim.join(F.broadcast(q_slim), "__sig")
-        .select("__qid", id_col)
-        .dropDuplicates(["__qid", id_col])
-    )
-    normed = vectors.select(
-        F.col(id_col), l2_normalize(_as_double(vec_col)).alias("__v")
-    )
-    qn = queries.select(
-        F.col(query_id_col).alias("__qid"),
-        l2_normalize(_as_double(query_vec_col)).alias("__qv"),
-    )
-    score = dot(F.col("__v"), F.col("__qv"))
-    if round_to is not None:
-        score = F.round(score, round_to)
-    scored = (
-        cands.join(normed.hint("merge"), id_col)
-        .join(F.broadcast(qn), "__qid")
-        .select(F.col("__qid").alias(query_id_col), F.col(id_col), score.alias("score"))
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .drop("__rn")
-    )
-
-
 # --------------------------------------------------------------------------
-# IVF (inverted-file) ANN
+# IVF routing: k-means centroids and nearest-centroid assignment
 # --------------------------------------------------------------------------
 
 
@@ -573,9 +362,10 @@ def kmeans_centroids(
     centroids = [list(r["__v"]) for r in init_rows]
     if not centroids:
         # nothing to seed from (empty or all-degenerate corpus):
-        # callers treat an empty codebook as "no index" (ivf_topk
-        # returns an empty result) rather than crashing the Lloyd loop
-        # on a 0-dimensional centroid matrix
+        # callers treat an empty codebook as "no index" (train_ivfpq
+        # returns empty books, written as a schema-only codes table)
+        # rather than crashing the Lloyd loop on a 0-dimensional
+        # centroid matrix
         return []
     sc = vectors.sparkSession.sparkContext
 
@@ -637,179 +427,113 @@ def kmeans_centroids(
     return centroids
 
 
-def ivf_index(
+def _blas_topk(
     vectors: DataFrame,
-    centroids: list[list[float]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """(id, unit vector, cluster_id) — the inverted file.
-
-    Persist with ``.write.partitionBy("cluster_id")`` and probe-time
-    cluster filters become parquet partition pruning. Assignment is the
-    broadcast-numpy path (:func:`assign_clusters`) — plan size stays
-    O(1) in k*dim.
-    """
-    normed = vectors.select(
-        F.col(id_col),
-        l2_normalize(_as_double(vec_col)).alias("__v"),
-    )
-    return assign_clusters(normed, centroids, "__v", "cluster_id")
-
-
-def save_ivf_index(
-    index: DataFrame,
-    centroids: list[list[float]],
-    path: str,
-    mode: str = "overwrite",
-    colocate: bool = True,
-) -> None:
-    """Persist an inverted file for reuse across query batches: vectors
-    partitioned by ``cluster_id`` (probe filters become parquet
-    partition pruning — only the probed clusters' files are read) plus
-    a centroids JSON sidecar (k*dim floats, driver-side by design).
-
-    ``colocate`` (default) repartitions on ``cluster_id`` before the
-    write, so each cluster's rows land in ONE task and the layout is
-    one file per cluster. Without it, a dynamic-partition write from T
-    input tasks emits up to T x k files (the 10M-vector sweep produced
-    40 x 256 = 10k small files) and every task sorts the full spread of
-    cluster ids — the classic small-files + spill shape. Opt out only
-    when the index is already partitioned on ``cluster_id``."""
-    import json
-    import os
-
-    to_write = index.repartition("cluster_id") if colocate else index
-    to_write.write.mode(mode).partitionBy("cluster_id").parquet(os.path.join(path, "vectors"))
-    tmp = os.path.join(path, "centroids.json")
-    with open(tmp, "w") as f:
-        json.dump(centroids, f)
-
-
-def load_ivf_index(spark, path: str) -> tuple[DataFrame, list[list[float]]]:
-    """Load a persisted inverted file: (index DataFrame, centroids)."""
-    import json
-    import os
-
-    df = spark.read.parquet(os.path.join(path, "vectors"))
-    with open(os.path.join(path, "centroids.json")) as f:
-        centroids = json.load(f)
-    return df, centroids
-
-
-def ivf_probe_topk(
-    index: DataFrame,
-    centroids: list[list[float]],
     queries: DataFrame,
     k: int,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    query_vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    round_to: int | None = 4,
-    scope=None,
+    vec_col: str,
+    id_col: str,
+    query_vec_col: str,
+    query_id_col: str,
+    round_to: int | None,
+    out_types: tuple,
+    fn: str,
+    label_col: str | None = None,
+    query_label_col: str | None = None,
 ) -> DataFrame:
-    """Probe a prebuilt inverted file (``ivf_index`` output, in-memory
-    or loaded via :func:`load_ivf_index`). Each query scores only its
-    ``nprobe`` nearest clusters; the (query, cluster) pairs broadcast,
-    so the index never shuffles — and on a persisted index the
-    cluster_id equi-join prunes to the probed partitions' files."""
+    """The one BLAS top-k kernel behind :func:`cosine_topk_blas` and
+    (labelled) :func:`mine_hard_negatives_blas`.
+
+    The query side (with its labels) collects once and ships to every
+    task as a plain numpy matrix; each corpus Arrow batch scores ALL
+    its queries with one ``V @ Q.T`` matmul and emits only its LOCAL
+    top-k rows per query, so the global window shuffles
+    O(k x queries x batches) rows, never |corpus| x |queries|.
+    NULL/zero-norm vectors normalize to NULL and are dropped on both
+    sides (map-side on the corpus, or the batch matrix goes ragged);
+    given labels, NULL labels are dropped too and same-label rows
+    (the anchor itself included) never enter a query's ranking.
+
+    Tie-break and ROUNDING match the JVM arms exactly: the kernel emits
+    raw doubles with a one-quantum local margin, ``F.round``
+    (half-away-from-zero, like Spark ROUND and DuckDB) applies at the
+    DataFrame layer, and the global window ranks (score desc, id asc).
+    np.round is half-EVEN, so an in-kernel round left a knife-edge at
+    exact 5e-5 score boundaries; the margin keeps every row that could
+    round into a global tie. ``out_types`` are the (query id, corpus
+    id) output types."""
     import numpy as np
 
-    from pyspark.sql.types import IntegerType, StructField, StructType
+    from pyspark.sql.types import DoubleType, StructField, StructType
 
-    qn = queries.select(
-        F.col(query_id_col).alias("__qid"),
-        l2_normalize(_as_double(query_vec_col)).alias("__qv"),
-    )
-    # top-nprobe cluster ids per query: broadcast-numpy routing (zero
-    # centroid literals in the plan — O(1) plan size in k*dim). Stable
-    # argsort on -dot = dot desc with deterministic low-id tie-break,
-    # matching the assignment kernel's argmax. NULL (zero-norm) query
-    # vectors emit no probe rows, as explode(NULL) did before.
-    bc = queries.sparkSession.sparkContext.broadcast(
-        np.array(centroids, dtype=np.float64)
-    )
-    if scope is not None:
-        scope.add_broadcast(bc)
-    probe_schema = StructType(
-        qn.schema.fields + [StructField("cluster_id", IntegerType())]
-    )
-    np_ = min(nprobe, len(centroids))
+    labelled = label_col is not None
+    q_cols = [F.col(query_id_col), l2_normalize(_as_double(query_vec_col))]
+    if labelled:
+        q_cols.append(F.col(query_label_col))
+    q_collected = queries.select(*q_cols).collect()
+    _warn_large_query_collect(len(q_collected), fn)
+    # degenerate queries (and NULL-labelled anchors) never rank (contract)
+    q_rows = [r for r in q_collected if all(x is not None for x in r[1:])]
+    qids = np.array([r[0] for r in q_rows])
+    Q = np.array([list(r[1]) for r in q_rows], dtype=np.float64)  # q x d
+    q_lbl = np.array([r[2] for r in q_rows], dtype=object) if labelled else None
 
-    def route(batches):
-        C = bc.value
+    cols = [F.col(id_col), l2_normalize(_as_double(vec_col)).alias("__v")]
+    keep = F.col("__v").isNotNull()
+    if labelled:
+        cols.append(F.col(label_col).alias("__lbl"))
+        keep = keep & F.col("__lbl").isNotNull()
+    normed = vectors.select(*cols).where(keep)
+    out_schema = StructType(
+        [
+            StructField(query_id_col, out_types[0]),
+            StructField(id_col, out_types[1]),
+            StructField("score", DoubleType()),
+        ]
+    )
+    quantum = 10.0 ** (-round_to) if round_to is not None else 0.0
+
+    def score_batches(batches):
+        import pandas as pd
+
         for pdf in batches:
-            if not len(pdf):
+            if not len(pdf) or not len(qids):
                 continue
-            mask = pdf["__qv"].notna().to_numpy()
-            sub = pdf[mask]
-            if not len(sub):
-                continue
-            V = np.array(sub["__qv"].tolist(), dtype=np.float64)
-            order = np.argsort(-(V @ C.T), axis=1, kind="stable")[:, :np_]
-            out = sub.iloc[np.repeat(np.arange(len(sub)), np_)].copy()
-            out["cluster_id"] = order.ravel().astype("int32")
-            yield out
+            V = np.array(pdf["__v"].tolist(), dtype=np.float64)  # b x d
+            ids = pdf.iloc[:, 0].to_numpy()
+            lbl = pdf["__lbl"].to_numpy() if labelled else None
+            S = V @ Q.T  # b x q
+            out = {query_id_col: [], id_col: [], "score": []}
+            for j in range(len(qids)):
+                if labelled:
+                    valid = lbl != q_lbl[j]
+                    idv, col = ids[valid], S[valid, j]
+                else:
+                    idv, col = ids, S[:, j]
+                # local top-k on the RAW score with a one-quantum
+                # margin: anything below (kth raw - quantum) rounds
+                # strictly below the kth rounded value, so pruning it
+                # cannot change the global rounded ranking
+                kk = min(k, len(idv))
+                if kk < len(col):
+                    kth = col[np.argpartition(-col, kk - 1)[kk - 1]]
+                    keep_rows = np.flatnonzero(col >= kth - quantum)
+                else:
+                    keep_rows = np.arange(len(col))
+                out[query_id_col].extend([qids[j]] * len(keep_rows))
+                out[id_col].extend(idv[keep_rows])
+                out["score"].extend(col[keep_rows])
+            if out[id_col]:
+                yield pd.DataFrame(out)
 
-    probes = qn.mapInPandas(route, schema=probe_schema)
-    score = dot(F.col("__v"), F.col("__qv"))
+    local = normed.mapInPandas(score_batches, schema=out_schema)
     if round_to is not None:
-        score = F.round(score, round_to)
-    scored = index.join(F.broadcast(probes), "cluster_id").select(
-        F.col("__qid").alias(query_id_col), F.col(id_col), score.alias("score")
-    )
+        local = local.withColumn("score", F.round("score", round_to))
     w = Window.partitionBy(query_id_col).orderBy(F.desc("score"), F.asc(id_col))
     return (
-        scored.withColumn("__rn", F.row_number().over(w))
+        local.withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") <= k)
         .drop("__rn")
-    )
-
-
-def ivf_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int,
-    n_clusters: int = 16,
-    nprobe: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    query_vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    iters: int = 3,
-    round_to: int | None = 4,
-    centroids: list[list[float]] | None = None,
-) -> DataFrame:
-    """Approximate top-k via IVF probing, building the index inline.
-
-    Each query scores only the ``nprobe`` clusters whose centroids are
-    nearest, i.e. ~|corpus|*nprobe/n_clusters exact dot products.
-    ``nprobe == n_clusters`` degrades gracefully to exact search. Pass
-    precomputed ``centroids`` to skip k-means; for cross-batch reuse
-    persist with :func:`save_ivf_index` and probe via
-    :func:`ivf_probe_topk` over :func:`load_ivf_index`.
-    """
-    if centroids is None:
-        centroids = kmeans_centroids(vectors, n_clusters, vec_col, id_col, iters)
-    if not centroids:
-        # empty (or all-degenerate) corpus: no clusters to probe — an
-        # empty result with the contract schema, not a kernel crash on
-        # a 0-dim centroid matrix (round-6 empty-input sweep)
-        spark = vectors.sparkSession
-        from pyspark.sql.types import DoubleType, StructField, StructType
-
-        schema = StructType(
-            [
-                queries.schema[query_id_col],
-                vectors.schema[id_col],
-                StructField("score", DoubleType()),
-            ]
-        )
-        return spark.createDataFrame([], schema)
-    index = ivf_index(vectors, centroids, vec_col, id_col)
-    return ivf_probe_topk(
-        index, centroids, queries, k, nprobe, id_col, query_vec_col, query_id_col, round_to
     )
 
 
@@ -830,96 +554,16 @@ def cosine_topk_blas(
     for a handful of queries but multiplies painfully at
     |corpus| x |queries| when serving hundreds of queries per batch.
     Here the unit-normalized query matrix (q x d floats — bounded by
-    construction, query batches are small relative to the corpus) ships
-    to every task as a plain numpy array and each corpus Arrow batch
-    computes ALL its scores with one ``V @ Q.T`` matmul, then emits only
-    its LOCAL top-k rows per query. The global top-k window therefore
-    shuffles O(k x queries x batches) rows instead of
-    |corpus| x |queries| — the same two-level top-k shape as the shard
-    packer's prefix sum.
-
-    Tie-break and ROUNDING match the JVM arm exactly: the kernel emits
-    raw doubles with a one-quantum local margin, ``F.round`` (half-away
-    -from-zero, like DuckDB) applies at the DataFrame layer, and the
-    global window ranks (score desc, id asc) — so no qualifying row is
-    pruned batch-side and np.round's half-even ties never leak in.
+    construction, query batches are small relative to the corpus) is
+    scored by :func:`_blas_topk` — the same two-level top-k shape as
+    the shard packer's prefix sum. Rows equal the JVM arm's exactly
+    (test-pinned); both ids come out as BIGINT.
     """
-    import numpy as np
+    from pyspark.sql.types import LongType
 
-    q_collected = queries.select(
-        F.col(query_id_col), l2_normalize(_as_double(query_vec_col))
-    ).collect()
-    _warn_large_query_collect(len(q_collected), "cosine_topk_blas")
-    # degenerate queries never rank (contract)
-    q_rows = [r for r in q_collected if r[1] is not None]
-    qids = np.array([r[0] for r in q_rows])
-    Q = np.array([list(r[1]) for r in q_rows], dtype=np.float64)  # q x d
-
-    # NULL/zero-norm vectors normalize to NULL; drop them MAP-SIDE or
-    # the numpy batch matrix goes ragged and the kernel crashes (they
-    # could never rank anyway — the JVM arm's NULLS-LAST ordering
-    # excludes them implicitly)
-    normed = vectors.select(
-        F.col(id_col), l2_normalize(_as_double(vec_col)).alias("__v")
-    ).where(F.col("__v").isNotNull())
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    out_schema = StructType(
-        [
-            StructField(query_id_col, LongType()),
-            StructField(id_col, LongType()),
-            StructField("score", DoubleType()),
-        ]
-    )
-
-    # the kernel emits RAW doubles and the rounding happens HERE with
-    # F.round (half-away-from-zero, matching the JVM arm and DuckDB) —
-    # np.round is half-EVEN, so an in-kernel round left a knife-edge at
-    # exact 5e-5 score boundaries (round-8 advice). The local top-k
-    # keeps a one-quantum margin so no row that could round into a
-    # global tie is pruned batch-side.
-    quantum = 10.0 ** (-round_to) if round_to is not None else 0.0
-
-    def score_batches(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.array(pdf["__v"].tolist(), dtype=np.float64)  # b x d
-            ids = pdf.iloc[:, 0].to_numpy()
-            S = V @ Q.T  # b x q
-            kk = min(k, len(ids))
-            out = {query_id_col: [], id_col: [], "score": []}
-            for j in range(len(qids)):
-                col = S[:, j]
-                # local top-k on the RAW score with a one-quantum
-                # margin: anything below (kth raw - quantum) rounds
-                # strictly below the kth rounded value, so pruning it
-                # cannot change the global rounded ranking
-                if kk < len(col):
-                    kth = col[np.argpartition(-col, kk - 1)[kk - 1]]
-                    keep = np.flatnonzero(col >= kth - quantum)
-                else:
-                    keep = np.arange(len(col))
-                out[query_id_col].extend([qids[j]] * len(keep))
-                out[id_col].extend(ids[keep])
-                out["score"].extend(col[keep])
-            yield pd.DataFrame(out)
-
-    local = normed.mapInPandas(score_batches, schema=out_schema)
-    if round_to is not None:
-        local = local.withColumn("score", F.round("score", round_to))
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        local.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .drop("__rn")
+    return _blas_topk(
+        vectors, queries, k, vec_col, id_col, query_vec_col, query_id_col,
+        round_to, (LongType(), LongType()), "cosine_topk_blas",
     )
 
 
@@ -938,89 +582,20 @@ def mine_hard_negatives_blas(
     """Arrow/BLAS arm of :func:`mine_hard_negatives` — the scale path
     when mining negatives for a whole training batch against a large
     corpus: the expression arm pays an interpreted HOF dot per
-    (corpus row x anchor) pair, this arm computes every batch's scores
-    with ONE ``V @ Q.T`` matmul, masks same-label pairs in the numpy
-    kernel, and emits only local top-k rows per anchor (the
-    :func:`cosine_topk_blas` two-level top-k shape: the global window
-    shuffles O(k x anchors x batches) rows, never
-    |corpus| x |anchors|).
+    (corpus row x anchor) pair, this arm is the labelled call of
+    :func:`_blas_topk` (same-label pairs masked in the numpy kernel).
 
     Contract-identical to the expression arm (equality test-pinned):
     ranking on the ROUNDED score with id tie-break, NULL/zero-norm
     vectors and NULL labels excluded on both sides, same-label rows
-    (including the anchor itself) never enter the ranking.
+    (including the anchor itself) never enter the ranking. The ids
+    keep their input types.
     """
-    import numpy as np
-
-    a_collected = anchors.select(
-        F.col(anchor_id_col),
-        l2_normalize(_as_double(anchor_vec_col)),
-        F.col(anchor_label_col),
-    ).collect()
-    _warn_large_query_collect(len(a_collected), "mine_hard_negatives_blas")
-    a_rows = [r for r in a_collected if r[1] is not None and r[2] is not None]
-    aids = np.array([r[0] for r in a_rows])
-    albl = np.array([r[2] for r in a_rows], dtype=object)
-    Q = np.array([list(r[1]) for r in a_rows], dtype=np.float64)
-
-    normed = vectors.select(
-        F.col(id_col),
-        l2_normalize(_as_double(vec_col)).alias("__v"),
-        F.col(label_col).alias("__lbl"),
-    ).where(F.col("__v").isNotNull() & F.col("__lbl").isNotNull())
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    out_schema = StructType(
-        [
-            StructField(anchor_id_col, anchors.schema[anchor_id_col].dataType),
-            StructField(id_col, vectors.schema[id_col].dataType),
-            StructField("score", DoubleType()),
-        ]
-    )
-
-    # raw doubles out of the kernel, F.round at the DataFrame layer —
-    # the cosine_topk_blas fix (round-8 advice): np.round's half-even
-    # ties diverge from Spark/DuckDB ROUND at exact 5e-5 boundaries.
-    # One-quantum local margin keeps every row that could round into a
-    # global tie.
-    quantum = 10.0 ** (-round_to) if round_to is not None else 0.0
-
-    def score_batches(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf) or not len(aids):
-                continue
-            V = np.array(pdf["__v"].tolist(), dtype=np.float64)
-            ids = pdf.iloc[:, 0].to_numpy()
-            lbl = pdf["__lbl"].to_numpy()
-            S = V @ Q.T  # b x q
-            out = {anchor_id_col: [], id_col: [], "score": []}
-            for j in range(len(aids)):
-                valid = lbl != albl[j]  # same-label rows never rank
-                if not valid.any():
-                    continue
-                idv, colv = ids[valid], S[valid, j]
-                kk = min(k, len(idv))
-                if kk < len(colv):
-                    kth = colv[np.argpartition(-colv, kk - 1)[kk - 1]]
-                    keep = np.flatnonzero(colv >= kth - quantum)
-                else:
-                    keep = np.arange(len(colv))
-                out[anchor_id_col].extend([aids[j]] * len(keep))
-                out[id_col].extend(idv[keep])
-                out["score"].extend(colv[keep])
-            if out[id_col]:
-                yield pd.DataFrame(out)
-
-    local = normed.mapInPandas(score_batches, schema=out_schema)
-    if round_to is not None:
-        local = local.withColumn("score", F.round("score", round_to))
-    w = Window.partitionBy(anchor_id_col).orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        local.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .drop("__rn")
+    return _blas_topk(
+        vectors, anchors, k, vec_col, id_col, anchor_vec_col, anchor_id_col,
+        round_to,
+        (anchors.schema[anchor_id_col].dataType, vectors.schema[id_col].dataType),
+        "mine_hard_negatives_blas", label_col, anchor_label_col,
     )
 
 
@@ -1284,7 +859,8 @@ def _write_codes(
 
     A partitioned kind (ivfpq's ``cluster_id``) repartitions on its key
     first: a dynamic-partition write from T tasks emits up to T x k
-    small files (save_ivf_index's lesson). A ZERO-row dynamic-partition
+    small files (a 10M-vector write from 40 tasks x 256 clusters emitted
+    10k). A ZERO-row dynamic-partition
     write emits no part files yet commits ``_SUCCESS``, leaving a dir no
     reader can infer a schema from — so the empty build and every epoch
     write unpartitioned (one all-degenerate micro-batch would otherwise
@@ -1831,8 +1407,8 @@ def _compact_codes_write(
     A partitioned kind keeps its partition layout — the probe's
     pruning. That is one file per cluster (repartition on the key),
     NOT target_bytes-sized: splitting clusters across tasks under
-    partitionBy re-fragments (T tasks x k dirs small files, the
-    save_ivf_index lesson), and an oversized hot-cluster file is still
+    partitionBy re-fragments (T tasks x k dirs small files, see
+    :func:`_write_codes`), and an oversized hot-cluster file is still
     row-group-splittable at scan time. ``target_bytes`` governs the
     unpartitioned kind. An empty table writes unpartitioned (the
     zero-row dynamic-partition hazard, :func:`_write_codes`)."""
@@ -2308,16 +1884,17 @@ def _warn_large_query_collect(n: int, fn: str) -> None:
     """The ANN entry points collect the QUERY side to the driver by
     design (queries are the broadcast side; tens-to-thousands of rows).
     A million-query frame is no longer a query batch — warn that the
-    collect is driver-memory-bound and name the large-batch arm
-    (mirrors sources/skip_list.py's control-metadata guard)."""
+    collect is driver-memory-bound and say how to bound it (mirrors
+    sources/skip_list.py's control-metadata guard)."""
     if n > _QUERY_COLLECT_WARN_ABOVE:
         import warnings
 
         warnings.warn(
             f"{fn} collected {n:,} query rows to the driver — beyond the "
             "query-batch contract (the kernel broadcasts all of them to "
-            "every task). For corpus-scale query sets use the banded "
-            "join arm (cosine_topk_lsh) or split the batch.",
+            "every task). For corpus-scale query sets split the batch, "
+            "or serve it through rag.retrieve_tiered_batch, whose "
+            "max_pending splits it into chunks.",
             ResourceWarning,
             stacklevel=3,
         )

@@ -57,7 +57,7 @@ _SNAPSHOT_HISTORY: tuple[frozenset[str], ...] = (
         "q29_tokens", "q30_corpus", "q31_bigrams", "q32_langid",
         "q33_fingerprint", "q34_minhash", "q35_simhash",
         "q37_chunk_docs", "q38_embed_pipeline", "q36_neardup_emb",
-        "q47_simsearch_ivf", "q48_ngram_jaccard", "q49_fingerprint_md5",
+        "q48_ngram_jaccard", "q49_fingerprint_md5",
         "q50_simhash_md5", "q51_partitioned_roundtrip",
         "q58_sliding_window", "q59_salted_join",
         "q57_duration_format_roundtrip", "q56_connected_components",

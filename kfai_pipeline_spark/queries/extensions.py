@@ -541,35 +541,6 @@ def q36_neardup_emb(spark, sf_dir):
     return pairs.orderBy("id_a", "id_b")
 
 
-# ---------------------------------------------------------------- Q47: IVF similarity
-@register(
-    "q47_simsearch_ivf",
-    oracle="""
-    WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0)
-    SELECT e.vec_id,
-           ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv), 4) AS score
-    FROM embeddings e, q
-    WHERE e.vec_id <> 0
-    ORDER BY score DESC, e.vec_id
-    LIMIT 10
-    """,
-    doc=(
-        "IVF-routed cosine top-10 vs vec_id=0 (X3 scale path). Run here with "
-        "nprobe == n_clusters (exhaustive probing), which is exactly "
-        "brute-force — hence oracle-checkable; the approximate regime "
-        "(nprobe < n_clusters) is recall-tested in tests/test_similarity_ivf.py."
-    ),
-)
-def q47_simsearch_ivf(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") == 0).select(
-        F.lit(0).alias("query_id"), "embedding"
-    )
-    corpus = emb.where(F.col("vec_id") != 0)
-    topk = S.ivf_topk(corpus, queries, k=10, n_clusters=8, nprobe=8, round_to=4)
-    return topk.select("vec_id", "score").orderBy(F.desc("score"), F.asc("vec_id"))
-
-
 # ---------------------------------------------------------------- Q48: n-gram Jaccard
 @register(
     "q48_ngram_jaccard",

@@ -44,7 +44,7 @@ DOC_QUERIES = [
     "q109_dsir_sample",
 ]
 VEC_QUERIES = [
-    "q27", "q36_neardup_emb", "q47_simsearch_ivf", "q69_radius_search",
+    "q27", "q36_neardup_emb", "q69_radius_search",
     "q74_semantic_dedup", "q76_simsearch_blas", "q90_cluster_assign", "q117_hard_negatives", "q120_hard_negatives_blas",
     "q110_quantized_ann", "q121_rag_tiered", "q125_rag_tiered_ivfpq", "q126_rag_tiered_batch", "q124_rag_multi_topic", "q127_rag_multi_topic_tiered", "q128_rag_index_append_sq8", "q129_rag_index_append_ivfpq", "q130_rag_index_stream", "q131_index_drift", "q132_rag_tiered_batch_filters", "q133_rag_serving_lifecycle", "q134_rag_drift_rebuild", "q135_rag_selfheal_stream", "q136_rag_index_stage", "q137_rag_tiered_opq",
 ]

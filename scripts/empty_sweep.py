@@ -14,8 +14,9 @@ queries failed —
     non-empty table).
   - q71: funnel counters went NULL (SUM over zero rows) where a report
     must read 0 — coalesced in both engines.
-  - q47: k-means crashed unpacking a 0-dim centroid matrix — an empty
-    codebook now short-circuits to an empty result.
+  - q47 (deleted since, with the flat-IVF tier): k-means crashed
+    unpacking a 0-dim centroid matrix — an empty codebook now
+    short-circuits (train_ivfpq returns empty books).
   - q111: the SQ8 kernel broadcast (1,d)x(0,) — empty index / no
     usable queries now return the contract schema empty.
   - q107: percentile over no events has no split bounds, and a fully

@@ -70,14 +70,6 @@ SECTIONS = [
         "anywhere.",
     ),
     (
-        "q47_simsearch_ivf",
-        "IVF ANN probe (X3 scale path)",
-        "Centroid assignment is literal-embedded arithmetic in the scan stage; "
-        "the (query, probed-cluster) pairs broadcast, so the indexed corpus is "
-        "joined without shuffling it. Scan cost per query ~ nprobe/n_clusters "
-        "of the corpus.",
-    ),
-    (
         "q54_sessionize_terminator",
         "Terminator-aware sessionization, batch arm (§2.10)",
         "The whole pipeline — lag, cumulative-sum session ids, per-session "

@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """IVFPQ spot at 10M vectors (round 7, X44) — the composition of
-ivf_nprobe_curve.py and pq_vec_spot.py. Trains coarse=256 clusters +
+ivf_nprobe_curve.py (deleted) and pq_vec_spot.py. Trains coarse=256 clusters +
 residual PQ (m=16 x 256 codes, the measured flat-PQ operating point),
 writes the cluster-partitioned 16-byte-code index, then sweeps nprobe
 with refine=32, recording recall vs exact and wall vs the brute BLAS

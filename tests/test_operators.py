@@ -1,7 +1,6 @@
 """Operator unit tests: as-of join edge cases, dedup family invariants
 (LSH candidates vs exact Jaccard, simhash hamming, connected
-components), LSH similarity recall vs brute force, API connector
-batching/retry/routing."""
+components), API connector batching/retry/routing."""
 
 from __future__ import annotations
 
@@ -178,53 +177,6 @@ def test_exact_dedup_keeps_one_per_text(spark, dup_docs):
     out = D.exact_dedup(dup_docs, "text")
     assert out.count() == dup_docs.count() - 1  # 100/101 collapse
     assert out.select("doc_id").distinct().count() == out.count()
-
-
-# ---------------------------------------------------------------- LSH similarity recall
-def test_lsh_topk_recall_vs_brute_force(spark):
-    emb = (
-        spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    )
-    queries = emb.where(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    corpus = emb.where(F.col("vec_id") >= 3)
-    exact = S.cosine_topk(corpus, queries, k=10)
-    approx = S.cosine_topk_lsh(
-        corpus, queries, k=10, dim=64, bands=16, rows_per_band=2
-    )
-    exact_sets = {}
-    for r in exact.collect():
-        exact_sets.setdefault(r["query_id"], set()).add(r["vec_id"])
-    approx_sets = {}
-    for r in approx.collect():
-        approx_sets.setdefault(r["query_id"], set()).add(r["vec_id"])
-    recalls = [
-        len(exact_sets[q] & approx_sets.get(q, set())) / 10 for q in exact_sets
-    ]
-    assert sum(recalls) / len(recalls) >= 0.5, recalls  # 16x2 bands: decent recall
-
-
-def test_lsh_topk_scope_releases_plane_broadcasts(spark):
-    # each cosine_topk_lsh call creates two hyperplane broadcasts (one
-    # per side); a scope must capture them for deterministic release so
-    # looped callers don't accrete executor-resident blocks
-    from kfai_pipeline_spark.operators.dedup import CacheScope
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    queries = emb.where(F.col("vec_id") < 2).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    corpus = emb.where(F.col("vec_id") >= 2)
-    scope = CacheScope()
-    out = S.cosine_topk_lsh(
-        corpus, queries, k=5, dim=64, bands=8, rows_per_band=2, scope=scope
-    )
-    assert out.count() >= 0  # materialize before release
-    assert len(scope._bcs) == 2
-    scope.release()
-    assert not scope._bcs
-    scope.release()  # idempotent
 
 
 # ---------------------------------------------------------------- API connector

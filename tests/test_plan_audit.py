@@ -96,12 +96,6 @@ def test_q27_similarity_never_cartesian(spark):
     assert "BroadcastNestedLoopJoin" in p or "BroadcastHashJoin" in p
 
 
-def test_q47_ivf_probe_join_broadcasts(spark):
-    p = plan(spark, "q47_simsearch_ivf")
-    assert "CartesianProduct" not in p
-    assert "Broadcast" in p
-
-
 def test_embedding_neardup_default_is_not_all_pairs(spark):
     # the DEFAULT near-dup path must plan as a signature equi-join;
     # the O(n^2) cross join exists only behind an explicit use_lsh=False
@@ -337,7 +331,6 @@ _NESTED_LOOP_OK = {
     "q36_neardup_emb",      # brute pair oracle arm
     "q43_cross",            # explicit CROSS JOIN semantics (declared)
     "q46_sketch",           # 1-row tolerance-band cross join
-    "q47_simsearch_ivf",    # broadcast probe of centroid routing
     "q69_radius_search",    # broadcast query NLJ, map-side filter
     "q73_mixture_sample",   # 1-row totals cross join inside rates
     "q74_semantic_dedup",   # brute pair oracle arm

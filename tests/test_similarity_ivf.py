@@ -1,9 +1,11 @@
-"""IVF ANN (operators/similarity.py: kmeans_centroids / ivf_index /
-ivf_topk).
+"""ANN tiers (operators/similarity.py): IVF routing (kmeans_centroids /
+assign_clusters), the BLAS arm, and the quantized probe family (SQ8,
+PQ, IVFPQ) with their persisted-index contracts.
 
-The exhaustive-probe regime (nprobe == n_clusters) is hash-checked vs
-the DuckDB oracle through the q47 registry entry; these tests cover the
-approximate regime and the index invariants."""
+Registry queries q76, q110-q113, q121 and q125-q137 run these tiers
+against DuckDB oracles (q111-q113 have none; tests here compare them
+with exact arms); these tests cover the approximate regimes and the
+index invariants."""
 
 from __future__ import annotations
 
@@ -36,125 +38,33 @@ def test_centroids_deterministic_and_unit_norm(spark):
 
 
 def test_index_covers_corpus_with_valid_clusters(spark):
+    """assign_clusters labels every row with a valid cluster id, and a
+    scope captures its centroid broadcast for deterministic release."""
+    from kfai_pipeline_spark.operators.dedup import CacheScope
+
     corpus, _ = _corpus_queries(spark)
     cents = S.kmeans_centroids(corpus, n_clusters=4, iters=2)
-    idx = S.ivf_index(corpus, cents)
+    scope = CacheScope()
+    idx = S.assign_clusters(corpus, cents, "embedding", scope=scope)
     n = corpus.count()
     assert idx.count() == n, "every vector lands in exactly one cluster"
     bad = idx.where((F.col("cluster_id") < 0) | (F.col("cluster_id") >= 4)).count()
     assert bad == 0
-
-
-def test_exhaustive_probe_equals_brute_force(spark):
-    corpus, queries = _corpus_queries(spark)
-    exact = S.cosine_topk(corpus, queries, k=10)
-    ivf = S.ivf_topk(corpus, queries, k=10, n_clusters=8, nprobe=8)
-    exact_rows = sorted(map(tuple, exact.collect()))
-    ivf_rows = sorted(map(tuple, ivf.collect()))
-    assert exact_rows == ivf_rows
-
-
-def test_partial_probe_recall(spark):
-    """Recall must grow with nprobe and beat the scanned-mass baseline.
-
-    The fixture embeddings are near-uniform random, the hardest case
-    for IVF (neighbors barely concentrate in the routed cluster), so
-    the bar is 'routing beats random scanning', not absolute recall.
-    The whole pipeline is RNG-free, so measured recalls are stable:
-    nprobe=2 -> 0.40, 4 -> 0.64, 6 -> 0.92 on sf0.01 (~0.27/0.50/0.73
-    of corpus mass scanned)."""
-    corpus, queries = _corpus_queries(spark)
-    k = 10
-    exact = {
-        (r["query_id"], r["vec_id"]) for r in S.cosine_topk(corpus, queries, k=k).collect()
-    }
-    cents = S.kmeans_centroids(corpus, n_clusters=8, iters=3)
-
-    def recall(nprobe: int) -> float:
-        approx = {
-            (r["query_id"], r["vec_id"])
-            for r in S.ivf_topk(
-                corpus, queries, k=k, n_clusters=8, nprobe=nprobe, centroids=cents
-            ).collect()
-        }
-        return len(exact & approx) / len(exact)
-
-    r2, r4, r6 = recall(2), recall(4), recall(6)
-    assert r2 <= r4 <= r6, f"recall not monotone in nprobe: {r2} {r4} {r6}"
-    assert r4 > 0.5, f"nprobe=4/8 recall {r4:.2f} no better than scanned mass"
-    assert r6 >= 0.85, f"nprobe=6/8 recall too low: {r6:.2f}"
-
-
-def test_probe_results_are_subset_of_scored_clusters(spark):
-    corpus, queries = _corpus_queries(spark)
-    cents = S.kmeans_centroids(corpus, n_clusters=8, iters=3)
-    idx = S.ivf_index(corpus, cents)
-    got = S.ivf_topk(
-        corpus, queries, k=5, n_clusters=8, nprobe=1, centroids=cents
-    ).collect()
-    cluster_of = {r["vec_id"]: r["cluster_id"] for r in idx.collect()}
-    # with nprobe=1 every hit must come from a single cluster per query
-    by_query: dict[int, set[int]] = {}
-    for r in got:
-        by_query.setdefault(r["query_id"], set()).add(cluster_of[r["vec_id"]])
-    for qid, clusters in by_query.items():
-        assert len(clusters) == 1, f"query {qid} hit {clusters}"
-
-
-def test_persisted_index_prunes_and_matches(spark, tmp_path):
-    """save_ivf_index -> load_ivf_index -> ivf_probe_topk: results equal
-    the in-memory path, and the probe join on the partitioned layout
-    prunes to the probed clusters' files (PartitionFilters present)."""
-    import contextlib
-    import io
-
-    corpus, queries = _corpus_queries(spark)
-    cents = S.kmeans_centroids(corpus, n_clusters=8, iters=3)
-    idx = S.ivf_index(corpus, cents)
-    path = str(tmp_path / "ivf")
-    S.save_ivf_index(idx, cents, path)
-
-    loaded, loaded_cents = S.load_ivf_index(spark, path)
-    assert loaded_cents == cents
-
-    mem = S.ivf_topk(corpus, queries, k=5, n_clusters=8, nprobe=3, centroids=cents)
-    disk = S.ivf_probe_topk(loaded, loaded_cents, queries, k=5, nprobe=3)
-    assert sorted(map(tuple, mem.collect())) == sorted(map(tuple, disk.collect()))
-
-    # static pruning proof: a cluster_id filter on the persisted layout
-    # reaches PartitionFilters (the probe equi-join prunes dynamically
-    # the same way via broadcast + DPP at scale)
-    one = loaded.where(F.col("cluster_id") == 3)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        one.explain("formatted")
-    p = buf.getvalue()
-    assert "PartitionFilters" in p
-    assert "cluster_id" in p.split("PartitionFilters")[1].splitlines()[0]
-
-    # colocated layout (the default): each cluster's rows were
-    # repartitioned into one task, so each cluster directory holds
-    # exactly ONE parquet file — without it a T-task dynamic-partition
-    # write emits up to T files per cluster (10k files at the 10M
-    # sweep's 40x256), the small-files shape a 100 TB index can't carry
-    import glob
-    import os
-
-    for d in glob.glob(os.path.join(path, "vectors", "cluster_id=*")):
-        files = [f for f in os.listdir(d) if f.endswith(".parquet")]
-        assert len(files) == 1, (d, files)
+    assert len(scope._bcs) == 1
+    scope.release()
+    assert not scope._bcs
 
 
 def test_plan_size_flat_in_centroid_count(spark):
-    """Assignment/probe plans must hold ZERO centroid literals: a
+    """The assignment plan must hold ZERO centroid literals: a
     production IVF (k~4096, dim~1024) is a broadcast variable, not
-    millions of expression nodes. Guard: the formatted plan for a
-    k=1024 index is the same size as for k=8 (same operators, same
+    millions of expression nodes. Guard: the formatted plan for k=1024
+    centroids is the same size as for k=8 (same operators, same
     expressions — only the broadcast payload differs)."""
     import contextlib
     import io
 
-    corpus, queries = _corpus_queries(spark)
+    corpus, _ = _corpus_queries(spark)
     dim = 64
 
     def plan_chars(df):
@@ -166,19 +76,9 @@ def test_plan_size_flat_in_centroid_count(spark):
     def fake_centroids(k):
         return [[1.0 if i % dim == j else 0.0 for j in range(dim)] for i in range(k)]
 
-    small = plan_chars(S.ivf_index(corpus, fake_centroids(8)))
-    big = plan_chars(S.ivf_index(corpus, fake_centroids(1024)))
-    assert big < small * 1.3 + 200, f"index plan grows with k: {small} -> {big}"
-
-    small_p = plan_chars(
-        S.ivf_probe_topk(S.ivf_index(corpus, fake_centroids(8)), fake_centroids(8), queries, k=5)
-    )
-    big_p = plan_chars(
-        S.ivf_probe_topk(
-            S.ivf_index(corpus, fake_centroids(1024)), fake_centroids(1024), queries, k=5
-        )
-    )
-    assert big_p < small_p * 1.3 + 200, f"probe plan grows with k: {small_p} -> {big_p}"
+    small = plan_chars(S.assign_clusters(corpus, fake_centroids(8), "embedding"))
+    big = plan_chars(S.assign_clusters(corpus, fake_centroids(1024), "embedding"))
+    assert big < small * 1.3 + 200, f"assignment plan grows with k: {small} -> {big}"
 
 
 def test_blas_arm_equals_jvm_arm(spark):
