@@ -8,13 +8,15 @@ baseline used mean-of-3; Spark's per-query scheduling overhead has
 higher variance on a shared machine, so the median is the honest
 central estimate — it neither hides nor inflates contention spikes.)
 
-Each timed run submits the query's Spark-SQL twin via spark.sql(text):
-a FRESH plan per run — full parse/optimize/execute with new shuffles
-(no shuffle-stage reuse from a recycled Dataset) and no Python-side
-Py4J plan-construction chatter. Same "full query each run" contract as
-the DuckDB oracle baseline. Twins live in
-kfai_pipeline_spark/queries/spark_sql.py and are parity-tested against
-the canonical DataFrame builders in tests/test_oracle.py.
+Each timed run builds the registry query (REGISTRY[name].build, the
+same call perfbench's ``analytics`` workload times) with the plan memo
+(queries/base.py _PLAN_MEMO) emptied first: a FRESH plan per run — full
+parse/optimize/execute with new shuffles, no shuffle-stage reuse from a
+recycled Dataset. Each bench query is Spark-SQL text bound to the
+fixture tables (queries/base.py bind_sql), so a build is one spark.sql
+call, not Python-side plan construction. Same "full query each run"
+contract as the DuckDB oracle baseline; tests/test_oracle.py checks the
+same definitions against it.
 
 Bench session conf (BASELINE.md §3 has the experiment matrix):
   - AQE off: its stage-wise materialization is pure overhead on
@@ -28,7 +30,7 @@ Bench session conf (BASELINE.md §3 has the experiment matrix):
     fits per partition. At sf0.1 every bench join broadcasts (plans
     unchanged); at sf10 this was b2's lineitem-orders join — measured
     interleaved in one session: SMJ median 17.6 s vs SHJ 7.4 s with
-    much lower spread, result parity exact. (r15: b2's twin now joins
+    much lower spread, result parity exact. (r15: b2's query now joins
     the fact against the broadcast pre-reduced ASIA orders, so the
     conf's remaining sf10 effect is the b3 anti join.) At 100 TB the
     same choice is made adaptively (AQE + skew handling, engine
@@ -290,8 +292,8 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
-    from kfai_pipeline_spark.catalog import register_views
-    from kfai_pipeline_spark.queries.spark_sql import BENCH_SQL
+    from kfai_pipeline_spark.queries import REGISTRY
+    from kfai_pipeline_spark.queries.base import _PLAN_MEMO
     from kfai_pipeline_spark.session import get_spark
 
     t0 = time.perf_counter()
@@ -330,7 +332,6 @@ def main() -> None:
             "spark.ui.showConsoleProgress": "false",
         },
     )
-    register_views(spark, sf_dir)
     init_sec = time.perf_counter() - t0
 
     # fixed per-statement floor (see module docstring)
@@ -342,15 +343,18 @@ def main() -> None:
         floor_runs.append(time.perf_counter() - t)
     floor_sec = round(sorted(floor_runs)[len(floor_runs) // 2], 4)
 
-    def time_suite(n_runs: int = 5) -> dict[str, float]:
+    def run_query(dir_: str, qname: str) -> None:
+        _PLAN_MEMO.clear()  # fresh plan: never re-collect a memoized Dataset
+        REGISTRY[qname].build(spark, dir_).collect()
+
+    def time_suite(dir_: str, n_runs: int = 5) -> dict[str, float]:
         out: dict[str, float] = {}
         for bench_name, qname in BENCH_QUERIES.items():
-            sql = BENCH_SQL[qname]
-            spark.sql(sql).collect()  # warm-up (codegen JIT, buffer pools)
+            run_query(dir_, qname)  # warm-up (codegen JIT, buffer pools)
             runs = []
             for _ in range(n_runs):
                 t = time.perf_counter()
-                spark.sql(sql).collect()
+                run_query(dir_, qname)
                 runs.append(time.perf_counter() - t)
             out[bench_name] = round(sorted(runs)[len(runs) // 2], 4)
         return out
@@ -396,8 +400,7 @@ def main() -> None:
         """
         for k, v in conf.items():
             spark.conf.set(k, v)
-        register_views(spark, dir_)
-        arm_timings = time_suite(n_runs)
+        arm_timings = time_suite(dir_, n_runs)
         arm_total = round(sum(arm_timings.values()), 4)
         arm_duck = time_duckdb(dir_)
         arm_duck_total = round(sum(arm_duck.values()), 4)
@@ -457,7 +460,7 @@ def main() -> None:
         con.close()
         return out
 
-    timings = time_suite()
+    timings = time_suite(sf_dir)
     total = round(sum(timings.values()), 4)
     # the DuckDB arm must never discard an already-measured Spark suite
     # (e.g. missing duckdb package, oracle dialect drift). It runs

@@ -11,7 +11,7 @@ Layout:
     catalog     Parquet table loader / temp-view registration
     functions/  scalar function surface (F1-F25)
     operators/  dedup, similarity, text analysis, chunker, clean/embed
-                connectors, multimodal, as-of, sessionize, resume ops
+                connectors, multimodal, as-of, resume ops
     sources/    JSON records, partitioned writer, skip list, API
                 connector, JDBC wrappers
     queries/    declared correctness queries (SURVEY.md §2.12) + oracles

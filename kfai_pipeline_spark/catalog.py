@@ -133,8 +133,8 @@ def load_table(
     # arithmetic (a double division would lose precision above 2^53) —
     # then timestampadd onto a naive epoch, which yields TIMESTAMP_NTZ:
     # the same type current micros fixtures read natively, so the NTZ
-    # contract (date_trunc_tzfree's LTZ guard, epoch_seconds_fn's
-    # dispatch) holds on BOTH vintages. The old F.timestamp_micros form
+    # contract (q28's LTZ guard, epoch_seconds_fn's dispatch) holds on
+    # BOTH vintages. The old F.timestamp_micros form
     # produced LTZ and regressed q28 on legacy fixtures (round-8 review).
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType

@@ -44,54 +44,6 @@ def epoch_seconds_fn(df, ts_col: str):
     return lambda c: c.cast("double")
 
 
-def date_trunc_tzfree(unit: str, col: str | Column, df) -> Column:
-    """Timezone-FREE timestamp truncation for naive (TIMESTAMP_NTZ)
-    columns, returning TIMESTAMP_NTZ.
-
-    Spark's ``F.date_trunc`` implicitly up-casts an NTZ input to LTZ —
-    it interprets the naive value in the SESSION time zone, so a naive
-    wall-clock inside a DST spring-forward gap (2024-03-10 02:30 under
-    America/New_York — a local time that never existed) resolves an
-    hour later and truncates to the WRONG hour, making results depend
-    on the cluster's zone (found by scripts/tz_sweep.py: q28 diverged
-    from the naive DuckDB oracle only under TZ=America/New_York).
-    ``make_timestamp_ntz`` over calendar-field extractions is pure
-    calendar math — no zone anywhere in the plan.
-
-    ``df`` (the frame ``col`` resolves against) is REQUIRED so the NTZ
-    contract is enforced, mirroring ``epoch_seconds_fn``'s type
-    dispatch: on a TIMESTAMP (LTZ) input the year()/hour() extractions
-    below would run in the session zone and silently reintroduce
-    exactly the zone dependence this helper exists to eliminate
-    (round-8 advice) — so an LTZ input raises instead.
-    """
-    from pyspark.sql.types import TimestampNTZType
-
-    c = _c(col)
-    dt = df.select(c).schema[0].dataType
-    if not isinstance(dt, TimestampNTZType):
-        raise TypeError(
-            f"date_trunc_tzfree needs a TIMESTAMP_NTZ input, got {dt}: "
-            "calendar extraction on a zone-aware timestamp is "
-            "session-zone-dependent — cast upstream deliberately or use "
-            "F.date_trunc if zone-local truncation is actually wanted"
-        )
-    zero = F.lit(0)
-    if unit == "hour":
-        return F.make_timestamp_ntz(
-            F.year(c), F.month(c), F.dayofmonth(c), F.hour(c), zero, zero
-        )
-    if unit == "day":
-        return F.make_timestamp_ntz(
-            F.year(c), F.month(c), F.dayofmonth(c), zero, zero, zero
-        )
-    if unit == "minute":
-        return F.make_timestamp_ntz(
-            F.year(c), F.month(c), F.dayofmonth(c), F.hour(c), F.minute(c), zero
-        )
-    raise ValueError(f"unsupported tz-free trunc unit: {unit}")
-
-
 def epoch_micros_fn(df, ts_col: str):
     """Like ``epoch_seconds_fn`` but returns LONG microseconds — the
     exact integer form, for ordering keys and range-frame arithmetic

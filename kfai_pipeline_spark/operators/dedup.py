@@ -1,4 +1,4 @@
-"""Deduplication operators (X1/X2, Q26) — exact and near-duplicate.
+"""Deduplication operators (X1/X2) — exact and near-duplicate.
 
 All hot paths are JVM-side built-ins (xxhash64, higher-order array
 functions, bit ops); nothing here crosses the Python boundary, so every
@@ -50,15 +50,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text") -> DataFrame:
         .groupBy("__fp")
         .agg(F.min("__row").alias("__row"))
         .select("__row.*")
-    )
-
-
-def exact_dup_stats(df: DataFrame, text_col: str = "text", by: str | None = None) -> DataFrame:
-    """Distinct-hash counts (Q26 shape): rows vs distinct md5(text)."""
-    grouped = df.groupBy(by) if by else df.groupBy()
-    return grouped.agg(
-        F.countDistinct(F.md5(F.col(text_col))).alias("n_distinct"),
-        F.count(F.lit(1)).alias("n_rows"),
     )
 
 

@@ -2,10 +2,13 @@
 
 from __future__ import annotations
 
+import string
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+from kfai_pipeline_spark.catalog import load_table
 
 Builder = Callable[[SparkSession, str], DataFrame]
 
@@ -17,6 +20,20 @@ Builder = Callable[[SparkSession, str], DataFrame]
 # to rebuilding it. Keyed by applicationId so a restarted session never
 # sees plans from a dead JVM.
 _PLAN_MEMO: dict[tuple[str, str, str], DataFrame] = {}
+
+
+def bind_sql(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
+    """Run Spark-SQL ``text`` with each ``{table}`` placeholder bound to
+    that fixture table under ``sf_dir``.
+
+    Only the tables the text names are loaded. PySpark's formatter
+    registers each bound frame under a private view name for the one
+    ``spark.sql`` call and drops it on return, so no session-global view
+    is left behind and the text never reads whatever another caller
+    registered as ``lineitem``.
+    """
+    names = {field for _, field, _, _ in string.Formatter().parse(text) if field}
+    return spark.sql(text, **{t: load_table(spark, sf_dir, t) for t in names})
 
 
 @dataclass(frozen=True)

@@ -5,7 +5,9 @@ Q25-Q28 + X1-X4).
 SQL-expressible ops carry a DuckDB oracle; approximate/hash-based ops
 (minhash, simhash, LSH ANN, xxhash fingerprints) are registered without
 an oracle — the driver records a rows-only check and tests/ verify their
-invariants against exact baselines instead.
+invariants against exact baselines instead. The three bench queries
+here (q25, q26, q28) are Spark-SQL text bound by ``base.bind_sql``, as
+in ``relational.py``: the text is their one Spark definition.
 """
 
 from __future__ import annotations
@@ -17,8 +19,7 @@ from kfai_pipeline_spark.operators import dedup as D
 from kfai_pipeline_spark.operators import similarity as S
 from kfai_pipeline_spark.operators import text_analysis as TA
 from kfai_pipeline_spark.operators.asof import asof_join
-from kfai_pipeline_spark.operators.sessionize import session_stats
-from kfai_pipeline_spark.queries.base import register
+from kfai_pipeline_spark.queries.base import bind_sql, register
 
 # Per-process scratch salt: queries that materialize side state (q88's
 # skip file, q103's bucketed tables) must not share paths across
@@ -81,8 +82,40 @@ def _scratch_root() -> str:
     doc="30-min-gap sessionization, gaps-and-islands batch form (§2.10, Q25).",
 )
 def q25(spark, sf_dir):
-    events = load_table(spark, sf_dir, "events")
-    return session_stats(events, "user_id", "ts", 1800.0, tiebreak_cols=["event_id"])
+    # events.ts is TIMESTAMP_NTZ, which cannot cast to double: epoch
+    # seconds are the µs diff from the naive epoch / 1e6 (sub-second
+    # precision), the twin of the oracle's epoch(ts)
+    return bind_sql(spark, sf_dir, """
+        WITH lagged AS (
+            SELECT user_id, ts, event_id,
+                   lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
+            FROM {events}
+        ),
+        flagged AS (
+            SELECT user_id, ts, event_id,
+                   CASE WHEN prev_ts IS NULL
+                             OR timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts) / 1e6
+                              - timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', prev_ts) / 1e6 > 1800
+                        THEN 1 ELSE 0 END AS is_new
+            FROM lagged
+        ),
+        sess AS (
+            SELECT user_id, ts,
+                   SUM(is_new) OVER (
+                       PARTITION BY user_id ORDER BY ts, event_id
+                       ROWS UNBOUNDED PRECEDING
+                   ) AS session_id
+            FROM flagged
+        ),
+        per_session AS (
+            SELECT user_id, session_id,
+                   MAX(timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts) / 1e6)
+                 - MIN(timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts) / 1e6) AS session_len
+            FROM sess GROUP BY user_id, session_id
+        )
+        SELECT user_id, COUNT(*) AS n_sessions, ROUND(AVG(session_len), 2) AS avg_len
+        FROM per_session GROUP BY user_id ORDER BY user_id
+    """)
 
 
 # ---------------------------------------------------------------- Q26: exact dedup
@@ -97,8 +130,12 @@ def q25(spark, sf_dir):
     doc="Exact dedup stats via md5 hash-groupBy (X1, Q26).",
 )
 def q26(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    return D.exact_dup_stats(docs, "text", by="lang").orderBy("lang")
+    return bind_sql(spark, sf_dir, """
+        SELECT lang,
+               COUNT(DISTINCT md5(text)) AS n_distinct,
+               COUNT(*) AS n_rows
+        FROM {documents} GROUP BY lang ORDER BY lang
+    """)
 
 
 # ---------------------------------------------------------------- Q27: similarity top-k
@@ -140,24 +177,30 @@ def q27(spark, sf_dir):
     doc="Tumbling hourly window, batch form (§2.10, Q28); streaming twin in streaming/windows.py.",
 )
 def q28(spark, sf_dir):
-    from kfai_pipeline_spark.functions.datetime_fns import date_trunc_tzfree
+    from pyspark.sql.types import TimestampNTZType
 
-    events = load_table(spark, sf_dir, "events")
-    # NOT F.date_trunc: that up-casts NTZ to LTZ via the session zone,
-    # shifting DST-gap wall-clocks an hour (tz_sweep round 7)
-    return (
-        events.groupBy(
-            date_trunc_tzfree("hour", "ts", events).alias("hour"),
-            F.col("event_type"),
+    # The hour is make_timestamp_ntz over calendar fields, NOT
+    # date_trunc: Spark's date_trunc up-casts NTZ through the session
+    # zone, shifting DST-gap wall-clocks an hour (tz_sweep round 7). On
+    # a zone-aware ts the calendar extractions would run in the session
+    # zone and bring that dependence back, so such an input is refused
+    # from the schema alone, before any job runs.
+    ts_type = load_table(spark, sf_dir, "events").schema["ts"].dataType
+    if not isinstance(ts_type, TimestampNTZType):
+        raise TypeError(
+            f"q28 needs events.ts as TIMESTAMP_NTZ, got {ts_type}: calendar "
+            "extraction on a zone-aware timestamp is session-zone-dependent"
         )
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.round(
-                F.sum(F.round(F.col("value") * 100).try_cast("long")) / 100.0, 2
-            ).alias("sum_value"),
-        )
-        .orderBy("hour", "event_type")
-    )
+    return bind_sql(spark, sf_dir, """
+        SELECT make_timestamp_ntz(year(ts), month(ts), day(ts), hour(ts), 0, 0)
+                 AS hour, event_type,
+               COUNT(*) AS cnt,
+               ROUND(SUM(TRY_CAST(ROUND(value * 100) AS BIGINT)) / 100.0D, 2)
+                 AS sum_value
+        FROM {events}
+        GROUP BY hour, event_type
+        ORDER BY hour, event_type
+    """)
 
 
 # ---------------------------------------------------------------- Q39: general as-of join

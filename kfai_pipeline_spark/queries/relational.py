@@ -1,9 +1,13 @@
 """Relational correctness queries Q01-Q24 (SURVEY.md §2.12).
 
-Each builder is idiomatic DataFrame API — Catalyst handles pushdown,
+Most builders are idiomatic DataFrame API — Catalyst handles pushdown,
 pruning, and join selection; explicit ``broadcast`` hints mark the dim
-tables that must stay map-side at 100 TB. Every computed column is
-aliased identically in the Spark plan and the DuckDB oracle so the
+tables that must stay map-side at 100 TB. The bench queries (q04, q05,
+q07, q10, q18, q22; ``bench.py``'s B1-B9 with three in
+``extensions.py``) and q44 are Spark-SQL text instead, bound to the
+fixture tables by ``base.bind_sql``: that text is the query's one Spark
+definition, and both benchmark harnesses time it. Every computed column
+is aliased identically in the Spark plan and the DuckDB oracle so the
 driver's sorted-column value hash lines up.
 
 Reference-semantics notes cite /root/reference/ file:line where a query
@@ -17,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from kfai_pipeline_spark.catalog import load_table
-from kfai_pipeline_spark.queries.base import register
+from kfai_pipeline_spark.queries.base import bind_sql, register
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -116,23 +120,17 @@ def q03(spark, sf_dir):
     doc="Left join + deterministic GROUP_CONCAT (J2+A1; ref database.py:150-166).",
 )
 def q04(spark, sf_dir):
-    nation = _t(spark, sf_dir, "nation")
-    supplier = _t(spark, sf_dir, "supplier")
-    return (
-        nation.join(
-            F.broadcast(supplier), supplier.s_nationkey == nation.n_nationkey, "left"
-        )
-        .groupBy("n_name")
-        .agg(
-            # string_agg over zero rows is NULL; concat_ws over an empty
-            # collect_list would be '' — emit NULL to match SQL semantics.
-            F.when(
-                F.count("s_name") > 0,
-                F.concat_ws(",", F.sort_array(F.collect_list("s_name"))),
-            ).alias("suppliers")
-        )
-        .orderBy("n_name")
-    )
+    # string_agg over zero rows is NULL; concat_ws over an empty
+    # collect_list would be '' — emit NULL to match SQL semantics.
+    return bind_sql(spark, sf_dir, """
+        SELECT n_name,
+               CASE WHEN COUNT(s_name) > 0
+                    THEN concat_ws(',', sort_array(collect_list(s_name)))
+               END AS suppliers
+        FROM {nation} LEFT JOIN {supplier} ON s_nationkey = n_nationkey
+        GROUP BY n_name
+        ORDER BY n_name
+    """)
 
 
 # ---------------------------------------------------------------- Q05: anti join
@@ -146,27 +144,25 @@ def q04(spark, sf_dir):
     doc="Left anti join = incremental diff (J4; ref fetch_raw_data.py:53-67).",
 )
 def q05(spark, sf_dir):
-    customer = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
     # r15 (guide §2.3 "aggregate before you shuffle"): an anti join only
-    # consumes the DISTINCT right-side keys, but the raw shape shuffles
-    # (and, over the SHJ size conditions, SORTS) every orders row —
-    # ~15 keys/customer of pure duplication. Pre-aggregating to distinct
-    # o_custkey gets map-side partial dedup before the exchange and
-    # shrinks the join's build/sort input 15x; at 100 TB the anti join's
-    # shuffle carries ~#customers keys instead of ~#orders rows.
-    # Interleaved same-session A/B on the SQL twin (r15, parity exact):
-    # sf10 1.31->1.25 s median (5/7 rounds faster), sf1 1.96->1.60,
-    # sf0.1 ~even-to-better (1.19->1.08) — never slower at any SF.
-    # Anti-join semantics are key-set semantics, so DISTINCT on the
-    # right side can never change the result (NULL keys included:
-    # equality never matches them in either shape).
-    order_keys = orders.select("o_custkey").distinct()
-    return (
-        customer.join(order_keys, customer.c_custkey == order_keys.o_custkey, "left_anti")
-        .select("c_custkey")
-        .orderBy("c_custkey")
-    )
+    # consumes the DISTINCT right-side keys, but the raw NOT EXISTS shape
+    # shuffles (and, over the SHJ size conditions, SORTS) every orders
+    # row — ~15 keys/customer of pure duplication. Pre-aggregating to
+    # distinct o_custkey gets map-side partial dedup before the exchange
+    # and shrinks the join's build/sort input 15x; at 100 TB the anti
+    # join's shuffle carries ~#customers keys instead of ~#orders rows.
+    # Interleaved same-session A/B (r15, parity exact): sf10 1.31->1.25 s
+    # median (5/7 rounds faster), sf1 1.96->1.60, sf0.1 ~even-to-better
+    # (1.19->1.08) — never slower at any SF. Anti-join semantics are
+    # key-set semantics, so DISTINCT on the right side can never change
+    # the result (NULL keys included: equality never matches them in
+    # either shape).
+    return bind_sql(spark, sf_dir, """
+        SELECT c_custkey FROM {customer}
+        LEFT ANTI JOIN (SELECT DISTINCT o_custkey FROM {orders}) ok
+          ON c_custkey = o_custkey
+        ORDER BY c_custkey
+    """)
 
 
 # ---------------------------------------------------------------- Q06: semi join
@@ -245,31 +241,32 @@ def q06(spark, sf_dir):
     ),
 )
 def q07(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    qty_c = F.round(F.col("l_quantity") * 100).cast("long")
-    price_c = F.round(F.col("l_extendedprice") * 100).cast("long")
-    disc_c = F.round(F.col("l_discount") * 100).cast("long")
-    tax_c = F.round(F.col("l_tax") * 100).cast("long")
-    cnt = F.count(F.lit(1))
-    return (
-        li.where(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum(qty_c) / 100.0, 2).alias("sum_qty"),
-            F.round(F.sum(price_c) / 100.0, 2).alias("sum_base_price"),
-            F.round(F.sum(price_c * (100 - disc_c)) / 10000.0, 2).alias(
-                "sum_disc_price"
-            ),
-            F.round(
-                F.sum(price_c * (100 - disc_c) * (100 + tax_c)) / 1000000.0, 2
-            ).alias("sum_charge"),
-            F.round(F.sum(qty_c) / 100.0 / cnt, 2).alias("avg_qty"),
-            F.round(F.sum(price_c) / 100.0 / cnt, 2).alias("avg_price"),
-            F.round(F.sum(disc_c) / 100.0 / cnt, 2).alias("avg_disc"),
-            F.count(F.lit(1)).alias("count_order"),
+    return bind_sql(spark, sf_dir, """
+        WITH c AS (
+            SELECT l_returnflag, l_linestatus,
+                   CAST(ROUND(l_quantity      * 100) AS BIGINT) AS qty_c,
+                   CAST(ROUND(l_extendedprice * 100) AS BIGINT) AS price_c,
+                   CAST(ROUND(l_discount      * 100) AS BIGINT) AS disc_c,
+                   CAST(ROUND(l_tax           * 100) AS BIGINT) AS tax_c
+            FROM {lineitem}
+            WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
         )
-        .orderBy("l_returnflag", "l_linestatus")
-    )
+        SELECT
+            l_returnflag,
+            l_linestatus,
+            ROUND(SUM(qty_c)   / 100.0D, 2)                       AS sum_qty,
+            ROUND(SUM(price_c) / 100.0D, 2)                       AS sum_base_price,
+            ROUND(SUM(price_c * (100 - disc_c)) / 10000.0D, 2)    AS sum_disc_price,
+            ROUND(SUM(price_c * (100 - disc_c) * (100 + tax_c)) / 1000000.0D, 2)
+                                                                 AS sum_charge,
+            ROUND(SUM(qty_c)   / 100.0D / COUNT(*), 2)            AS avg_qty,
+            ROUND(SUM(price_c) / 100.0D / COUNT(*), 2)            AS avg_price,
+            ROUND(SUM(disc_c)  / 100.0D / COUNT(*), 2)            AS avg_disc,
+            COUNT(*)                                             AS count_order
+        FROM c
+        GROUP BY l_returnflag, l_linestatus
+        ORDER BY l_returnflag, l_linestatus
+    """)
 
 
 # ---------------------------------------------------------------- Q08: HAVING count distinct
@@ -336,14 +333,19 @@ def q09(spark, sf_dir):
     doc="Top-3 per group via row_number (W1/W5; ref query_agent.py:285-298 dedup/cap).",
 )
 def q10(spark, sf_dir):
-    w = Window.partitionBy("c_mktsegment").orderBy(F.desc("c_acctbal"), F.asc("c_custkey"))
-    return (
-        _t(spark, sf_dir, "customer")
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 3)
-        .select("c_mktsegment", "c_custkey", "c_acctbal", "rn")
-        .orderBy("c_mktsegment", "rn")
-    )
+    return bind_sql(spark, sf_dir, """
+        SELECT c_mktsegment, c_custkey, c_acctbal, rn
+        FROM (
+            SELECT c_mktsegment, c_custkey, c_acctbal,
+                   ROW_NUMBER() OVER (
+                       PARTITION BY c_mktsegment
+                       ORDER BY c_acctbal DESC, c_custkey
+                   ) AS rn
+            FROM {customer}
+        ) ranked
+        WHERE rn <= 3
+        ORDER BY c_mktsegment, rn
+    """)
 
 
 # ---------------------------------------------------------------- Q11: analytic window + frame
@@ -580,15 +582,16 @@ def q17(spark, sf_dir):
     doc="Explode + group + HAVING count distinct (A3/F8; ref loaders database.py:72-89).",
 )
 def q18(spark, sf_dir):
-    return (
-        _t(spark, sf_dir, "part")
-        .select("p_partkey", F.explode(F.split("p_name", " ")).alias("word"))
-        .groupBy("word")
-        .agg(F.countDistinct("p_partkey").alias("cnt"))
-        .where(F.col("cnt") >= 5)
-        .orderBy(F.desc("cnt"), F.asc("word"))
-        .limit(100)
-    )
+    return bind_sql(spark, sf_dir, """
+        SELECT word, COUNT(DISTINCT p_partkey) AS cnt
+        FROM (
+            SELECT p_partkey, explode(split(p_name, ' ')) AS word FROM {part}
+        ) words
+        GROUP BY word
+        HAVING COUNT(DISTINCT p_partkey) >= 5
+        ORDER BY cnt DESC, word
+        LIMIT 100
+    """)
 
 
 # ---------------------------------------------------------------- Q19: JSON extraction
@@ -701,59 +704,58 @@ def q21_dedup(spark, sf_dir):
     ORDER BY revenue DESC, n_name
     """,
     doc=(
-        "Flagship: 5-table join + agg, TPC-H Q5 shape (J1/A7/Q22). Dims broadcast; "
-        "fact-fact join shuffles on the key; AQE coalesces post-shuffle partitions. "
+        "Flagship: 5-table join + agg, TPC-H Q5 shape (J1/A7/Q22). The dim chain "
+        "reduces orders to the ASIA rows first; the fact probes that reduced side, "
+        "which is broadcast. "
         "Revenue aggregates in the exact cents-integer domain (reassociation-proof; "
         "LONG product sum exact to ~8e9 rows/group — the q07 bound /100, see "
         "BASELINE §5s addendum 4; decimal(38,0) is the beyond-bound swap)."
     ),
 )
 def q22(spark, sf_dir):
-    region = _t(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
-    nation = _t(spark, sf_dir, "nation")
-    customer = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    lineitem = _t(spark, sf_dir, "lineitem")
     # r15: reduce ORDERS through the selective dim chain FIRST, then
     # join the fact LAST against the pre-filtered result. The ASIA
     # filter keeps ~20% of orders (2.94M of 15M at the 100x fixture),
     # so the fact join's other side shrinks 5x before lineitem touches
     # it and the joined intermediate carried into the aggregate is
-    # 11.8M rows instead of 60M. Interleaved same-session A/B on the
-    # SQL twin: sf10 10.84 -> 3.52 s (broadcast attach) / 8.30 s
-    # (shuffled-hash attach), sf1 1.43 -> 0.82 s, sf0.1 ~even —
-    # parity exact at all three (r15 study, /tmp replay in
-    # OPTIMIZATION_r15.md). This differs from the round-4 dims-first
-    # experiment (BASELINE.md §5b, reverted): that shape joined the
-    # dims to each other but left orders UNREDUCED, so the fact join
-    # saved nothing and the static planner broadcast the fact at
-    # sf0.1. Here the engine posture stays adaptive: no hint on the
-    # fact join — AQE picks broadcast for the reduced side from its
-    # RUNTIME size at bench SFs and falls back to a skew-splittable
-    # shuffle join at 100 TB where the reduced side is ~2.9B rows
-    # (over every broadcast cap); nation/region broadcast hints are
-    # constant-size (25/5 rows) and scale-free.
-    asia_orders = (
-        orders.join(customer, orders.o_custkey == customer.c_custkey)
-        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .select("o_orderkey", "n_name")
-    )
-    return (
-        lineitem.join(asia_orders, lineitem.l_orderkey == asia_orders.o_orderkey)
-        .groupBy("n_name")
-        .agg(
-            F.round(
-                F.sum(
-                    F.round(F.col("l_extendedprice") * 100).cast("long")
-                    * (100 - F.round(F.col("l_discount") * 100).cast("long"))
-                )
-                / 10000.0,
-                2,
-            ).alias("revenue")
+    # 11.8M rows instead of 60M. Interleaved same-session A/B: sf10
+    # 10.84 -> 3.52 s, sf1 1.43 -> 0.82 s, sf0.1 ~even, parity exact at
+    # all three (OPTIMIZATION_r15.md); the 1.1 GB lineitem shuffle, the
+    # documented b2 session-swing source, is gone. This differs from
+    # the round-4 dims-first experiment (BASELINE.md §5b, reverted):
+    # that shape left orders UNREDUCED, so the fact join saved nothing.
+    #
+    # BROADCAST(ao) pins the reduced side as the build side. Without
+    # it the static planner trusts ao's fabricated post-join size
+    # estimate and broadcasts LINEITEM, the fact (BroadcastHashJoin
+    # BuildLeft over the lineitem scan at sf0.01, and at sf0.1 under the
+    # engine defaults; test_q22_dims_broadcast fails on that shape) —
+    # the shape round 4 measured at +80% — and at sf10 under an 8g heap the
+    # unpinned build side died with "Can't acquire ... bytes to build
+    # hash relation". Scale bound: ao is ~2.94M narrow rows (tens of
+    # MB) at sf10, far under the 8 GB / 512M-row broadcast cap; past
+    # ~sf300 it would not fit and the hint would be wrong. Forced
+    # runtime Bloom injection never fires for a creation side behind a
+    # 3-join chain (plans/r15/b2_restruct_bloom_sf10.txt) and measured
+    # no win.
+    return bind_sql(spark, sf_dir, """
+        WITH ao AS (
+            SELECT o_orderkey, n_name
+            FROM {orders}
+            JOIN {customer} ON o_custkey   = c_custkey
+            JOIN {nation}   ON c_nationkey = n_nationkey
+            JOIN {region}   ON n_regionkey = r_regionkey
+            WHERE r_name = 'ASIA'
         )
-        .orderBy(F.desc("revenue"), F.asc("n_name"))
-    )
+        SELECT /*+ BROADCAST(ao) */ n_name,
+               ROUND(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)
+                         * (100 - CAST(ROUND(l_discount * 100) AS BIGINT)))
+                     / 10000.0D, 2) AS revenue
+        FROM {lineitem}
+        JOIN ao ON l_orderkey = o_orderkey
+        GROUP BY n_name
+        ORDER BY revenue DESC, n_name
+    """)
 
 
 # ---------------------------------------------------------------- Q23: range/theta join
@@ -866,17 +868,14 @@ def q43_cross(spark, sf_dir):
     doc="Explicit GROUPING SETS (A7 completeness) — Spark SQL form.",
 )
 def q44_grouping_sets(spark, sf_dir):
-    _t(spark, sf_dir, "customer").createOrReplaceTempView("__q44_customer")
-    return spark.sql(
-        """
+    return bind_sql(spark, sf_dir, """
         SELECT c_mktsegment, c_nationkey, COUNT(*) AS cnt,
                ROUND(SUM(CAST(ROUND(c_acctbal * 100) AS BIGINT)) / 100.0D, 2)
                  AS sum_bal
-        FROM __q44_customer
+        FROM {customer}
         GROUP BY GROUPING SETS ((c_mktsegment), (c_nationkey), ())
         ORDER BY c_mktsegment NULLS FIRST, c_nationkey NULLS FIRST
-        """
-    )
+    """)
 
 
 @register(

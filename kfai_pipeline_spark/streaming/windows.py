@@ -86,7 +86,7 @@ def session_window_agg(
 ) -> DataFrame:
     """Q25 streaming twin: data-driven session windows with ``gap``
     inactivity timeout (built-in ``session_window`` — no custom state
-    needed; `operators.sessionize` is the batch gaps-and-islands form)."""
+    needed; registry query q25 is the batch gaps-and-islands form)."""
     grouped = _maybe_watermark(df, ts_col, watermark).groupBy(
         F.session_window(ts_col, gap).alias("win"), *(group_cols or [])
     )

@@ -29,17 +29,21 @@ SECTIONS = [
     (
         "q22",
         "5-table revenue join (J1, TPC-H Q5 shape)",
-        "All four dims broadcast (`BroadcastHashJoin` under `BroadcastExchange`) "
-        "via explicit hints + the stock 10 MB auto threshold, so the lineitem "
-        "fact side never shuffles before aggregation; the agg is partial before "
-        "its exchange. Round 2 note: the threshold was deliberately DROPPED from "
-        "64 MB to 10 MB after a 10x-scale experiment showed the static planner "
-        "broadcasting the fact table itself (BASELINE.md §3d) — dims are hinted, "
-        "facts must never ride the auto threshold. Round 4: a selective-chain-first "
-        "reorder was tried and REVERTED — with left-deep syntactic planning it "
-        "made lineitem the broadcast BUILD side (the fact broadcast at sf0.1, "
-        "+80% wall) and won nothing at sf10; fact-first keeps the fact the "
-        "probe side at every scale (BASELINE.md §5b).",
+        "The ASIA dim chain reduces orders first: customer, nation and region "
+        "broadcast into the orders scan (`BroadcastHashJoin` under "
+        "`BroadcastExchange`), and the lineitem fact joins LAST against that "
+        "reduced side. `BROADCAST(ao)` in the query text makes the reduced "
+        "ASIA orders the build side (`BuildRight`), so the fact is the probe "
+        "side and never shuffles before aggregation; the agg is partial before "
+        "its exchange. Without the hint the planner broadcast lineitem itself "
+        "(`BuildLeft` over the lineitem scan here and at sf0.1) — the shape "
+        "round 4 measured at +80% wall (BASELINE.md §5b) — and "
+        "`test_q22_dims_broadcast` now fails on any plan that puts lineitem's "
+        "scan under a `BroadcastExchange`. Round 2 note: the auto threshold "
+        "stays at the stock 10 MB after a 10x-scale experiment showed the "
+        "static planner broadcasting the fact table (BASELINE.md §3d). The "
+        "hint's scale bound: ao is tens of MB at sf10; past ~sf300 it would "
+        "not fit a broadcast.",
     ),
     (
         "q07",

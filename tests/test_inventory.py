@@ -77,3 +77,39 @@ def test_snapshot_rotation_consistent_with_registry():
     assert all(
         name not in snapshotted for name in rotated[n_prio:n_prio + n_new]
     )
+
+
+def test_script_imports_resolve():
+    """Every ``kfai_pipeline_spark`` name that the scripts, bench.py and
+    perfbench import still exists, so deleting program code cannot leave
+    a script that fails only when someone next runs it. Imports the
+    modules (no Spark session); every ``from ... import`` node is
+    checked, also the ones inside functions."""
+    import ast
+    import importlib
+
+    files = [REPO / "bench.py", *sorted((REPO / "scripts").glob("*.py")),
+             *sorted((REPO / "perfbench").glob("*.py"))]
+    broken = []
+    for path in files:
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            if not (
+                isinstance(node, ast.ImportFrom)
+                and node.level == 0
+                and node.module.split(".")[0] == "kfai_pipeline_spark"
+            ):
+                continue
+            try:
+                module = importlib.import_module(node.module)
+            except ImportError as exc:
+                broken.append(f"{path.name}:{node.lineno} {exc}")
+                continue
+            for alias in node.names:
+                if alias.name == "*" or hasattr(module, alias.name):
+                    continue
+                try:  # a submodule its package has not imported yet
+                    importlib.import_module(f"{node.module}.{alias.name}")
+                except ImportError:
+                    broken.append(f"{path.name}:{node.lineno} {node.module}.{alias.name}")
+    assert len(files) > 10, files
+    assert not broken, broken

@@ -50,10 +50,41 @@ def test_q01_filter_and_columns_reach_the_scan(spark):
     assert "l_comment" not in p.split("ReadSchema")[1].splitlines()[0]
 
 
+def _ancestors(plan_text: str, line_no: int) -> list[str]:
+    """The operator lines above line ``line_no`` of a simple-mode plan
+    tree, nearest first: each is the closest earlier line indented less
+    than the last one found."""
+    lines = plan_text.splitlines()
+
+    def indent(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-"))
+
+    out, depth = [], indent(lines[line_no])
+    for line in reversed(lines[:line_no]):
+        if line.startswith("=="):
+            break
+        if line.strip() and indent(line) < depth:
+            out.append(line)
+            depth = indent(line)
+    return out
+
+
 def test_q22_dims_broadcast(spark):
     p = plan(spark, "q22")
     assert p.count("BroadcastHashJoin") >= 2, "nation/region must broadcast"
     assert "CartesianProduct" not in p
+    # the fact is always the probe side: broadcasting lineitem is the
+    # round-4 +80% shape, and past a few GB it cannot be built at all
+    simple = plan(spark, "q22", mode="simple")
+    scans = [
+        i for i, line in enumerate(simple.splitlines())
+        if "FileScan" in line and "lineitem.parquet" in line
+    ]
+    assert scans, simple
+    for i in scans:
+        assert not any(
+            "BroadcastExchange" in a for a in _ancestors(simple, i)
+        ), f"lineitem is broadcast:\n{simple}"
 
 
 def test_q05_is_anti_join_not_not_in(spark):
@@ -280,6 +311,34 @@ def test_q07_cents_long_overflow_raises_under_ansi(spark, tmp_path):
     assert spark.conf.get("spark.sql.ansi.enabled") == "true"
     with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
         REGISTRY["q07"].build(spark, str(tmp_path)).collect()
+
+
+def test_q28_refuses_zone_aware_ts(spark, tmp_path):
+    # q28 extracts calendar fields from ts; on a zone-aware TIMESTAMP
+    # they would run in the session zone, so the build refuses one from
+    # the schema alone. Like the q07 overflow test, the query reads a
+    # private sf dir holding only the table it names.
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    pq.write_table(
+        pa.table(
+            {
+                "ts": pa.array(
+                    [datetime.datetime(2024, 3, 10, 2, 30)],
+                    pa.timestamp("us", tz="UTC"),
+                ),
+                "event_type": ["view"],
+                "value": [1.0],
+            }
+        ),
+        str(tmp_path / "events.parquet"),
+    )
+    with pytest.raises(TypeError, match="TIMESTAMP_NTZ"):
+        REGISTRY["q28"].build(spark, str(tmp_path))
 
 
 def test_partitioned_json_read_prunes_partitions(spark, tmp_path):
